@@ -254,12 +254,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Memoized "is this scan narrower than the session" decision, by
-# DataFrame object id (catalog.table returns cached objects, so the
-# rdd-partition probe runs once per table per session).
-_FANOUT_NEEDED: dict[int, bool] = {}
-
-
 def fanout(df: DataFrame, *keys: str, parts: int | None = None) -> DataFrame:
     """Re-split a narrow scan so CPU-heavy per-row work parallelizes.
 
@@ -280,11 +274,17 @@ def fanout(df: DataFrame, *keys: str, parts: int | None = None) -> DataFrame:
     # last 2x of parallelism (measured 10.5 -> 7.7 s across the bench
     # set at local[32]); a cluster-scale input never takes this path.
     want = parts or max(2, spark.sparkContext.defaultParallelism // 2)
-    needed = _FANOUT_NEEDED.get(id(df))
-    if needed is None:
-        needed = df.rdd.getNumPartitions() < want
-        _FANOUT_NEEDED[id(df)] = needed
-    if not needed:
+    # The scan's partition count is memoized ON the frame (catalog.table
+    # returns cached objects, so the rdd probe runs once per table per
+    # session): it lives and dies with the frame, so no other frame can
+    # ever read it.
+    # (read through __dict__: DataFrame.__getattr__ resolves unknown
+    # names as columns, a JVM round trip)
+    n = df.__dict__.get("_rw_scan_partitions")
+    if n is None:
+        n = df.rdd.getNumPartitions()
+        df._rw_scan_partitions = n
+    if n >= want:
         return df
     return df.repartition(want, *keys) if keys else df.repartition(want)
 

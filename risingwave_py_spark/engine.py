@@ -40,6 +40,7 @@ import shutil
 import threading
 import time
 import uuid as _uuid
+import weakref
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +76,24 @@ def _split_fq(name: str, default_schema: str = "public") -> tuple[str, str]:
         db, tbl = name.split(".", 1)
         return db, tbl
     return default_schema, name
+
+
+class _Records(dict):
+    """fq -> relation record (see SparkEngine._relation), plus a count
+    of clears: a resolve that raced a clear must not store what it
+    read before the DDL landed."""
+
+    def __init__(self):
+        super().__init__()
+        self.lock = threading.Lock()
+        self.clears = 0
+
+
+# One record store per SparkContext: every engine on the context — and
+# on its newSession()s, which share the catalog — reads and clears the
+# SAME records, so one engine's DDL or table swap can never leave
+# another serving a stale location or schema.
+_RELATION_RECORDS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 class MVState:
@@ -118,6 +137,12 @@ class MVState:
         # small insert-only deltas over small stored results; larger
         # work falls through to self.inc / snapshot-diff.
         self.inc_direct: dict | None = None
+        # Whether the catalog accepts the direct path's ``ALTER TABLE
+        # SET LOCATION`` swap: None until the first direct refresh of
+        # this arm probes it (a no-op SET LOCATION, before any
+        # mutation), then the recorded answer. Reset whenever the
+        # direct plan (re-)arms.
+        self.set_location_ok: bool | None = None
         # avg() companions for the direct plan: {group key tuple:
         # {alias: (sum_double, count)}} — the decomposition the Python
         # fold merges (avg = sum/count; the stored table holds only
@@ -192,8 +217,10 @@ class SparkEngine:
         self.indexes: dict[str, dict] = {}  # fq index -> {table, cols}
         self.cursors: dict[str, dict] = {}  # name -> {sub, rel, pos}
         self.udf_defs: dict[str, list] = {}  # name -> [rettype, body]
-        # fq table -> (fs location, partition cols)
-        self._locations: dict[str, tuple[str, list[str]]] = {}
+        # fq relation -> {"loc", "parts", "schema"}: see _relation
+        self._records: _Records = _RELATION_RECORDS.setdefault(
+            spark.sparkContext, _Records()
+        )
         # Per-changelog epoch manifest: the set of REGISTERED epoch
         # partitions, maintained at every engine commit and validated
         # per use by ONE os.stat of the on-disk commit marker — the
@@ -273,6 +300,8 @@ class SparkEngine:
 
     def drop_schema(self, name: str) -> None:
         self.spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
+        self._forget(*[fq for fq in list(self._records)
+                       if fq.startswith(f"{name}.")])
 
     def refresh_info_schema(self) -> None:
         """Materialize information_schema.{tables,columns} from the Spark
@@ -313,6 +342,7 @@ class SparkEngine:
         survives (prior process) must be cleared before re-creating."""
         if self.spark.catalog.tableExists(fq):
             return
+        self._forget(fq)  # a record outliving its table is stale
         db, tbl = _split_fq(fq)
         wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
         wh = re.sub(r"^file:", "", wh)
@@ -413,8 +443,6 @@ class SparkEngine:
         fq = self.qualify(name, schema_name)
         self.watermarks.pop(fq, None)
         self.table_props.pop(fq, None)
-        self._locations.pop(fq, None)
-        self._locations.pop(self.changelog_name(fq), None)
         if fq in self.upsert_meta:
             self.spark.sql(f"DROP VIEW IF EXISTS {fq}")
             self.spark.sql(f"DROP TABLE IF EXISTS {self.log_name(fq)}")
@@ -422,10 +450,11 @@ class SparkEngine:
         else:
             self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
         self.spark.sql(f"DROP TABLE IF EXISTS {self.changelog_name(fq)}")
+        self._forget(fq, self.changelog_name(fq))
 
     def _ensure_changelog(self, fq: str) -> None:
         cl = self.changelog_name(fq)
-        if not self.spark.catalog.tableExists(cl):
+        if self._relation(cl) is None and not self.spark.catalog.tableExists(cl):
             self._clear_stale_location(cl)
             base = self.spark.table(fq)
             empty = base.withColumn("op", F.lit("x")).withColumn(
@@ -470,21 +499,35 @@ class SparkEngine:
             return pa.decimal128(int(m.group(1)), int(m.group(2)))
         return None
 
-    def _table_meta(self, fq: str) -> tuple[str | None, list[str]]:
-        """(filesystem location, partition columns) of a catalog table,
-        cached — DESC FORMATTED is a driver-side catalog lookup but
-        still ~10 ms, and the direct ingest/cursor paths consult this
-        per call. Invalidated on DROP/RENAME/rewrite."""
-        meta = self._locations.get(fq)
-        if meta is not None:
-            # one syscall guards against any missed invalidation: a
-            # cached location whose dir is gone (table dir moved by a
-            # rewrite) must re-resolve, never be served stale — the
-            # direct ingest path would otherwise write into an
-            # orphaned directory no reader lists.
-            if os.path.isdir(meta[0]):
-                return meta
-            self._locations.pop(fq, None)
+    def _relation(self, fq: str) -> dict | None:
+        """The engine's record of a catalog table: ``{"loc": filesystem
+        location, "parts": partition columns, "schema": StructType or
+        None until first asked}``, or None for a missing table, a view
+        or a location that is not a local directory. The direct ingest,
+        refresh and cursor paths consult it on every call instead of
+        asking the catalog (DESC FORMATTED, ``spark.table(..).schema``
+        and tableExists each cost a JVM round trip or more).
+
+        Who writes a record: a miss resolves it here with one DESC
+        FORMATTED (the schema on first use, in _relation_schema), and
+        _refresh_direct writes the MV's new generation dir after its
+        own SET LOCATION swap. Who clears it (_forget): every DDL that
+        moves a table's directory or changes its columns — DROP,
+        RENAME, ADD/DROP COLUMN, the stage-and-rename rewrites, vacuum
+        — and every publication of an MV that does not go through the
+        direct path (_refresh_mv_locked). Records are shared by all
+        engines on one SparkContext, so a clear by one is seen by all.
+        One os.path.isdir per use still guards against a missed
+        invalidation: a record whose dir is gone re-resolves, so the
+        direct ingest path never writes into an orphaned directory."""
+        rec = self._records.get(fq)
+        if rec is not None:
+            if os.path.isdir(rec["loc"]):
+                return rec
+            self._records.pop(fq, None)
+        clears = self._records.clears
+        if not self.spark.catalog.tableExists(fq):
+            return None
         loc, parts, mode = None, [], None
         for r in self.spark.sql(f"DESC FORMATTED {fq}").collect():
             cn = (r.col_name or "").strip()
@@ -501,9 +544,34 @@ class SparkEngine:
             elif mode == "detail" and cn == "Location":
                 loc = re.sub(r"^file:", "", r.data_type)
         if loc is None or not os.path.isdir(loc):
-            return None, parts  # don't cache a miss
-        self._locations[fq] = (loc, parts)
-        return loc, parts
+            return None  # don't record a miss
+        rec = {"loc": loc, "parts": parts, "schema": None}
+        with self._records.lock:
+            if self._records.clears == clears:
+                self._records[fq] = rec
+        return rec
+
+    def _relation_schema(self, fq: str) -> "T.StructType":
+        """Schema of ``fq``, from its record when there is one."""
+        rec = self._relation(fq)
+        if rec is None:
+            return self.spark.table(fq).schema
+        if rec["schema"] is None:
+            rec["schema"] = self.spark.table(fq).schema
+        return rec["schema"]
+
+    def _forget(self, *fqs: str) -> None:
+        """Clear the records of relations whose directory or columns
+        just changed (see _relation)."""
+        with self._records.lock:
+            self._records.clears += 1
+            for fq in fqs:
+                self._records.pop(fq, None)
+
+    def _table_meta(self, fq: str) -> tuple[str | None, list[str]]:
+        """(filesystem location, partition columns) from the record."""
+        rec = self._relation(fq)
+        return (rec["loc"], rec["parts"]) if rec is not None else (None, [])
 
     def _table_location(self, fq: str) -> str | None:
         return self._table_meta(fq)[0]
@@ -669,7 +737,7 @@ class SparkEngine:
         import pyarrow.parquet as pq
 
         fq = self.qualify(name, schema_name)
-        if fq in self.upsert_meta or not self.spark.catalog.tableExists(fq):
+        if fq in self.upsert_meta:
             return None
         # Bucketed tables store bucket ids IN the filename; a raw
         # rwfast-*.parquet in a CLUSTERED BY dir breaks the bucketed
@@ -677,7 +745,7 @@ class SparkEngine:
         # bucket-aware Spark insertInto path.
         if self.table_props.get(fq, {}).get("bucket_by"):
             return None
-        loc = self._table_location(fq)
+        loc = self._table_location(fq)  # None: missing table or view
         if loc is None:
             return None
         arrow_fields = []
@@ -704,7 +772,8 @@ class SparkEngine:
         # after ALTER ADD COLUMN); rw_timestamp is the partition dir
         n = len(rows)
         cl_cols: dict[str, "pa.Array"] = {}
-        for c in self.spark.table(cl).columns:
+        for fld in self._relation_schema(cl).fields:
+            c = fld.name
             if c == "rw_timestamp":
                 continue
             if c == "op":
@@ -712,7 +781,7 @@ class SparkEngine:
             elif c in cols:
                 cl_cols[c] = cols[c]
             else:
-                ct = self._arrow_type(self.spark.table(cl).schema[c].dataType)
+                ct = self._arrow_type(fld.dataType)
                 if ct is None:
                     return None
                 cl_cols[c] = pa.nulls(n, type=ct)
@@ -740,8 +809,10 @@ class SparkEngine:
             self._touch_epoch_marker(cl, epoch)
             commit_file(pa.table(cols), loc,
                         f"rwfast-{epoch}-{uuid.uuid4().hex}.parquet")
+            # ADD PARTITION already dropped cl's cached listing; the
+            # base file landed in an already-listed dir, so fq's must
+            # be dropped by hand or readers miss the row
             self.spark.catalog.refreshTable(fq)
-            self.spark.catalog.refreshTable(cl)
         return epoch
 
     def insert_df(self, name: str, df: DataFrame, schema_name: str | None = None) -> int:
@@ -1298,7 +1369,7 @@ class SparkEngine:
         w.saveAsTable(stage)
         self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
         self.spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-        self._locations.pop(fq, None)  # layout may have changed
+        self._forget(fq, self.changelog_name(fq))  # layout may have changed
         if partition_by:
             # RENAME on a partitioned managed table drops partition
             # metadata — recover or the table reads as empty
@@ -1324,6 +1395,7 @@ class SparkEngine:
         if self.spark.catalog.tableExists(cl):
             with self._lock:
                 self.spark.sql(f"ALTER TABLE {cl} ADD COLUMNS (`{col}` {spark_t})")
+        self._forget(fq, cl)  # recorded schemas lack the column
         self.refresh_info_schema()
 
     def drop_column(self, name: str, col: str,
@@ -1360,12 +1432,6 @@ class SparkEngine:
         if _split_fq(fq)[0] != _split_fq(new_fq)[0]:
             raise RuntimeError("RENAME cannot move a table across schemas")
         self._clear_stale_location(new_fq)  # debris from a dead process
-        # a managed-table rename MOVES the data directory: drop every
-        # cached location for both names or the direct-ingest path
-        # would land files in the moved-away dir
-        for stale in (fq, new_fq, self.changelog_name(fq),
-                      self.changelog_name(new_fq)):
-            self._locations.pop(stale, None)
         self.spark.sql(f"ALTER TABLE {fq} RENAME TO {new_fq}")
         cl, new_cl = self.changelog_name(fq), self.changelog_name(new_fq)
         if self.spark.catalog.tableExists(cl):
@@ -1381,6 +1447,10 @@ class SparkEngine:
                     pass
                 if cl in self.vacuum_floor:
                     self.vacuum_floor[new_cl] = self.vacuum_floor.pop(cl)
+        # a managed-table rename MOVES the data directory: drop the
+        # records of both names or the direct-ingest path would land
+        # files in the moved-away dir
+        self._forget(fq, new_fq, cl, new_cl)
         for sub in self.subscriptions.values():
             if sub["rel"] == fq:
                 sub["rel"] = new_fq
@@ -1421,6 +1491,7 @@ class SparkEngine:
                     pass
                 if cl in self.vacuum_floor:
                     self.vacuum_floor[new_cl] = self.vacuum_floor.pop(cl)
+            self._forget(fq, new_fq, cl, new_cl)
             state = self.mvs.pop(fq)
             state.fq = new_fq
             self.mvs[new_fq] = state
@@ -3212,7 +3283,18 @@ class SparkEngine:
         the MV would otherwise take: UpdateDelete/UpdateInsert pairs
         when the group keys are known, Delete+Insert bag-diff ops
         otherwise (global aggregates) — so a fallback mid-stream never
-        changes what subscribers observe."""
+        changes what subscribers observe.
+
+        Catalog cost of a warm refresh: one ADD PARTITION and one SET
+        LOCATION, nothing else. Locations and schemas of the base
+        changelog, the MV and its changelog come from the engine's
+        relation records (_relation): this path writes the MV's record
+        itself after its SET LOCATION swap, and every other publication
+        of the MV clears it (_refresh_mv_locked), as DDL does for the
+        tables it touches. Both ALTERs drop the cached file listings
+        of the relations they change, so no refreshTable follows them.
+        The SET LOCATION capability probe runs once per arm
+        (MVState.set_location_ok)."""
         import uuid
 
         import pyarrow as pa
@@ -3262,12 +3344,11 @@ class SparkEngine:
                 files.extend(fs)
             if total > self.DIRECT_MAX_DELTA_ROWS:
                 return False
-            # NEVER trust the location cache for the MV itself: the
-            # Spark refresh paths swap fq via DROP+RENAME (canonical
-            # location) and this path via SET LOCATION (generation
-            # dirs) — interleaving them with a stale cache would read
-            # an empty deleted dir and silently rebuild from nothing.
-            self._locations.pop(fq, None)
+            # The MV's record is current: this path writes it after
+            # its own SET LOCATION swap below, and every other
+            # publication of fq (the Spark paths' DROP+RENAME to the
+            # canonical location) clears it in _refresh_mv_locked, so
+            # a generation dir read here is never a superseded one.
             loc_mv, parts_mv = self._table_meta(fq)
             if loc_mv is None or parts_mv:
                 return False
@@ -3337,7 +3418,7 @@ class SparkEngine:
                 self.next_epoch()
                 state.last_epoch = m1
                 return True
-            mv_schema = spark.table(fq).schema
+            mv_schema = self._relation_schema(fq)
             cols = [f.name for f in mv_schema.fields]
             pa_types: dict[str, "pa.DataType"] = {}
             for fld in mv_schema.fields:
@@ -3369,8 +3450,8 @@ class SparkEngine:
             # Build EVERY arrow table before any mutation: a cast
             # overflow here must leave the MV untouched for the Spark
             # path to redo the work.
-            cl_phys = [c for c in spark.table(cl).columns
-                       if c != "rw_timestamp"]
+            cl_phys = [f.name for f in self._relation_schema(cl).fields
+                       if f.name != "rw_timestamp"]
             try:
                 mv_tab = pa.table(
                     {c: pa.array(new_rows[c], type=pa_types[c]) for c in cols}
@@ -3393,14 +3474,20 @@ class SparkEngine:
                 })
             except Exception:  # noqa: BLE001 — overflow/coercion: Spark path
                 return False
-            # Capability probe BEFORE any mutation: a no-op SET
-            # LOCATION to the current path. A catalog that refuses the
-            # op (exotic deployments) falls back cleanly here; probing
-            # now means the real swap after the changelog commit below
-            # is near-certain to succeed.
-            try:
-                spark.sql(f"ALTER TABLE {fq} SET LOCATION '{loc_mv}'")
-            except Exception:  # noqa: BLE001 — catalog refused: Spark path
+            # Capability probe BEFORE any mutation, once per arm: a
+            # no-op SET LOCATION to the current path. A catalog that
+            # refuses the op (exotic deployments) falls back cleanly
+            # here, and every later refresh of this arm falls back
+            # without asking again; a catalog that accepted it makes
+            # the real swap after the changelog commit below
+            # near-certain to succeed.
+            if state.set_location_ok is None:
+                try:
+                    spark.sql(f"ALTER TABLE {fq} SET LOCATION '{loc_mv}'")
+                    state.set_location_ok = True
+                except Exception:  # noqa: BLE001 — catalog refused
+                    state.set_location_ok = False
+            if not state.set_location_ok:
                 return False
             epoch = self.next_epoch()
             # Same commit order as the Spark refresh paths: changelog
@@ -3430,9 +3517,12 @@ class SparkEngine:
                 mv_tab, os.path.join(new_loc, f"rwfast-{epoch}.parquet")
             )
             spark.sql(f"ALTER TABLE {fq} SET LOCATION '{new_loc}'")
-            self._locations.pop(fq, None)
-            spark.catalog.refreshTable(fq)
-            spark.catalog.refreshTable(cl)
+            # Both ALTERs above already dropped the cached listings of
+            # fq and cl. Record the new generation dir (same schema,
+            # unpartitioned) instead of re-resolving it.
+            self._records[fq] = {
+                "loc": new_loc, "parts": [], "schema": mv_schema,
+            }
             shutil.rmtree(loc_mv, ignore_errors=True)  # superseded gen
             state.last_epoch = m1
             if aux_new is not None:
@@ -5805,6 +5895,7 @@ class SparkEngine:
         self.mvs.pop(fq, None)
         self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
         self.spark.sql(f"DROP TABLE IF EXISTS {self.changelog_name(fq)}")
+        self._forget(fq, self.changelog_name(fq))
 
     # -- watermarks + EMIT ON WINDOW CLOSE (RW append-only MVs) ------------
 
@@ -7403,6 +7494,7 @@ class SparkEngine:
             def finalize_inc():
                 state.inc = inc
                 state.inc_direct = direct
+                state.set_location_ok = None  # new arm: probe again
                 state.direct_aux = aux
                 state.last_epoch = m0
                 if direct is not None:
@@ -7666,10 +7758,7 @@ class SparkEngine:
             state.post_restore_refreshed = True
 
     def _refresh_mv_locked(self, state: MVState) -> None:
-        if state.emit_on_close:
-            self._refresh_emit_on_close(state)
-            return
-        if state.inc_direct is not None:
+        if not state.emit_on_close and state.inc_direct is not None:
             try:
                 if self._refresh_direct(state):
                     return
@@ -7680,6 +7769,18 @@ class SparkEngine:
                 )
                 state.inc_direct = None
                 self.direct_stats["fallback"] += 1
+        try:
+            self._refresh_mv_spark(state)
+        finally:
+            # Every non-direct publication swaps or rewrites the MV's
+            # files (DROP+RENAME to the canonical location, appends),
+            # so its record is stale: the direct path re-resolves it.
+            self._forget(state.fq)
+
+    def _refresh_mv_spark(self, state: MVState) -> None:
+        if state.emit_on_close:
+            self._refresh_emit_on_close(state)
+            return
         if state.inc is not None:
             try:
                 if self._refresh_incremental(state):
@@ -7981,7 +8082,7 @@ class SparkEngine:
             chosen.append(e)
             if cum >= n:
                 break
-        phys = self.spark.table(cl).columns  # rw_timestamp last
+        phys = [f.name for f in self._relation_schema(cl).fields]
         data_cols = [c for c in phys if c != "rw_timestamp"]
         out: list[tuple] = []
         for e in chosen:
@@ -8163,7 +8264,7 @@ class SparkEngine:
         # from) the moved-away location — and the epoch manifest must
         # re-list (truncated epochs leave it; the new dir has no
         # marker, so the (loc, sig) check re-hydrates on first use)
-        self._locations.pop(cl, None)
+        self._forget(cl)
         self._epoch_cache.pop(cl, None)
         # RENAME on a PARTITIONED managed table moves the data dir but
         # drops the partition metadata — recover it from the directory

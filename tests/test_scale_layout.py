@@ -12,7 +12,9 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from risingwave_py_spark.catalog import table, write_bucketed, write_partitioned
+from risingwave_py_spark.catalog import (
+    fanout, table, write_bucketed, write_partitioned,
+)
 
 
 def _fmt_plan(df) -> str:
@@ -249,3 +251,27 @@ def test_split_cache_rebuilds_on_source_change(spark, tmp_path, monkeypatch):
     assert C.table(spark, str(src), "t1").count() == 12
     assert (cache_dir / "_src_fp").stat().st_mtime_ns == mtime
     assert (cache_dir / "_src_fp").read_text() == fp_before
+
+
+def test_fanout_decision_never_leaks_to_a_frame_reusing_an_id(spark):
+    """fanout memoizes each scan's width on the frame itself, so a new
+    frame that lands on a dead frame's id() (CPython reuses the slot)
+    gets its own decision, not the dead frame's."""
+    from pyspark.sql import DataFrame
+
+    want = max(2, spark.sparkContext.defaultParallelism // 2)
+    for _ in range(20):
+        narrow = spark.range(0, 10, 1, 1)
+        assert fanout(narrow).rdd.getNumPartitions() == want  # widened
+        wide_jdf = spark.range(0, 10, 1, want + 1)._jdf
+        dead_id = id(narrow)
+        del narrow
+        # wrapping a ready JVM frame allocates the Python object first:
+        # it almost always takes the slot just freed
+        wide = DataFrame(wide_jdf, spark)
+        if id(wide) == dead_id:
+            break
+    else:
+        pytest.fail("no DataFrame reused a dead frame's id in 20 tries")
+    assert fanout(wide) is wide, "a wide scan took the narrow frame's fan-out"
+
