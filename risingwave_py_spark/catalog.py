@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,10 +38,11 @@ TPCH_TABLES = (
 ALWAYS_BROADCAST = {"region", "nation"}
 
 
-# Sessions already configured by ensure_engine_conf (keyed by the JVM
-# session object id — a new getOrCreate reusing the JVM session keeps
-# its runtime conf, so the flag stays valid).
-_CONFIGURED: set[int] = set()
+# Sessions already configured by ensure_engine_conf. Held weakly on
+# the session object, not its id(): a new session that lands on a dead
+# one's id must not inherit its entry (a getOrCreate that returns the
+# same session keeps its runtime conf, so the entry stays valid).
+_CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def ensure_engine_conf(spark: SparkSession) -> None:
@@ -49,7 +51,7 @@ def ensure_engine_conf(spark: SparkSession) -> None:
     UTC session timezone (oracle comparisons are naive-UTC) and Arrow
     for pandas interchange. Applied once per session — each conf.set is
     a py4j round-trip, and this is on the per-query hot path."""
-    if id(spark) in _CONFIGURED:
+    if spark in _CONFIGURED:
         return
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -60,7 +62,7 @@ def ensure_engine_conf(spark: SparkSession) -> None:
     # events.ts is parquet TIMESTAMP(NANOS); set before ANY read so the
     # cached events DataFrame below is valid for the whole session.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _CONFIGURED.add(id(spark))
+    _CONFIGURED.add(spark)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -73,28 +75,35 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-# session id -> sf_dir whose views are currently registered
-_VIEWS_READY: dict[int, str] = {}
+# session -> sf_dir whose views are currently registered (weak, as
+# _CONFIGURED)
+_VIEWS_READY: "weakref.WeakKeyDictionary[SparkSession, str]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def ensure_views(spark: SparkSession, sf_dir: str) -> None:
     """Idempotent `load_tables`: registers the testdata temp views once
     per (session, sf_dir); re-registers only when the sf_dir changes.
     The per-query cost after the first call is one dict lookup."""
-    if _VIEWS_READY.get(id(spark)) == sf_dir:
+    if _VIEWS_READY.get(spark) == sf_dir:
         return
     load_tables(spark, sf_dir)
-    _VIEWS_READY[id(spark)] = sf_dir
+    _VIEWS_READY[spark] = sf_dir
 
 
-# (session id, sf_dir, name) -> DataFrame. The testdata parquet is
+# session -> {(sf_dir, name): DataFrame}, weak as _CONFIGURED (a cached
+# frame references its session, which keeps the entry alive while
+# the frames are cached). The testdata parquet is
 # immutable, so the resolved relation — file listing, footer schema —
 # is reusable for the life of the session. Without this every query
 # invocation re-lists the directory and re-reads footers, a fixed
 # ~50-100 ms driver-side tax per table reference that dominates
 # sub-second queries (mutable engine tables do NOT come through here;
 # they use spark.table + refreshTable).
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
 
 # Ingest-time layout optimization. The driver's testdata writes each
 # table as ONE parquet row group; a row group is Spark's minimum split,
@@ -236,8 +245,8 @@ def clear_stale_location(spark: SparkSession, fq: str) -> None:
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_engine_conf(spark)
-    key = (id(spark), sf_dir, name)
-    df = _TABLE_CACHE.get(key)
+    frames = _TABLE_CACHE.setdefault(spark, {})
+    df = frames.get((sf_dir, name))
     if df is not None:
         return df
     if name == "events":
@@ -250,7 +259,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     df = _split_layout(spark, df, sf_dir, name)
-    _TABLE_CACHE[key] = df
+    frames[(sf_dir, name)] = df
     return df
 
 

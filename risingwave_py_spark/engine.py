@@ -33,6 +33,7 @@ streaming/structured.py provides for aggregation MVs.
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import os
 import re
@@ -41,7 +42,9 @@ import threading
 import time
 import uuid as _uuid
 import weakref
+from typing import Callable, NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,6 +97,13 @@ class _Records(dict):
 # SAME records, so one engine's DDL or table swap can never leave
 # another serving a stale location or schema.
 _RELATION_RECORDS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+# SparkSession -> [open _in_default_schema blocks, database to restore].
+# The current database is session-wide: overlapping blocks (concurrent
+# refreshes, engines sharing a session) each switch it on entry, and
+# only the last one out restores the caller's.
+_SCHEMA_SCOPES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_SCHEMA_SCOPES_LOCK = threading.Lock()
 
 
 class MVState:
@@ -158,7 +168,9 @@ class MVState:
         # a pre-anchor catalog (time travel refuses those loudly).
         self.created_epoch: int | None = None
         # Highest base-changelog epoch already folded into the stored
-        # result (only meaningful while self.inc is set).
+        # result: every armed plan above reads its delta from the
+        # epochs after it. Set by SparkEngine._arm; meaningless while
+        # no plan is armed.
         self.last_epoch: int = 0
         # The MV's OWN changelog max at catalog-restore time — the
         # only epoch a crashed predecessor could have committed to the
@@ -186,6 +198,62 @@ class MVState:
         # and double-merge the same delta (the snapshot-diff path is
         # self-correcting under that race; the incremental path is not).
         self.refresh_lock = threading.Lock()
+
+
+class _Shape(NamedTuple):
+    """One incrementally maintained MV shape (see SparkEngine._arm)."""
+
+    attr: str  # MVState attribute holding the armed plan
+    parse: str  # SparkEngine parser: rewritten SQL -> plan or None
+    refresh: str  # SparkEngine refresh: False = fall back to snapshot-diff
+    bases: Callable[[dict], list[str]]  # the plan's base tables
+    # SQL of the result over the pinned snapshots; views: base -> view
+    initial: Callable[["SparkEngine", dict, dict[str, str]], str]
+    # group-wise merge: the MV's key columns must equal the plan's
+    # keys and every SUM must have an exact type
+    grouped: bool = False
+
+
+def _sides(plan: dict) -> list[str]:
+    return [b for b, _ in plan["sides"]]
+
+
+# The first parser that accepts decides the shape: creation and the
+# restart re-arm both go through this one table, in this order.
+_SHAPES = (
+    # also arms MVState.inc_direct (global aggregates: inc_direct only)
+    _Shape("inc", "_parse_simple_agg", "_refresh_incremental",
+           lambda p: [p["base_fq"]],
+           lambda e, p, v: e._inc_delta_stmt(p, v[p["base_fq"]]),
+           grouped=True),
+    _Shape("inc_topn", "_parse_topn", "_refresh_incremental_topn",
+           lambda p: [p["base_fq"]],
+           lambda e, p, v: e._topn_stmt(p, v[p["base_fq"]])),
+    _Shape("inc_join", "_parse_simple_join", "_refresh_incremental_join",
+           lambda p: [p["a_fq"], p["b_fq"]],
+           lambda e, p, v: e._incj_stmt(p, v[p["a_fq"]], v[p["b_fq"]],
+                                        p["how"])),
+    _Shape("inc_joinagg", "_parse_join_agg", "_refresh_incremental_joinagg",
+           _sides,
+           lambda e, p, v: e._incja_agg_stmt(
+               p, f"({e._incja_join_stmt(p, [v[b] for b in _sides(p)])})"
+               " AS __j0"),
+           grouped=True),
+    _Shape("inc_join_nway", "_parse_join_nway",
+           "_refresh_incremental_join_nway", _sides,
+           lambda e, p, v: e._incjn_stmt(p, [v[b] for b in _sides(p)])),
+    _Shape("inc_session", "_parse_session_agg",
+           "_refresh_incremental_session", lambda p: [p["base_fq"]],
+           lambda e, p, v: e._sess_stmt(p, v[p["base_fq"]])),
+    _Shape("inc_union", "_parse_union_all", "_refresh_incremental_union",
+           lambda p: [br["tbl_fq"] for br in p["branches"]],
+           lambda e, p, v: " UNION ALL ".join(
+               e._incu_branch_stmt(br, v[br["tbl_fq"]])
+               for br in p["branches"])),
+    _Shape("inc_distinct", "_parse_distinct", "_refresh_incremental_distinct",
+           lambda p: [p["tbl_fq"]],
+           lambda e, p, v: e._incd_stmt(p, v[p["tbl_fq"]])),
+)
 
 
 class SparkEngine:
@@ -242,6 +310,29 @@ class SparkEngine:
         self._install_persist_hooks()
 
     # -- naming ------------------------------------------------------------
+
+    @contextlib.contextmanager
+    def _in_default_schema(self):
+        """Resolve unqualified names in MV SQL against the engine's
+        default schema while the block runs, then give the session back
+        the caller's current database."""
+        cat = self.spark.catalog
+        with _SCHEMA_SCOPES_LOCK:
+            scope = _SCHEMA_SCOPES.setdefault(self.spark, [0, None])
+            if scope[0] == 0:
+                scope[1] = cat.currentDatabase()
+            scope[0] += 1
+            cat.setCurrentDatabase(self.default_schema)
+        try:
+            yield
+        finally:
+            with _SCHEMA_SCOPES_LOCK:
+                scope[0] -= 1
+                if scope[0] == 0:
+                    try:
+                        cat.setCurrentDatabase(scope[1])
+                    except AnalysisException:
+                        pass  # the caller's database was dropped: stay here
 
     def qualify(self, name: str, schema_name: str | None = None) -> str:
         db, tbl = _split_fq(name, schema_name or self.default_schema)
@@ -1157,7 +1248,7 @@ class SparkEngine:
         the changelogs themselves (max rw_timestamp), so epochs never
         repeat even if the process died mid-flush. Incremental MVs
         restart on the snapshot-diff path (their delta induction base
-        died with the process) and re-promote on recreate."""
+        died with the process) and re-arm on their first refresh."""
         import json
 
         fq = self._catalog_fq()
@@ -1202,18 +1293,10 @@ class SparkEngine:
         self._gc_foreign_stages(fq, best_seq, keep=winner)
         for mv_fq, m in doc.get("mvs", {}).items():
             if self.spark.catalog.tableExists(mv_fq):
-                st = MVState(
+                self._register_existing_mv(
                     mv_fq, m["stmt"], m.get("key_cols"),
                     m.get("emit_on_close", False),
-                )
-                st.created_epoch = m.get("created_epoch")
-                try:
-                    mv_cl = self.changelog_name(mv_fq)
-                    if self.spark.catalog.tableExists(mv_cl):
-                        st.recovered_epoch = self._changelog_max_epoch(mv_cl)
-                except Exception:  # noqa: BLE001 — probe only
-                    st.recovered_epoch = None
-                self.mvs[mv_fq] = st
+                ).created_epoch = m.get("created_epoch")
         self.upsert_meta.update(doc.get("upsert_meta", {}))
         for up_fq in list(self.upsert_meta):
             try:
@@ -5465,430 +5548,179 @@ class SparkEngine:
             if ignore_exist:
                 if fq not in self.mvs and self.spark.catalog.tableExists(fq):
                     # table exists from a previous engine instance; re-register
-                    rewritten = RW.rewrite_query(stmt, self.version_string)
                     out_cols = [f.name for f in self.spark.table(fq).schema.fields]
-                    st = MVState(fq, rewritten,
-                                 self._infer_key_cols(stmt, out_cols),
-                                 emit_on_close)
-                    try:
-                        mv_cl = self.changelog_name(fq)
-                        if self.spark.catalog.tableExists(mv_cl):
-                            st.recovered_epoch = self._changelog_max_epoch(
-                                mv_cl
-                            )
-                    except Exception:  # noqa: BLE001 — probe only
-                        st.recovered_epoch = None
-                    self.mvs[fq] = st
+                    self._register_existing_mv(
+                        fq, RW.rewrite_query(stmt, self.version_string),
+                        self._infer_key_cols(stmt, out_cols), emit_on_close,
+                    )
                 return
             raise RuntimeError(f"materialized view {fq} already exists")
-        self.spark.catalog.setCurrentDatabase(self.default_schema)
-        rewritten = RW.rewrite_query(stmt, self.version_string)
-        state = MVState(fq, rewritten, None, emit_on_close)
-        # time-travel anchor: the view exists from this engine epoch on
-        state.created_epoch = self.current_epoch
-        inc = None if emit_on_close else self._parse_simple_agg(rewritten)
-        if inc is not None:
-            base = inc["base_fq"]
-            base_cl = self.changelog_name(base)
-            if (
-                base in self.upsert_meta
-                or not self.spark.catalog.tableExists(base_cl)
-            ):
-                inc = None
-        # Driver-side plan: a superset of shapes only via GLOBAL
-        # aggregates; shares inc's pinned snapshot when both arm.
-        direct = None if emit_on_close else self._parse_direct_agg(rewritten)
-        if direct is not None and (
-            direct["base_fq"] in self.upsert_meta
-            or not self.spark.catalog.tableExists(
-                self.changelog_name(direct["base_fq"])
+        with self._in_default_schema():
+            rewritten = RW.rewrite_query(stmt, self.version_string)
+            state = MVState(fq, rewritten, None, emit_on_close)
+            # time-travel anchor: the view exists from this engine epoch on
+            state.created_epoch = self.current_epoch
+            armed = None if emit_on_close else self._arm(state)
+            if armed is None:
+                df, views, finalize = self.spark.sql(rewritten), [], None
+                if emit_on_close:
+                    df = self._close_filter(state, df)
+            else:
+                df, views, finalize = armed
+            state.key_cols = self._infer_key_cols(stmt, df.columns)
+            self._clear_stale_location(fq)
+            try:
+                df.write.format("parquet").saveAsTable(fq)
+            finally:
+                for v in views:
+                    self.spark.catalog.dropTempView(v)
+            self._ensure_changelog(fq)
+            if finalize is not None:
+                finalize()
+        self.mvs[fq] = state
+
+    def _register_existing_mv(
+        self, fq: str, stmt: str, key_cols: list[str] | None,
+        emit_on_close: bool,
+    ) -> MVState:
+        """Register an MV whose table a previous engine created. No
+        plan is armed: its first refresh re-arms one (_arm).
+        recovered_epoch is the MV changelog's max (see MVState)."""
+        st = MVState(fq, stmt, key_cols, emit_on_close)
+        try:
+            mv_cl = self.changelog_name(fq)
+            if self.spark.catalog.tableExists(mv_cl):
+                st.recovered_epoch = self._changelog_max_epoch(mv_cl)
+        except Exception:  # noqa: BLE001 — probe only
+            st.recovered_epoch = None
+        self.mvs[fq] = st
+        return st
+
+    def _arm(self, state: MVState):
+        """Decide the incremental plan of ``state`` and build its
+        result from a freshly pinned induction base. CREATE
+        MATERIALIZED VIEW runs it for the initial materialization, and
+        the snapshot-diff refresh runs it to re-arm an MV that has no
+        plan: after an engine restart (MVState restores with every
+        plan None; the reference server's MVs likewise stay
+        incremental across restarts, risingwave/core.py:453-455 of the
+        reference SDK) or after a vacuum demotion. The first shape in _SHAPES whose parser accepts
+        state.stmt decides.
+
+        Returns (result, views, finalize), or None when no plan can
+        arm. The caller writes ``result`` (it reads the pinned
+        snapshots through ``views``, which the caller drops after the
+        write), sets state.key_cols, publishes, then calls
+        ``finalize()`` to arm the plan with last_epoch = the pinned
+        watermark. Permanent ineligibility (no shape, upsert base,
+        inexact SUM types, key columns other than the plan's) sets
+        state.fastpath_blocked, so the re-arm runs at most once; a
+        base changelog that is still missing does not — it may appear
+        with the first insert."""
+        spark = self.spark
+        for shape in _SHAPES:
+            plan = getattr(self, shape.parse)(state.stmt)
+            # the driver-side plan covers a superset of agg shapes only
+            # via GLOBAL aggregates, and shares the agg shape's snapshot
+            direct = (
+                self._parse_direct_agg(state.stmt)
+                if shape.attr == "inc" else None
             )
-        ):
-            direct = None
-        if inc is None and direct is not None:
-            # Direct-only arm (global aggregate): same pinned
-            # induction-base contract as the inc path below.
-            base = direct["base_fq"]
-            base_cl = self.changelog_name(base)
-            with self._lock:
-                self.spark.catalog.refreshTable(base_cl)
-                m0 = max(
-                    self.spark.table(base_cl)
-                    .agg(F.max("rw_timestamp")).first()[0] or 0,
-                    self.vacuum_floor.get(base_cl, 0),
-                )
-                snap = self.spark.table(base).localCheckpoint(eager=True)
-        if inc is not None:
-            # Consistent base snapshot: epoch watermark and table data
-            # are pinned under the same lock that publishes inserts, so
-            # the initial result corresponds exactly to "all changelog
-            # epochs <= last_epoch" — the induction base the delta
-            # merge relies on.
-            with self._lock:
-                self.spark.catalog.refreshTable(base_cl)
-                cl_df = self.spark.table(base_cl)
+            if plan is not None or direct is not None:
+                break
+        else:
+            state.fastpath_blocked = True
+            return None
+        bases = list(dict.fromkeys(
+            shape.bases(plan) if plan is not None else [direct["base_fq"]]
+        ))
+        if any(b in self.upsert_meta for b in bases):
+            state.fastpath_blocked = True
+            return None
+        cls = [self.changelog_name(b) for b in bases]
+        if not all(spark.catalog.tableExists(cl) for cl in cls):
+            return None  # may appear after the first insert
+        # Consistent induction base: epoch watermark and table data
+        # are pinned under the same lock that publishes inserts, so the
+        # result corresponds exactly to "all changelog epochs <= m0" —
+        # the base the delta merge relies on. Prior UPDATE/DELETE
+        # history is free (the base is the TABLE snapshot, not a
+        # changelog fold; every refresh path is retraction-capable),
+        # and nothing scans the changelog here. No vacuum-floor
+        # condition either: the refresh paths read only the delta
+        # suffix > last_epoch, and m0 is the current max, so even a
+        # fully vacuumed history re-arms — a vacuum demotion is a
+        # one-flush fallback, not a permanent one.
+        m0 = 0
+        snaps: dict[str, DataFrame] = {}
+        with self._lock:
+            for b, cl in zip(bases, cls):
                 # include the vacuum floor: a truncated changelog can
                 # read max < floor, but every epoch <= floor is folded
                 # into the lock-pinned snapshot by construction — an
                 # understated watermark would trip the refresh-time
                 # floor check forever (demote/re-arm every flush)
-                m0 = max(
-                    cl_df.agg(F.max("rw_timestamp")).first()[0] or 0,
-                    self.vacuum_floor.get(base_cl, 0),
-                )
-                snap = self.spark.table(base).localCheckpoint(eager=True)
-            # NOTE: prior UPDATE/DELETE history on the base is fine —
-            # the induction base is the TABLE snapshot (not a changelog
-            # fold), and the refresh path is retraction-capable.
-        inctop = None
-        if inc is None and direct is None and not emit_on_close:
-            inctop = self._parse_topn(rewritten)
-            if inctop is not None and (
-                inctop["base_fq"] in self.upsert_meta
-                or not self.spark.catalog.tableExists(
-                    self.changelog_name(inctop["base_fq"])
-                )
-            ):
-                inctop = None
-        m0t = 0
-        snap_t = None
-        if inctop is not None:
-            # Same pinned-induction-base contract as the agg path.
-            with self._lock:
-                base_cl_t = self.changelog_name(inctop["base_fq"])
-                self.spark.catalog.refreshTable(base_cl_t)
-                m0t = max(
-                    self.spark.table(base_cl_t)
-                    .agg(F.max("rw_timestamp"))
-                    .first()[0]
-                    or 0,
-                    self.vacuum_floor.get(base_cl_t, 0),
-                )
-                self.spark.catalog.refreshTable(inctop["base_fq"])
-                snap_t = self.spark.table(
-                    inctop["base_fq"]
-                ).localCheckpoint(eager=True)
-        incj = None
-        incja = None
-        incjn = None
-        if inc is None and direct is None and inctop is None and not emit_on_close:
-            incj = self._parse_simple_join(rewritten)
-            if incj is None:
-                incja = self._parse_join_agg(rewritten)
-                if incja is not None:
-                    # (No vacuum-floor condition: the induction base is
-                    # a table snapshot with last_epoch = current max, so
-                    # any existing floor ≤ last is irrelevant.)
-                    for base, _ in incja["sides"]:
-                        if (
-                            base in self.upsert_meta
-                            or not self.spark.catalog.tableExists(
-                                self.changelog_name(base)
-                            )
-                        ):
-                            incja = None
-                            break
-                if incja is None:
-                    incjn = self._parse_join_nway(rewritten)
-                    if incjn is not None:
-                        for base, _ in incjn["sides"]:
-                            if (
-                                base in self.upsert_meta
-                                or not self.spark.catalog.tableExists(
-                                    self.changelog_name(base)
-                                )
-                            ):
-                                incjn = None
-                                break
-        incs = None
-        if (
-            inc is None and direct is None and inctop is None
-            and incj is None and incja is None and incjn is None
-            and not emit_on_close
-        ):
-            incs = self._parse_session_agg(rewritten)
-            if incs is not None and (
-                incs["base_fq"] in self.upsert_meta
-                or not self.spark.catalog.tableExists(
-                    self.changelog_name(incs["base_fq"])
-                )
-            ):
-                incs = None
-        m0s = 0
-        snap_s = None
-        if incs is not None:
-            # Same pinned-induction-base contract as the agg path.
-            with self._lock:
-                cl_s = self.changelog_name(incs["base_fq"])
-                self.spark.catalog.refreshTable(cl_s)
-                m0s = max(
-                    self.spark.table(cl_s)
-                    .agg(F.max("rw_timestamp")).first()[0] or 0,
-                    self.vacuum_floor.get(cl_s, 0),
-                )
-                self.spark.catalog.refreshTable(incs["base_fq"])
-                snap_s = self.spark.table(
-                    incs["base_fq"]
-                ).localCheckpoint(eager=True)
-        incu = None
-        if (
-            inc is None and direct is None and inctop is None
-            and incj is None and incja is None and incjn is None
-            and incs is None and not emit_on_close
-        ):
-            incu = self._parse_union_all(rewritten)
-            if incu is not None:
-                for br in incu["branches"]:
-                    if (
-                        br["tbl_fq"] in self.upsert_meta
-                        or not self.spark.catalog.tableExists(
-                            self.changelog_name(br["tbl_fq"])
-                        )
-                    ):
-                        incu = None
-                        break
-        m0u = 0
-        snaps_u: dict[str, DataFrame] = {}
-        if incu is not None:
-            ufqs = sorted({br["tbl_fq"] for br in incu["branches"]})
-            with self._lock:
-                ucls = [self.changelog_name(b) for b in ufqs]
-                for cl in ucls:
-                    self.spark.catalog.refreshTable(cl)
-                m0u = max(
-                    max(
-                        self.spark.table(cl)
-                        .agg(F.max("rw_timestamp")).first()[0] or 0,
-                        self.vacuum_floor.get(cl, 0),
-                    )
-                    for cl in ucls
-                )
-                for b in ufqs:
-                    self.spark.catalog.refreshTable(b)
-                    snaps_u[b] = self.spark.table(b).localCheckpoint(
-                        eager=True
-                    )
-        incd = None
-        if (
-            inc is None and direct is None and inctop is None
-            and incj is None and incja is None and incjn is None
-            and incs is None and incu is None and not emit_on_close
-        ):
-            incd = self._parse_distinct(rewritten)
-            if incd is not None and (
-                incd["tbl_fq"] in self.upsert_meta
-                or not self.spark.catalog.tableExists(
-                    self.changelog_name(incd["tbl_fq"])
-                )
-            ):
-                incd = None
-        m0d = 0
-        snap_d = None
-        if incd is not None:
-            with self._lock:
-                cl_d = self.changelog_name(incd["tbl_fq"])
-                self.spark.catalog.refreshTable(cl_d)
-                m0d = max(
-                    self.spark.table(cl_d)
-                    .agg(F.max("rw_timestamp")).first()[0] or 0,
-                    self.vacuum_floor.get(cl_d, 0),
-                )
-                self.spark.catalog.refreshTable(incd["tbl_fq"])
-                snap_d = self.spark.table(
-                    incd["tbl_fq"]
-                ).localCheckpoint(eager=True)
-        if incj is not None:
-            cla = self.changelog_name(incj["a_fq"])
-            clb = self.changelog_name(incj["b_fq"])
-            if (
-                incj["a_fq"] in self.upsert_meta
-                or incj["b_fq"] in self.upsert_meta
-                or not self.spark.catalog.tableExists(cla)
-                or not self.spark.catalog.tableExists(clb)
-            ):
-                incj = None
-        side_cls: list[str] = []
-        if incj is not None:
-            side_cls = [
-                self.changelog_name(incj["a_fq"]),
-                self.changelog_name(incj["b_fq"]),
-            ]
-        elif incja is not None:
-            side_cls = [self.changelog_name(b) for b, _ in incja["sides"]]
-        elif incjn is not None:
-            side_cls = [self.changelog_name(b) for b, _ in incjn["sides"]]
-        snaps0: list[DataFrame] = []
-        m0j = 0
-        if side_cls:
-            if incj is not None:
-                side_fqs = [incj["a_fq"], incj["b_fq"]]
-            else:
-                side_fqs = [
-                    b for b, _ in (incja or incjn)["sides"]
-                ]
-            # Consistent induction base, pinned under the publish lock
-            # (same contract as the aggregation path): the TABLE
-            # snapshot is the fold of all published epochs ≤ m0j, so
-            # prior DML history is free and nothing scans the
-            # changelog at creation time.
-            with self._lock:
-                for cl in side_cls:
-                    self.spark.catalog.refreshTable(cl)
-                m0j = max(
-                    max(
-                        self.spark.table(cl)
-                        .agg(F.max("rw_timestamp")).first()[0] or 0,
-                        self.vacuum_floor.get(cl, 0),
-                    )
-                    for cl in side_cls
-                )
-                for b in side_fqs:
-                    self.spark.catalog.refreshTable(b)
-                    snaps0.append(
-                        self.spark.table(b).localCheckpoint(eager=True)
-                    )
-        base_view = None
-        join_views: list[str] | None = None
-        if inc is not None:
-            # Schema-qualified so same-named MVs in different schemas
-            # don't share a session-global temp view; dropped after the
-            # initial materialization below.
-            base_view = "__rw_inc_base_" + "_".join(_split_fq(fq))
-            snap.createOrReplaceTempView(base_view)
-            df = self.spark.sql(self._inc_delta_stmt(inc, base_view))
-        elif direct is not None:
-            base_view = "__rw_direct_base_" + "_".join(_split_fq(fq))
-            snap.createOrReplaceTempView(base_view)
-            df = self.spark.sql(self._direct_stmt(direct, base_view))
-        elif inctop is not None:
-            base_view = "__rw_topn_base_" + "_".join(_split_fq(fq))
-            snap_t.createOrReplaceTempView(base_view)
-            df = self.spark.sql(self._topn_stmt(inctop, base_view))
-        elif incs is not None:
-            base_view = "__rw_sess_base_" + "_".join(_split_fq(fq))
-            snap_s.createOrReplaceTempView(base_view)
-            df = self.spark.sql(self._sess_stmt(incs, base_view))
-        elif incu is not None:
-            tag = "_".join(_split_fq(fq))
-            join_views = []
-            uview = {}
-            for i, (b, sn) in enumerate(sorted(snaps_u.items())):
-                v = f"__rw_incu_s{i}0_{tag}"
-                sn.createOrReplaceTempView(v)
-                join_views.append(v)
-                uview[b] = v
-            df = self.spark.sql(
-                " UNION ALL ".join(
-                    self._incu_branch_stmt(br, uview[br["tbl_fq"]])
-                    for br in incu["branches"]
-                )
-            )
-        elif incd is not None:
-            base_view = "__rw_dx_base_" + "_".join(_split_fq(fq))
-            snap_d.createOrReplaceTempView(base_view)
-            df = self.spark.sql(self._incd_stmt(incd, base_view))
-        elif incj is not None or incja is not None or incjn is not None:
-            tag = "_".join(_split_fq(fq))
-            join_views = []
-            for i, sn in enumerate(snaps0):
-                v = f"__rw_incj_s{i}0_{tag}"
-                sn.createOrReplaceTempView(v)
-                join_views.append(v)
-            if incj is not None:
-                df = self.spark.sql(
-                    self._incj_stmt(
-                        incj, join_views[0], join_views[1], incj["how"]
-                    )
-                )
-            elif incjn is not None:
-                df = self.spark.sql(self._incjn_stmt(incjn, join_views))
-            else:
-                df = self.spark.sql(
-                    self._incja_agg_stmt(
-                        incja,
-                        f"({self._incja_join_stmt(incja, join_views)}) AS __j0",
-                    )
-                )
-        else:
-            df = self.spark.sql(rewritten)
-        if emit_on_close:
-            df = self._close_filter(state, df)
-        if inc is not None and not self._fastpath_types_ok(inc, df):
-            inc = None
-        if incja is not None and not self._fastpath_types_ok(incja, df):
-            incja = None
-        if direct is not None and not self._direct_types_ok(direct, df):
-            direct = None
-        direct_aux = None
-        if direct is not None and any(
-            fn == "avg" for fn in direct["kinds"].values()
-        ):
-            # sum/count companions from the SAME pinned snapshot the
-            # visible result materializes from; an oversize grouped
-            # result (which the refresh would reject anyway) leaves
-            # the MV on the Spark paths.
-            direct_aux = self._direct_collect_aux(direct, base_view)
-            if direct_aux is None:
-                direct = None
-        self._clear_stale_location(fq)
+                m0 = max(m0, self._changelog_max_epoch(cl) or 0,
+                         self.vacuum_floor.get(cl, 0))
+                spark.catalog.refreshTable(b)
+                snaps[b] = spark.table(b).localCheckpoint(eager=True)
+        tag = "_".join(_split_fq(state.fq))
+        # Schema-qualified so same-named MVs in different schemas don't
+        # share a session-global temp view.
+        views = {b: f"__rw_arm{i}_{tag}" for i, b in enumerate(bases)}
         try:
-            df.write.format("parquet").saveAsTable(fq)
-        finally:
-            if base_view is not None:
-                self.spark.catalog.dropTempView(base_view)
-            if join_views is not None:
-                for v in join_views:
-                    self.spark.catalog.dropTempView(v)
-        self._ensure_changelog(fq)
-        state.key_cols = self._infer_key_cols(stmt, df.columns)
-        if inc is not None and state.key_cols and set(state.key_cols) == set(
-            inc["keys"]
-        ):
-            state.inc = inc
+            for b, v in views.items():
+                snaps[b].createOrReplaceTempView(v)
+            df = spark.sql(
+                shape.initial(self, plan, views) if plan is not None
+                else self._direct_stmt(direct, views[bases[0]])
+            )
+            if (
+                shape.grouped and plan is not None
+                and not self._fastpath_types_ok(plan, df)
+            ):
+                plan = None
+            if direct is not None and not self._direct_types_ok(direct, df):
+                direct = None
+            aux = None
+            if direct is not None and any(
+                fn == "avg" for fn in direct["kinds"].values()
+            ):
+                # sum/count companions from the SAME pinned snapshot the
+                # visible result materializes from; an oversize grouped
+                # result (which the refresh would reject anyway) leaves
+                # the MV on the Spark paths.
+                aux = self._direct_collect_aux(direct, views[bases[0]])
+                if aux is None:
+                    direct = None
+        except BaseException:
+            for v in views.values():
+                spark.catalog.dropTempView(v)
+            raise
+
+        def finalize() -> None:
+            # Key columns that exist but differ from the plan's group
+            # keys would make the snapshot-diff fallback pair-diff on
+            # another key set — emission contracts must agree.
+            keys = state.key_cols
+            armed = plan
+            if shape.grouped and armed is not None and not (
+                keys and set(keys) == set(armed["keys"])
+            ):
+                armed = None
+            d = direct
+            if d is not None and keys and set(keys) != set(d["keys"]):
+                d = None
+            if armed is None and d is None:
+                state.fastpath_blocked = True
+                return
+            setattr(state, shape.attr, armed)
+            state.inc_direct = d
+            state.direct_aux = aux if d is not None else None
+            state.set_location_ok = None  # new arm: probe again
             state.last_epoch = m0
-        elif inctop is not None:
-            state.inc_topn = inctop
-            state.last_epoch = m0t
-        elif incj is not None:
-            state.inc_join = incj
-            state.last_epoch = m0j
-        elif incja is not None and state.key_cols and set(state.key_cols) == set(
-            incja["keys"]
-        ):
-            state.inc_joinagg = incja
-            state.last_epoch = m0j
-        elif incjn is not None:
-            # bag MV (no group keys): the signed telescoping rule emits
-            # net Insert/Delete — no key_cols contract to satisfy
-            state.inc_join_nway = incjn
-            state.last_epoch = m0j
-        elif incs is not None:
-            # session MV: keyed by (keys…, window) but the window is
-            # data-dependent — emission is the net Insert/Delete bag,
-            # same vocabulary the snapshot-diff fallback uses for it
-            state.inc_session = incs
-            state.last_epoch = m0s
-        elif incu is not None:
-            # UNION ALL MV: bag emission (net Insert/Delete), linear
-            # delta — no key_cols contract to satisfy
-            state.inc_union = incu
-            state.last_epoch = m0u
-        elif incd is not None:
-            # DISTINCT MV: the stored set is its own membership state
-            state.inc_distinct = incd
-            state.last_epoch = m0d
-        if direct is not None and (
-            not state.key_cols or set(state.key_cols) == set(direct["keys"])
-        ):
-            # shares the inc snapshot's m0 when both armed (same lock
-            # block), or its own pinned m0 for the direct-only arm.
-            # key_cols that exist but differ from the group keys would
-            # make the fallback path pair-diff on another key set —
-            # emission contracts must agree, so don't arm.
-            state.inc_direct = direct
-            state.direct_aux = direct_aux
-            state.last_epoch = m0
-        self.mvs[fq] = state
+
+        return df, list(views.values()), finalize
 
     def drop_mv(self, name: str, schema_name: str | None = None) -> None:
         fq = self.qualify(name, schema_name)
@@ -5949,7 +5781,6 @@ class SparkEngine:
         downstream consumers (sinks, cascades) see a pure append
         stream."""
         spark = self.spark
-        spark.catalog.setCurrentDatabase(self.default_schema)
         fq = state.fq
         new = self._close_filter(state, spark.sql(state.stmt))
         spark.catalog.refreshTable(fq)
@@ -7412,340 +7243,19 @@ class SparkEngine:
         state.last_epoch = m1
         return True
 
-    def _prepare_fastpath_rearm(self, state: MVState):
-        """Fast-path recovery for an MV currently on snapshot-diff —
-        after an engine restart (MVState restores with all plans None;
-        the reference server's IVM likewise survives restarts,
-        /root/reference/risingwave/core.py:453-455) or after an
-        agg-path vacuum demotion. Re-derives the plan exactly like
-        create_mv: pin a consistent induction base under the publish
-        lock, recompute the result FROM THAT BASE (never the live
-        tables — concurrency-safe), and re-enter the fast path with
-        last_epoch = the pinned watermark.
-
-        Returns (new_result_df, finalize) — the caller materializes
-        new_result_df as this refresh's recompute and calls finalize()
-        after publishing — or None. Permanent ineligibility (shape,
-        types, upsert base, truncated join history) sets
-        state.fastpath_blocked so the probe runs at most once."""
-        spark = self.spark
-        stmt = state.stmt
-        tag = "_".join(_split_fq(state.fq))
-        inc = self._parse_simple_agg(stmt)
-        direct = self._parse_direct_agg(stmt)
-        if inc is not None and not (
-            state.key_cols and set(state.key_cols) == set(inc["keys"])
-        ):
-            inc = None  # inc needs inferable keys; direct may still arm
-        if direct is not None and state.key_cols and set(
-            state.key_cols
-        ) != set(direct["keys"]):
-            direct = None  # emission contract must match the fallback
-        if inc is not None or direct is not None:
-            base = (inc or direct)["base_fq"]
-            base_cl = self.changelog_name(base)
-            if base in self.upsert_meta:
-                state.fastpath_blocked = True
-                return None
-            if not spark.catalog.tableExists(base_cl):
-                return None  # may appear after the first insert
-            with self._lock:
-                spark.catalog.refreshTable(base_cl)
-                # include the vacuum floor: every epoch <= floor is in
-                # the pinned snapshot even when the truncated changelog
-                # reads max < floor (else the refresh-time floor check
-                # demotes again every flush)
-                m0 = max(
-                    spark.table(base_cl).agg(F.max("rw_timestamp")).first()[0]
-                    or 0,
-                    self.vacuum_floor.get(base_cl, 0),
-                )
-                snap = spark.table(base).localCheckpoint(eager=True)
-            view = f"__rw_rearm_{tag}"
-            snap.createOrReplaceTempView(view)
-            try:
-                df = spark.sql(
-                    self._inc_delta_stmt(inc, view)
-                    if inc is not None
-                    else self._direct_stmt(direct, view)
-                )
-                if inc is not None and not self._fastpath_types_ok(inc, df):
-                    inc = None
-                if direct is not None and not self._direct_types_ok(
-                    direct, df
-                ):
-                    direct = None
-                aux = None
-                if direct is not None and any(
-                    fn == "avg" for fn in direct["kinds"].values()
-                ):
-                    # rebuild the avg companions from the same pinned
-                    # snapshot the recompute materializes from
-                    aux = self._direct_collect_aux(direct, view)
-                    if aux is None:
-                        direct = None
-                if inc is None and direct is None:
-                    state.fastpath_blocked = True
-                    return None
-                df = df.localCheckpoint(eager=True)
-            finally:
-                spark.catalog.dropTempView(view)
-
-            def finalize_inc():
-                state.inc = inc
-                state.inc_direct = direct
-                state.set_location_ok = None  # new arm: probe again
-                state.direct_aux = aux
-                state.last_epoch = m0
-                if direct is not None:
-                    self.direct_stats["rearm"] += 1
-                    if aux is not None:
-                        self.direct_stats["aux_rebuild"] += 1
-
-            return df, finalize_inc
-
-        inctop = self._parse_topn(stmt)
-        if inctop is not None:
-            base = inctop["base_fq"]
-            base_cl = self.changelog_name(base)
-            if base in self.upsert_meta:
-                state.fastpath_blocked = True
-                return None
-            if not spark.catalog.tableExists(base_cl):
-                return None  # may appear after the first insert
-            with self._lock:
-                spark.catalog.refreshTable(base_cl)
-                m0 = max(
-                    spark.table(base_cl).agg(F.max("rw_timestamp")).first()[0]
-                    or 0,
-                    self.vacuum_floor.get(base_cl, 0),
-                )
-                spark.catalog.refreshTable(base)
-                snap = spark.table(base).localCheckpoint(eager=True)
-            view = f"__rw_rearm_{tag}"
-            snap.createOrReplaceTempView(view)
-            try:
-                df = spark.sql(
-                    self._topn_stmt(inctop, view)
-                ).localCheckpoint(eager=True)
-            finally:
-                spark.catalog.dropTempView(view)
-
-            def finalize_topn():
-                state.inc_topn = inctop
-                state.last_epoch = m0
-
-            return df, finalize_topn
-
-        incs = self._parse_session_agg(stmt)
-        if incs is not None:
-            base = incs["base_fq"]
-            base_cl = self.changelog_name(base)
-            if base in self.upsert_meta:
-                state.fastpath_blocked = True
-                return None
-            if not spark.catalog.tableExists(base_cl):
-                return None  # may appear after the first insert
-            with self._lock:
-                spark.catalog.refreshTable(base_cl)
-                m0 = max(
-                    spark.table(base_cl).agg(F.max("rw_timestamp")).first()[0]
-                    or 0,
-                    self.vacuum_floor.get(base_cl, 0),
-                )
-                spark.catalog.refreshTable(base)
-                snap = spark.table(base).localCheckpoint(eager=True)
-            view = f"__rw_rearm_{tag}"
-            snap.createOrReplaceTempView(view)
-            try:
-                df = spark.sql(
-                    self._sess_stmt(incs, view)
-                ).localCheckpoint(eager=True)
-            finally:
-                spark.catalog.dropTempView(view)
-
-            def finalize_sess():
-                state.inc_session = incs
-                state.last_epoch = m0
-
-            return df, finalize_sess
-
-        incj = self._parse_simple_join(stmt)
-        incja = None if incj is not None else self._parse_join_agg(stmt)
-        incjn = (
-            None
-            if (incj is not None or incja is not None)
-            else self._parse_join_nway(stmt)
-        )
-        incu = None
-        incd = None
-        if incj is None and incja is None and incjn is None:
-            incu = self._parse_union_all(stmt)
-            if incu is None:
-                incd = self._parse_distinct(stmt)
-        if (
-            incj is None and incja is None and incjn is None
-            and incu is None and incd is None
-        ):
-            state.fastpath_blocked = True
-            return None
-        if incd is not None:
-            base_d = incd["tbl_fq"]
-            cl_d = self.changelog_name(base_d)
-            if base_d in self.upsert_meta:
-                state.fastpath_blocked = True
-                return None
-            if not spark.catalog.tableExists(cl_d):
-                return None  # may appear after the first insert
-            with self._lock:
-                spark.catalog.refreshTable(cl_d)
-                m0d = max(
-                    spark.table(cl_d).agg(F.max("rw_timestamp"))
-                    .first()[0] or 0,
-                    self.vacuum_floor.get(cl_d, 0),
-                )
-                spark.catalog.refreshTable(base_d)
-                snap_d = spark.table(base_d).localCheckpoint(eager=True)
-            view_d = f"__rw_rearm_dx_{tag}"
-            snap_d.createOrReplaceTempView(view_d)
-            try:
-                df = spark.sql(
-                    self._incd_stmt(incd, view_d)
-                ).localCheckpoint(eager=True)
-            finally:
-                spark.catalog.dropTempView(view_d)
-
-            def finalize_distinct():
-                state.inc_distinct = incd
-                state.last_epoch = m0d
-
-            return df, finalize_distinct
-        if incu is not None:
-            ufqs = sorted({br["tbl_fq"] for br in incu["branches"]})
-            if any(b in self.upsert_meta for b in ufqs):
-                state.fastpath_blocked = True
-                return None
-            ucls = [self.changelog_name(b) for b in ufqs]
-            if not all(spark.catalog.tableExists(cl) for cl in ucls):
-                return None  # may appear after the first inserts
-            with self._lock:
-                for cl in ucls:
-                    spark.catalog.refreshTable(cl)
-                m0u = max(
-                    max(
-                        spark.table(cl).agg(F.max("rw_timestamp"))
-                        .first()[0] or 0,
-                        self.vacuum_floor.get(cl, 0),
-                    )
-                    for cl in ucls
-                )
-                usnaps = {}
-                for b in ufqs:
-                    spark.catalog.refreshTable(b)
-                    usnaps[b] = spark.table(b).localCheckpoint(eager=True)
-            uviews = {}
-            for i, (b, sn) in enumerate(sorted(usnaps.items())):
-                v = f"__rw_rearm_u{i}_{tag}"
-                sn.createOrReplaceTempView(v)
-                uviews[b] = v
-            try:
-                df = spark.sql(
-                    " UNION ALL ".join(
-                        self._incu_branch_stmt(br, uviews[br["tbl_fq"]])
-                        for br in incu["branches"]
-                    )
-                ).localCheckpoint(eager=True)
-            finally:
-                for v in uviews.values():
-                    spark.catalog.dropTempView(v)
-
-            def finalize_union():
-                state.inc_union = incu
-                state.last_epoch = m0u
-
-            return df, finalize_union
-        if incj is not None:
-            bases = [incj["a_fq"], incj["b_fq"]]
-        else:
-            bases = [b for b, _ in (incja or incjn)["sides"]]
-        cls = [self.changelog_name(b) for b in bases]
-        if any(b in self.upsert_meta for b in bases):
-            state.fastpath_blocked = True
-            return None
-        if incja is not None and not (
-            state.key_cols and set(state.key_cols) == set(incja["keys"])
-        ):
-            state.fastpath_blocked = True
-            return None
-        if not all(spark.catalog.tableExists(cl) for cl in cls):
-            return None  # may appear after the first inserts
-        # (No vacuum-floor condition: the join paths read only the
-        # delta suffix > last_epoch from the changelog, and re-arm
-        # pins last_epoch = current max — so even a fully vacuumed
-        # history is fine. This is what makes a vacuum demotion a
-        # one-flush fallback rather than permanent.)
-        with self._lock:
-            for cl in cls:
-                spark.catalog.refreshTable(cl)
-            m0j = max(
-                max(
-                    spark.table(cl).agg(F.max("rw_timestamp")).first()[0]
-                    or 0,
-                    self.vacuum_floor.get(cl, 0),
-                )
-                for cl in cls
-            )
-            snaps0 = []
-            for b in bases:
-                spark.catalog.refreshTable(b)
-                snaps0.append(spark.table(b).localCheckpoint(eager=True))
-        views = [f"__rw_rearm_s{i}_{tag}" for i in range(len(snaps0))]
-        for sn, v in zip(snaps0, views):
-            sn.createOrReplaceTempView(v)
-        try:
-            if incj is not None:
-                df = spark.sql(
-                    self._incj_stmt(incj, views[0], views[1], incj["how"])
-                )
-            elif incjn is not None:
-                df = spark.sql(self._incjn_stmt(incjn, views))
-            else:
-                df = spark.sql(
-                    self._incja_agg_stmt(
-                        incja,
-                        f"({self._incja_join_stmt(incja, views)}) AS __j0",
-                    )
-                )
-                if not self._fastpath_types_ok(incja, df):
-                    state.fastpath_blocked = True
-                    return None
-            df = df.localCheckpoint(eager=True)
-        finally:
-            for v in views:
-                spark.catalog.dropTempView(v)
-
-        def finalize_join():
-            if incj is not None:
-                state.inc_join = incj
-            elif incja is not None:
-                state.inc_joinagg = incja
-            else:
-                state.inc_join_nway = incjn
-            state.last_epoch = m0j
-
-        return df, finalize_join
-
     def refresh_mv(self, state: MVState) -> None:
         """Recompute the MV and emit changelog deltas.
 
-        Incremental fast path first: append-only simple-agg MVs merge
-        the base-changelog delta into the stored result (O(delta +
-        touched groups) — see _parse_simple_agg). Otherwise
+        Incremental paths first: an MV whose plan is armed (any shape
+        in _SHAPES, plus the driver-side direct plan for small
+        aggregates) merges the base-changelog delta since last_epoch
+        into the stored result, retractions included. Otherwise
         snapshot-diff derivation (SURVEY §7 'what's hard' #1): new
         result vs stored result. With inferable group keys we emit
         RisingWave-style UpdateDelete/UpdateInsert pairs for changed
         groups; otherwise a null-safe bag diff emits Insert/Delete
-        with multiplicity."""
+        with multiplicity. A snapshot-diff refresh of an MV with no
+        plan re-arms one (_arm) unless it is blocked."""
         with state.refresh_lock:
             self._refresh_mv_locked(state)
             # A completed refresh brings the stored table current: if
@@ -7770,7 +7280,8 @@ class SparkEngine:
                 state.inc_direct = None
                 self.direct_stats["fallback"] += 1
         try:
-            self._refresh_mv_spark(state)
+            with self._in_default_schema():
+                self._refresh_mv_spark(state)
         finally:
             # Every non-direct publication swaps or rewrites the MV's
             # files (DROP+RENAME to the canonical location, appends),
@@ -7781,135 +7292,47 @@ class SparkEngine:
         if state.emit_on_close:
             self._refresh_emit_on_close(state)
             return
-        if state.inc is not None:
+        for shape in _SHAPES:
+            if getattr(state, shape.attr) is None:
+                continue
             try:
-                if self._refresh_incremental(state):
+                if getattr(self, shape.refresh)(state):
                     return
             except Exception:  # pragma: no cover - defensive demotion
                 logger.exception(
-                    "incremental refresh of %s failed; demoting to snapshot-diff",
-                    state.fq,
+                    "%s refresh of %s failed; demoting to snapshot-diff",
+                    shape.attr, state.fq,
                 )
-                state.inc = None
-                state.fastpath_blocked = True
-        if state.inc_topn is not None:
-            try:
-                if self._refresh_incremental_topn(state):
-                    return
-            except Exception:  # pragma: no cover - defensive demotion
-                logger.exception(
-                    "incremental top-n refresh of %s failed; demoting to snapshot-diff",
-                    state.fq,
-                )
-                state.inc_topn = None
-                state.fastpath_blocked = True
-        if state.inc_join is not None:
-            try:
-                if self._refresh_incremental_join(state):
-                    return
-            except Exception:  # pragma: no cover - defensive demotion
-                logger.exception(
-                    "incremental join refresh of %s failed; demoting to snapshot-diff",
-                    state.fq,
-                )
-                state.inc_join = None
-                state.fastpath_blocked = True
-        if state.inc_joinagg is not None:
-            try:
-                if self._refresh_incremental_joinagg(state):
-                    return
-            except Exception:  # pragma: no cover - defensive demotion
-                logger.exception(
-                    "incremental join-agg refresh of %s failed; "
-                    "demoting to snapshot-diff",
-                    state.fq,
-                )
-                state.inc_joinagg = None
-                state.fastpath_blocked = True
-        if state.inc_join_nway is not None:
-            try:
-                if self._refresh_incremental_join_nway(state):
-                    return
-            except Exception:  # pragma: no cover - defensive demotion
-                logger.exception(
-                    "incremental N-way join refresh of %s failed; "
-                    "demoting to snapshot-diff",
-                    state.fq,
-                )
-                state.inc_join_nway = None
-                state.fastpath_blocked = True
-        if state.inc_session is not None:
-            try:
-                if self._refresh_incremental_session(state):
-                    return
-            except Exception:  # pragma: no cover - defensive demotion
-                logger.exception(
-                    "incremental session refresh of %s failed; "
-                    "demoting to snapshot-diff",
-                    state.fq,
-                )
-                state.inc_session = None
-                state.fastpath_blocked = True
-        if state.inc_union is not None:
-            try:
-                if self._refresh_incremental_union(state):
-                    return
-            except Exception:  # pragma: no cover - defensive demotion
-                logger.exception(
-                    "incremental UNION ALL refresh of %s failed; "
-                    "demoting to snapshot-diff",
-                    state.fq,
-                )
-                state.inc_union = None
-                state.fastpath_blocked = True
-        if state.inc_distinct is not None:
-            try:
-                if self._refresh_incremental_distinct(state):
-                    return
-            except Exception:  # pragma: no cover - defensive demotion
-                logger.exception(
-                    "incremental DISTINCT refresh of %s failed; "
-                    "demoting to snapshot-diff",
-                    state.fq,
-                )
-                state.inc_distinct = None
+                setattr(state, shape.attr, None)
                 state.fastpath_blocked = True
         spark = self.spark
-        spark.catalog.setCurrentDatabase(self.default_schema)
         fq = state.fq
         # The snapshot-diff recompute below folds epochs the direct
-        # path's watermark knows nothing about — disarm it; the probe
-        # re-arms with a freshly pinned induction base.
+        # path's watermark knows nothing about — disarm it; the re-arm
+        # pins a fresh induction base.
         state.inc_direct = None
-        rearm = None
-        if (
-            not state.emit_on_close
-            and not state.fastpath_blocked
-            and state.inc is None
-            and state.inc_topn is None
-            and state.inc_join is None
-            and state.inc_joinagg is None
-            and state.inc_join_nway is None
-            and state.inc_session is None
-            and state.inc_union is None
-            and state.inc_distinct is None
+        armed = None
+        if not state.fastpath_blocked and all(
+            getattr(state, s.attr) is None for s in _SHAPES
         ):
             try:
-                rearm = self._prepare_fastpath_rearm(state)
+                armed = self._arm(state)
             except Exception:  # pragma: no cover - defensive
-                logger.exception("fast-path re-arm probe of %s failed", fq)
+                logger.exception("fast-path re-arm of %s failed", fq)
                 state.fastpath_blocked = True
-                rearm = None
         db, tbl = _split_fq(fq)
         stage = f"{db}.__rw_stage__{tbl}"
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
         self._clear_stale_location(stage)
-        src = (
-            rearm[0]
-            if rearm is not None
-            else spark.sql(RW.rewrite_query(state.stmt, self.version_string))
+        src, views, finalize = armed or (
+            spark.sql(RW.rewrite_query(state.stmt, self.version_string)),
+            [], None,
         )
-        src.write.format("parquet").saveAsTable(stage)
+        try:
+            src.write.format("parquet").saveAsTable(stage)
+        finally:
+            for v in views:
+                spark.catalog.dropTempView(v)
 
         old = spark.table(fq)
         new = spark.table(stage)
@@ -7973,10 +7396,14 @@ class SparkEngine:
             spark.catalog.refreshTable(fq)
         else:
             spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        if rearm is not None:
+        if finalize is not None:
             # Published from the pinned induction base: re-enter the
             # fast path with last_epoch = the pinned watermark.
-            rearm[1]()
+            finalize()
+            if state.inc_direct is not None:
+                self.direct_stats["rearm"] += 1
+                if state.direct_aux is not None:
+                    self.direct_stats["aux_rebuild"] += 1
 
     # -- subscriptions -----------------------------------------------------
 

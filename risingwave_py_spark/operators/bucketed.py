@@ -42,6 +42,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,9 +55,12 @@ from risingwave_py_spark.registry import ORACLES, register
 BUCKETS = 16
 _FACTS = (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))
 
-# (session id, sf_dir) -> (bucketed db name, source fingerprint),
-# once verified/built
-_READY: dict[tuple[int, str], tuple[str, str]] = {}
+# session -> {sf_dir: (bucketed db name, source fingerprint)}, once
+# verified/built. Held weakly on the session object, not its id(): a
+# new session that lands on a dead one's id must not inherit its entry.
+_READY: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def bucketed_db_name(sf_dir: str) -> str:
@@ -149,9 +153,9 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
     whose fingerprint mismatches the current source files triggers a
     rebuild — both are dropped + rebuilt."""
     db = bucketed_db_name(sf_dir)
-    key = (id(spark), sf_dir)
+    ready = _READY.setdefault(spark, {})
     fp = _source_fingerprint(sf_dir)
-    if _READY.get(key) == (db, fp):
+    if ready.get(sf_dir) == (db, fp):
         return db
     marker = f"{db}.__rwbk_ready"
     if spark.catalog.tableExists(marker):
@@ -160,10 +164,10 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
         except Exception:  # noqa: BLE001 — legacy marker without fp
             stored = []
         if stored == [fp]:
-            _READY[key] = (db, fp)
+            ready[sf_dir] = (db, fp)
             return db
     elif _disk_marker_fp(spark, db) == fp and _adopt_on_disk(spark, db, sf_dir):
-        _READY[key] = (db, fp)
+        ready[sf_dir] = (db, fp)
         return db
 
     from risingwave_py_spark.core import RisingWaveConnection
@@ -196,13 +200,13 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
             except Exception:  # noqa: BLE001 — unreadable: rebuild
                 stored = []
             if stored == [fp]:
-                _READY[key] = (db, fp)
+                ready[sf_dir] = (db, fp)
                 return db
         elif (
             _disk_marker_fp(spark, db) == fp
             and _adopt_on_disk(spark, db, sf_dir)
         ):
-            _READY[key] = (db, fp)
+            ready[sf_dir] = (db, fp)
             return db
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         # a crashed prior process can leave the warehouse dir with no
@@ -226,7 +230,7 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
             eng.insert_df(tbl, src.repartition(BUCKETS, bkey), schema_name=db)
         spark.sql(f"CREATE TABLE {marker} (fp STRING) USING PARQUET")
         spark.sql(f"INSERT INTO {marker} VALUES ('{fp}')")
-        _READY[key] = (db, fp)
+        ready[sf_dir] = (db, fp)
         return db
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)

@@ -174,8 +174,9 @@ def test_fast_paths_rearm_after_restart(spark):
     """After an engine restart the IVM plans are gone (MVState
     restores with inc/inc_join/inc_joinagg = None). The FIRST refresh
     re-arms them from a freshly pinned induction base
-    (engine._prepare_fastpath_rearm); subsequent flushes — DML
-    included — run incrementally and stay exact."""
+    (SparkEngine._arm, the same path CREATE MATERIALIZED VIEW takes);
+    subsequent flushes — DML included — run incrementally and stay
+    exact."""
     tag = uuid.uuid4().hex[:8]
     t, f_, d = f"ra_t_{tag}", f"ra_f_{tag}", f"ra_d_{tag}"
     agg_mv, join_mv, ja_mv = f"ra_am_{tag}", f"ra_jm_{tag}", f"ra_jam_{tag}"

@@ -28,7 +28,7 @@ def conn(spark):
     current = spark.catalog.currentDatabase()
     eng = SparkEngine(spark=spark, default_schema=schema)
     yield RisingWaveConnection(eng), eng, schema
-    # Spark-path refreshes switch the session to the engine's schema;
+    # SparkEngine.sql switches the session to the engine's schema;
     # later tests resolve unqualified names against the current one
     spark.catalog.setCurrentDatabase(current)
     spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")

@@ -275,3 +275,35 @@ def test_fanout_decision_never_leaks_to_a_frame_reusing_an_id(spark):
         pytest.fail("no DataFrame reused a dead frame's id in 20 tries")
     assert fanout(wide) is wide, "a wide scan took the narrow frame's fan-out"
 
+
+
+def test_session_memos_never_leak_to_a_session_reusing_an_id(spark, sf_dir):
+    """The per-session memos hold their session weakly, not by id(),
+    so a new session that lands on a dead session's id starts with no
+    entry: it still gets UTC and Arrow, and registers its own views."""
+    from pyspark.sql import SparkSession
+
+    from risingwave_py_spark import catalog as C
+
+    for _ in range(20):
+        old = spark.newSession()
+        C.ensure_engine_conf(old)
+        # pyspark's RDD.toDF patch holds the newest session: make
+        # another so that ``del old`` frees it
+        holder = spark.newSession()  # noqa: F841
+        jss = spark._jsparkSession.newSession()
+        dead_id = id(old)
+        del old
+        # wrapping a ready JVM session allocates the Python object
+        # first: it almost always takes the slot just freed
+        new = SparkSession(spark.sparkContext, jss)
+        if id(new) == dead_id:
+            break
+    else:
+        pytest.fail("no session reused a dead session's id in 20 tries")
+    new.conf.set("spark.sql.session.timeZone", "America/New_York")
+    C.ensure_engine_conf(new)
+    assert new.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert not new.catalog.tableExists("region")
+    C.ensure_views(new, sf_dir)
+    assert new.catalog.tableExists("region")
