@@ -930,40 +930,25 @@ class SparkEngine:
             else:
                 df.write.mode("append").insertInto(fq)
             self._ensure_changelog(fq)
-            self._append_changelog(fq, df, OP_INSERT, epoch)
+            self._append_changelog_tagged(
+                fq, self._tag_ops([(df, OP_INSERT)]), epoch
+            )
         return epoch
 
-    def _append_changelog(self, fq: str, df: DataFrame, op: str, epoch: int) -> None:
-        """Single-op changelog append. Holds the engine lock so a
-        concurrently polling cursor (fetch_cursor) can never observe a
-        half-written epoch: an epoch whose rows arrive in several
-        appends (refresh_mv's UpdateDelete/UpdateInsert batches) is
-        published atomically relative to readers."""
-        cl = self.changelog_name(fq)
-        out = df.withColumn("op", F.lit(op)).withColumn(
-            "rw_timestamp", F.lit(epoch).cast("bigint")
-        )
-        # insertInto is positional; align to the changelog's physical
-        # column order (diverges from df order after ALTER ADD COLUMN,
-        # which appends past rw_timestamp). Missing cols → NULL.
-        phys = self.spark.table(cl).columns
-        out = out.select(
-            *[(F.col(c) if c in out.columns else F.lit(None)).alias(c) for c in phys]
-        )
-        with self._lock:
-            out.write.mode("append").insertInto(cl)
-            self._touch_epoch_marker(cl, epoch)
-
     def _append_changelog_tagged(self, fq: str, tagged: DataFrame, epoch: int) -> None:
-        """Append a multi-op delta (rows already carry ``op``) as ONE
-        epoch in ONE write. Caller holds the engine lock. This is the
-        no-collect publication path for MV refreshes: atomicity of the
-        epoch comes from the lock (fetch_cursor reads under the same
-        lock), not from materializing the delta on the driver — at
-        scale the delta can exceed driver memory (first refresh after a
-        bulk load: delta = the entire result)."""
+        """Append a delta whose rows already carry ``op`` (_tag_ops) as
+        ONE epoch in ONE write — an UPDATE's UpdateDelete/UpdateInsert
+        halves included. Caller holds the engine lock, so a
+        concurrently polling cursor (fetch_cursor reads under the same
+        lock) can never observe a half-written epoch. Atomicity comes
+        from the lock, not from materializing the delta on the driver —
+        at scale the delta can exceed driver memory (first refresh
+        after a bulk load: delta = the entire result)."""
         cl = self.changelog_name(fq)
         out = tagged.withColumn("rw_timestamp", F.lit(epoch).cast("bigint"))
+        # insertInto is positional; align to the changelog's physical
+        # column order (diverges from the delta's order after ALTER ADD
+        # COLUMN, which appends past rw_timestamp). Missing cols → NULL.
         phys = self.spark.table(cl).columns
         out = out.select(
             *[(F.col(c) if c in out.columns else F.lit(None)).alias(c) for c in phys]
@@ -981,6 +966,137 @@ class SparkEngine:
             t = df.withColumn("op", F.lit(op))
             tagged = t if tagged is None else tagged.unionByName(t)
         return tagged
+
+    # -- the refresh contract: one read step, one commit step --------------
+    #
+    # Every Spark-path MV refresh reads the unconsumed changelog suffix
+    # with _pending, computes its delta, and publishes it with _publish
+    # (the offset-log read and atomic sink commit of a Structured
+    # Streaming micro-batch). Refresh strategies differ only in between.
+
+    def _pending(self, state: MVState, attr: str, changelogs: list[str]):
+        """The read step. Caller holds the engine lock, so no
+        publication can change the suffix while it is read and used.
+
+        Returns False after clearing ``state.<attr>`` when a changelog's
+        vacuum floor has passed the last consumed epoch: the suffix is
+        no longer a complete delta (partner state comes from the TABLES,
+        which are the fold of every published epoch, so only the
+        unconsumed suffix matters), and the re-arm probe recovers the
+        fast path at the next refresh. Returns True after consuming one
+        epoch when nothing is new. Otherwise returns ``(m1, slices)``:
+        the ``(last_epoch, m1]`` slice of each changelog, checkpointed
+        (footer stats + epoch partitions prune the scan to the new
+        epochs)."""
+        last = state.last_epoch
+        # Floor check INSIDE the lock: vacuum_changelogs advances the
+        # floor and truncates under this lock, so checking outside it
+        # races a concurrent vacuum — the refresh would merge an
+        # incomplete delta and silently corrupt the MV.
+        if any(self.vacuum_floor.get(cl, 0) > last for cl in changelogs):
+            setattr(state, attr, None)  # unconsumed delta epochs vacuumed
+            return False
+        # High-water from partition metadata: a no-op refresh (the
+        # common case — FLUSH refreshes EVERY registered MV on every
+        # insert) costs zero Spark jobs.
+        m1 = max(self._changelog_max_epoch(cl) or 0 for cl in changelogs)
+        if m1 <= last:
+            self.next_epoch()  # refresh always consumes one epoch
+            return True  # bases unchanged — result already current
+        slices = []
+        for cl in changelogs:
+            self.spark.catalog.refreshTable(cl)
+            slices.append(
+                self.spark.table(cl)
+                .filter(
+                    (F.col("rw_timestamp") > last)
+                    & (F.col("rw_timestamp") <= m1)
+                )
+                .localCheckpoint(eager=True)
+            )
+        return m1, slices
+
+    def _stage(self, fq: str, df: DataFrame,
+               partition_by: list[str] | None = None) -> str:
+        """Write ``df`` to ``fq``'s stage table ``db.__rw_stage__<tbl>``
+        and return its name, for _publish or _rewrite_table to swap in.
+        The ``__rw_`` prefix hides it from SHOW TABLES and
+        information_schema; a stage directory a crashed process left
+        behind is cleared first, or the write would fail."""
+        db, tbl = _split_fq(fq)
+        stage = f"{db}.__rw_stage__{tbl}"
+        self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
+        self._clear_stale_location(stage)
+        w = df.write.format("parquet")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.saveAsTable(stage)
+        return stage
+
+    def _publish(self, fq: str, tagged: DataFrame | None, *,
+                 rows: DataFrame | None = None,
+                 stage: str | None = None) -> int:
+        """The commit step: assign the refresh's epoch, append
+        ``tagged`` (op-carrying rows, or None when the refresh changed
+        nothing) to the changelog as that ONE epoch, and bring the
+        stored table along — append ``rows``, or swap ``stage`` (from
+        _stage) in — all under ONE hold of the engine lock. A locked
+        reader (cursor polls, other refreshes' delta reads) therefore
+        never sees the new epoch against the old table rows, a missing
+        table in the drop/rename window, or an epoch still being
+        written (the insert_df contract). With nothing to publish the
+        epoch is still consumed and the stage is dropped. Returns the
+        epoch."""
+        spark = self.spark
+        self._ensure_changelog(fq)
+        with self._lock:
+            # Epoch is assigned at publish time, under the same lock as
+            # the append: changelog epochs are therefore strictly
+            # monotone in publication order, never just in assignment
+            # order.
+            epoch = self.next_epoch()
+            if tagged is None:
+                if stage is not None:
+                    spark.sql(f"DROP TABLE IF EXISTS {stage}")
+                return epoch
+            self._append_changelog_tagged(fq, tagged, epoch)
+            if stage is not None:
+                spark.sql(f"DROP TABLE IF EXISTS {fq}")
+                spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
+            else:
+                rows.write.mode("append").format("parquet").saveAsTable(fq)
+            spark.catalog.refreshTable(fq)
+        return epoch
+
+    def _publish_net(
+        self,
+        state: MVState,
+        netins: DataFrame | None,
+        netdel: DataFrame | None,
+    ) -> bool:
+        """Publish a net Insert/Delete bag delta (either side may be
+        None or empty): a delete-free batch appends to the stored table,
+        any delete rewrites it through a stage swap (``exceptAll`` is
+        bag-exact). One epoch either way (the engine's
+        one-epoch-per-refresh invariant)."""
+        fq = state.fq
+        ins_empty = netins is None or netins.isEmpty()
+        del_empty = netdel is None or netdel.isEmpty()
+        if ins_empty and del_empty:
+            self.next_epoch()
+            return True
+        batches = [] if del_empty else [(netdel, OP_DELETE)]
+        if not ins_empty:
+            batches.append((netins, OP_INSERT))
+        tagged = self._tag_ops(batches)
+        if del_empty:
+            self._publish(fq, tagged, rows=netins)
+            return True
+        new_result = self.spark.table(fq).exceptAll(netdel)
+        if not ins_empty:
+            new_result = new_result.unionByName(netins)
+        self._publish(fq, tagged, stage=self._stage(fq, new_result))
+        return True
 
     # -- catalog surface: SHOW / DESCRIBE / ALTER (PG+RW DDL parity) -------
 
@@ -1439,20 +1555,18 @@ class SparkEngine:
 
     def _rewrite_table(self, fq: str, transform,
                        partition_by: list[str] | None = None) -> None:
-        """Stage-and-rename rewrite of a table (same pattern as
-        changelog vacuum): no self-overwrite read hazard, and readers
-        only ever see the old or the new complete table.
-        ``partition_by`` preserves a partitioned layout across the
-        rewrite (changelogs keep their epoch-pruning dirs)."""
-        stage = f"{fq}__alter_stage"
-        self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        w = transform(self.spark.table(fq)).write
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.saveAsTable(stage)
+        """Stage-and-rename rewrite of a table (DROP COLUMN, changelog
+        vacuum): no self-overwrite read hazard, and readers only ever
+        see the old or the new complete table. ``partition_by``
+        preserves a partitioned layout across the rewrite (changelogs
+        keep their epoch-pruning dirs)."""
+        stage = self._stage(fq, transform(self.spark.table(fq)), partition_by)
         self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
         self.spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-        self._forget(fq, self.changelog_name(fq))  # layout may have changed
+        # the data dir moved (and the layout may have changed): the
+        # direct ingest/fetch paths must re-resolve, not write into
+        # (or read from) the moved-away location
+        self._forget(fq, self.changelog_name(fq))
         if partition_by:
             # RENAME on a partitioned managed table drops partition
             # metadata — recover or the table reads as empty
@@ -1745,7 +1859,9 @@ class SparkEngine:
             epoch = self.next_epoch()
             remaining.write.mode("overwrite").insertInto(fq, overwrite=True)
             self._ensure_changelog(fq)
-            self._append_changelog(fq, deleted, OP_DELETE, epoch)
+            self._append_changelog_tagged(
+                fq, self._tag_ops([(deleted, OP_DELETE)]), epoch
+            )
         self.spark.catalog.refreshTable(fq)
         return self._returning(deleted, returning) if returning else n
 
@@ -1782,8 +1898,9 @@ class SparkEngine:
                 fq, overwrite=True
             )
             self._ensure_changelog(fq)
-            self._append_changelog(fq, old, OP_UPDATE_DELETE, epoch)
-            self._append_changelog(fq, new, OP_UPDATE_INSERT, epoch)
+            self._append_changelog_tagged(fq, self._tag_ops(
+                [(old, OP_UPDATE_DELETE), (new, OP_UPDATE_INSERT)]
+            ), epoch)
         self.spark.catalog.refreshTable(fq)
         return self._returning(new, returning) if returning else n
 
@@ -1893,7 +2010,9 @@ class SparkEngine:
             epoch = self.next_epoch()
             self._append_upsert_log(fq, deleted, epoch, deleted=True)
             self._ensure_changelog(fq)
-            self._append_changelog(fq, deleted, OP_DELETE, epoch)
+            self._append_changelog_tagged(
+                fq, self._tag_ops([(deleted, OP_DELETE)]), epoch
+            )
         self.spark.catalog.refreshTable(self.log_name(fq))
         return self._returning(deleted, returning) if returning else n
 
@@ -1928,8 +2047,9 @@ class SparkEngine:
             epoch = self.next_epoch()
             self._append_upsert_log(fq, new, epoch, deleted=False)
             self._ensure_changelog(fq)
-            self._append_changelog(fq, old, OP_UPDATE_DELETE, epoch)
-            self._append_changelog(fq, new, OP_UPDATE_INSERT, epoch)
+            self._append_changelog_tagged(fq, self._tag_ops(
+                [(old, OP_UPDATE_DELETE), (new, OP_UPDATE_INSERT)]
+            ), epoch)
         self.spark.catalog.refreshTable(self.log_name(fq))
         return self._returning(new, returning) if returning else n
 
@@ -3953,10 +4073,10 @@ class SparkEngine:
 
         The publish lock is held for the WHOLE refresh: partner tables
         are read LAZILY (no O(table) snapshot copies) and stay
-        consistent because every publication path acquires this same
-        re-entrant lock — the agg path's pin-under-lock contract,
-        extended to cover the computation instead of paying for a
-        materialized copy."""
+        consistent because every publication commits through _publish,
+        under this same re-entrant lock — the agg path's
+        pin-under-lock contract, extended to cover the computation
+        instead of paying for a materialized copy."""
         with self._lock:
             return self._refresh_incremental_join_locked(state)
 
@@ -3965,61 +4085,30 @@ class SparkEngine:
         spark = self.spark
         fq = state.fq
         a_fq, b_fq = incj["a_fq"], incj["b_fq"]
-        cl_a = self.changelog_name(a_fq)
-        cl_b = self.changelog_name(b_fq)
-        last = state.last_epoch
         how = incj.get("how", "inner")
-        with self._lock:
-            # Only the un-consumed delta suffix comes from the
-            # changelog (partner state is pinned TABLE snapshots — the
-            # table IS the fold of all published epochs, every
-            # publication swapping table + changelog under this lock),
-            # so the demotion rule is floor > last_epoch, same as the
-            # agg path — and the re-arm probe recovers the fast path
-            # at the next refresh.
-            if (
-                self.vacuum_floor.get(cl_a, 0) > last
-                or self.vacuum_floor.get(cl_b, 0) > last
-            ):
-                state.inc_join = None  # unconsumed epochs vacuumed
-                return False
-            ma = self._changelog_max_epoch(cl_a) or 0
-            mb = self._changelog_max_epoch(cl_b) or 0
-            m1 = max(ma, mb)
-            if m1 <= last:
-                self.next_epoch()
-                return True
-            spark.catalog.refreshTable(cl_a)
-            spark.catalog.refreshTable(cl_b)
-
-            def delta_slice(cl: str) -> DataFrame:
-                return (
-                    spark.table(cl)
-                    .filter(
-                        (F.col("rw_timestamp") > last)
-                        & (F.col("rw_timestamp") <= m1)
-                    )
-                    .localCheckpoint(eager=True)
-                )
-
-            da = delta_slice(cl_a)
-            db = delta_slice(cl_b)
-            da_ins = da.filter(
-                F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)
-            ).drop("op", "rw_timestamp")
-            db_ins = db.filter(
-                F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)
-            ).drop("op", "rw_timestamp")
-            da_del = da.filter(
-                F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE)
-            ).drop("op", "rw_timestamp")
-            db_del = db.filter(
-                F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE)
-            ).drop("op", "rw_timestamp")
-            a_has, b_has = not da_ins.isEmpty(), not db_ins.isEmpty()
-            has_del = not da_del.isEmpty() or not db_del.isEmpty()
-        # (The enclosing wrapper still holds the lock — tables below
-        # are read lazily and stay consistent through publication.)
+        p = self._pending(
+            state, "inc_join",
+            [self.changelog_name(a_fq), self.changelog_name(b_fq)],
+        )
+        if isinstance(p, bool):
+            return p
+        m1, (da, db) = p
+        da_ins = da.filter(
+            F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)
+        ).drop("op", "rw_timestamp")
+        db_ins = db.filter(
+            F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)
+        ).drop("op", "rw_timestamp")
+        da_del = da.filter(
+            F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE)
+        ).drop("op", "rw_timestamp")
+        db_del = db.filter(
+            F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE)
+        ).drop("op", "rw_timestamp")
+        a_has, b_has = not da_ins.isEmpty(), not db_ins.isEmpty()
+        has_del = not da_del.isEmpty() or not db_del.isEmpty()
+        # (The enclosing wrapper holds the lock — tables below are
+        # read lazily and stay consistent through publication.)
         # Expose only the partner tables some term will actually scan:
         # a fact-append flush on an inner/left join never touches the
         # fact table at all.
@@ -4071,7 +4160,7 @@ class SparkEngine:
 
         def _pad_retraction(preserved_view: str, delta_keys_view: str,
                             other_old: DataFrame, pairs, empty_view_src: str,
-                            swap: bool) -> DataFrame | None:
+                            swap: bool) -> DataFrame:
             """Rebuild the padded output rows of `preserved_view` rows
             whose join keys just became matched (keys of the other
             side's delta minus its pre-batch keys)."""
@@ -4103,11 +4192,10 @@ class SparkEngine:
                     out = spark.sql(
                         self._incj_stmt(incj, v_aff, v_empty, "left")
                     )
-                out = out.localCheckpoint(eager=True)
+                return out.localCheckpoint(eager=True)
             finally:
                 spark.catalog.dropTempView(v_aff)
                 spark.catalog.dropTempView(v_empty)
-            return None if out.isEmpty() else out
 
         try:
             # Terms with an empty delta side are SKIPPED outright —
@@ -4171,50 +4259,15 @@ class SparkEngine:
                     )
                 finally:
                     spark.catalog.dropTempView(v_bold)
-                if retr_b is not None:
-                    retr = (
-                        retr_b if retr is None else retr.unionByName(retr_b)
-                    )
+                retr = retr_b if retr is None else retr.unionByName(retr_b)
         finally:
             for v, made in ((v_da, True), (v_db, True), (v_aold, need_a),
                             (v_bfull, need_b), (v_afull, need_a)):
                 if made:
                     spark.catalog.dropTempView(v)
         state.last_epoch = m1
-        if delta_out.isEmpty() and retr is None:
-            self.next_epoch()
-            return True
-        self._ensure_changelog(fq)
-        tagged = delta_out.withColumn("op", F.lit(OP_INSERT))
-        if retr is not None:
-            tagged = retr.withColumn("op", F.lit(OP_DELETE)).unionByName(tagged)
-            # padded rows leave the result: bag-exact rewrite staged
-            # then swapped (same pattern as the aggregation path)
-            new_result = (
-                spark.table(fq).exceptAll(retr).unionByName(delta_out)
-            )
-            db_, tbl_ = _split_fq(fq)
-            stage = f"{db_}.__rw_stage__{tbl_}"
-            spark.sql(f"DROP TABLE IF EXISTS {stage}")
-            self._clear_stale_location(stage)
-            new_result.write.format("parquet").saveAsTable(stage)
-            # Swap + changelog publication under ONE lock acquisition:
-            # a concurrent reader must never observe the new changelog
-            # epoch against the old table rows (or a missing table in
-            # the drop/rename window) — same contract as insert_df.
-            with self._lock:
-                epoch = self.next_epoch()
-                self._append_changelog_tagged(fq, tagged, epoch)
-                spark.sql(f"DROP TABLE IF EXISTS {fq}")
-                spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-                spark.catalog.refreshTable(fq)
-        else:
-            with self._lock:
-                epoch = self.next_epoch()
-                self._append_changelog_tagged(fq, tagged, epoch)
-                delta_out.write.mode("append").format("parquet").saveAsTable(fq)
-                spark.catalog.refreshTable(fq)
-        return True
+        # padded rows that leave the result (retr) make it a rewrite
+        return self._publish_net(state, delta_out, retr)
 
     def _join_retract_refresh(
         self,
@@ -4308,35 +4361,7 @@ class SparkEngine:
             for v in names:
                 spark.catalog.dropTempView(v)
         state.last_epoch = m1
-        if netdel.isEmpty() and netins.isEmpty():
-            self.next_epoch()
-            return True
-        self._ensure_changelog(fq)
-        tagged = netdel.withColumn("op", F.lit(OP_DELETE)).unionByName(
-            netins.withColumn("op", F.lit(OP_INSERT))
-        )
-        if netdel.isEmpty():
-            with self._lock:
-                epoch = self.next_epoch()
-                self._append_changelog_tagged(fq, tagged, epoch)
-                netins.write.mode("append").format("parquet").saveAsTable(fq)
-                spark.catalog.refreshTable(fq)
-            return True
-        new_result = spark.table(fq).exceptAll(netdel).unionByName(netins)
-        db_, tbl_ = _split_fq(fq)
-        stage = f"{db_}.__rw_stage__{tbl_}"
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self._clear_stale_location(stage)
-        new_result.write.format("parquet").saveAsTable(stage)
-        # Swap + changelog publication under ONE lock acquisition
-        # (same contract as the insert path above).
-        with self._lock:
-            epoch = self.next_epoch()
-            self._append_changelog_tagged(fq, tagged, epoch)
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
-        return True
+        return self._publish_net(state, netins, netdel)
 
     # -- session-window MVs: touched-span recompute ---------------------
 
@@ -4515,25 +4540,13 @@ class SparkEngine:
         plan = state.inc_session
         spark = self.spark
         fq = state.fq
-        cl = self.changelog_name(plan["base_fq"])
-        last = state.last_epoch
-        if self.vacuum_floor.get(cl, 0) > last:
-            state.inc_session = None
-            return False
-        m1 = self._changelog_max_epoch(cl)
-        if m1 is None or m1 <= last:
-            self.next_epoch()
-            return True
-        spark.catalog.refreshTable(cl)
-        delta = (
-            spark.table(cl)
-            .filter(
-                (F.col("rw_timestamp") > last)
-                & (F.col("rw_timestamp") <= m1)
-            )
-            .drop("op", "rw_timestamp")
-            .localCheckpoint(eager=True)
+        p = self._pending(
+            state, "inc_session", [self.changelog_name(plan["base_fq"])]
         )
+        if isinstance(p, bool):
+            return p
+        m1, (delta,) = p
+        delta = delta.drop("op", "rw_timestamp")
         tag = "_".join(_split_fq(fq))
         col, gap = plan["col"], plan["gap_us"]
         base_keys = [c for c, _ in plan["key_map"]]
@@ -4651,33 +4664,7 @@ class SparkEngine:
         netdel = old_rows.exceptAll(new_rows).localCheckpoint(eager=True)
         netins = new_rows.exceptAll(old_rows).localCheckpoint(eager=True)
         state.last_epoch = m1
-        if netdel.isEmpty() and netins.isEmpty():
-            self.next_epoch()
-            return True
-        self._ensure_changelog(fq)
-        tagged = netdel.withColumn("op", F.lit(OP_DELETE)).unionByName(
-            netins.withColumn("op", F.lit(OP_INSERT))
-        )
-        if netdel.isEmpty():
-            with self._lock:
-                epoch = self.next_epoch()
-                self._append_changelog_tagged(fq, tagged, epoch)
-                netins.write.mode("append").format("parquet").saveAsTable(fq)
-                spark.catalog.refreshTable(fq)
-            return True
-        new_result = spark.table(fq).exceptAll(netdel).unionByName(netins)
-        db_, tbl_ = _split_fq(fq)
-        stage = f"{db_}.__rw_stage__{tbl_}"
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self._clear_stale_location(stage)
-        new_result.write.format("parquet").saveAsTable(stage)
-        with self._lock:
-            epoch = self.next_epoch()
-            self._append_changelog_tagged(fq, tagged, epoch)
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
-        return True
+        return self._publish_net(state, netins, netdel)
 
     # -- N-way plain-join MVs (no aggregate): signed telescoping delta --
 
@@ -5015,8 +5002,9 @@ class SparkEngine:
 
         The publish lock is held for the WHOLE refresh (re-entrant):
         partner tables are read lazily — no O(table) snapshot copies —
-        and stay consistent because every publication path acquires
-        this same lock (the inc_join/inc_joinagg contract)."""
+        and stay consistent because every publication commits through
+        _publish, under this same lock (the inc_join/inc_joinagg
+        contract)."""
         with self._lock:
             return self._refresh_incremental_join_nway_locked(state)
 
@@ -5024,28 +5012,15 @@ class SparkEngine:
         plan = state.inc_join_nway
         spark = self.spark
         fq = state.fq
-        last = state.last_epoch
-        cls = [self.changelog_name(b) for b, _ in plan["sides"]]
-        # Same demotion rule as the other join paths: only the
-        # unconsumed delta suffix comes from the changelogs.
-        if any(self.vacuum_floor.get(cl, 0) > last for cl in cls):
-            state.inc_join_nway = None
-            return False
-        m1 = max(self._changelog_max_epoch(cl) or 0 for cl in cls)
-        if m1 <= last:
-            self.next_epoch()
-            return True
+        p = self._pending(
+            state, "inc_join_nway",
+            [self.changelog_name(b) for b, _ in plan["sides"]],
+        )
+        if isinstance(p, bool):
+            return p
+        m1, slices = p
         deltas: list[tuple] = []  # (ins_df, del_df, has_ins, has_del)
-        for cl in cls:
-            spark.catalog.refreshTable(cl)
-            d = (
-                spark.table(cl)
-                .filter(
-                    (F.col("rw_timestamp") > last)
-                    & (F.col("rw_timestamp") <= m1)
-                )
-                .localCheckpoint(eager=True)
-            )
+        for d in slices:
             ins = d.filter(
                 F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)
             ).drop("op", "rw_timestamp")
@@ -5062,7 +5037,7 @@ class SparkEngine:
         if plan.get("mode") == "star":
             netins, netdel = self._star_nway_diff(plan, deltas, tabs, tag)
             state.last_epoch = m1
-            return self._publish_nway_net(state, netins, netdel)
+            return self._publish_net(state, netins, netdel)
         pos: list[DataFrame] = []
         neg: list[DataFrame] = []
         made: list[str] = []
@@ -5124,56 +5099,7 @@ class SparkEngine:
         else:
             self.next_epoch()
             return True
-        return self._publish_nway_net(state, netins, netdel)
-
-    def _publish_nway_net(
-        self,
-        state: MVState,
-        netins: DataFrame | None,
-        netdel: DataFrame | None,
-    ) -> bool:
-        """Publish a net Insert/Delete bag delta for an N-way join MV:
-        changelog append + stored-table append (delete-free batch) or
-        stage-and-swap, one epoch either way (the engine's
-        one-epoch-per-refresh invariant)."""
-        spark = self.spark
-        fq = state.fq
-        ins_empty = netins is None or netins.isEmpty()
-        del_empty = netdel is None or netdel.isEmpty()
-        if ins_empty and del_empty:
-            self.next_epoch()
-            return True
-        self._ensure_changelog(fq)
-        tagged = None
-        if not del_empty:
-            tagged = netdel.withColumn("op", F.lit(OP_DELETE))
-        if not ins_empty:
-            t_ins = netins.withColumn("op", F.lit(OP_INSERT))
-            tagged = t_ins if tagged is None else tagged.unionByName(t_ins)
-        if del_empty:
-            with self._lock:
-                epoch = self.next_epoch()
-                self._append_changelog_tagged(fq, tagged, epoch)
-                netins.write.mode("append").format("parquet").saveAsTable(fq)
-                spark.catalog.refreshTable(fq)
-            return True
-        new_result = spark.table(fq).exceptAll(netdel)
-        if not ins_empty:
-            new_result = new_result.unionByName(netins)
-        db_, tbl_ = _split_fq(fq)
-        stage = f"{db_}.__rw_stage__{tbl_}"
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self._clear_stale_location(stage)
-        new_result.write.format("parquet").saveAsTable(stage)
-        # Swap + changelog publication under ONE lock acquisition
-        # (same contract as the other join paths).
-        with self._lock:
-            epoch = self.next_epoch()
-            self._append_changelog_tagged(fq, tagged, epoch)
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
-        return True
+        return self._publish_net(state, netins, netdel)
 
     # -- UNION ALL MVs: linear bag-sum delta ----------------------------
 
@@ -5280,29 +5206,15 @@ class SparkEngine:
         plan = state.inc_union
         spark = self.spark
         fq = state.fq
-        last = state.last_epoch
         fqs = sorted({br["tbl_fq"] for br in plan["branches"]})
-        cls = {b: self.changelog_name(b) for b in fqs}
-        if any(self.vacuum_floor.get(cl, 0) > last for cl in cls.values()):
-            state.inc_union = None  # unconsumed epochs vacuumed
-            return False
-        m1 = max(
-            self._changelog_max_epoch(cl) or 0 for cl in cls.values()
+        p = self._pending(
+            state, "inc_union", [self.changelog_name(b) for b in fqs]
         )
-        if m1 <= last:
-            self.next_epoch()
-            return True
+        if isinstance(p, bool):
+            return p
+        m1, slices = p
         deltas: dict[str, tuple] = {}
-        for b, cl in cls.items():
-            spark.catalog.refreshTable(cl)
-            d = (
-                spark.table(cl)
-                .filter(
-                    (F.col("rw_timestamp") > last)
-                    & (F.col("rw_timestamp") <= m1)
-                )
-                .localCheckpoint(eager=True)
-            )
+        for b, d in zip(fqs, slices):
             ins = d.filter(
                 F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)
             ).drop("op", "rw_timestamp")
@@ -5364,7 +5276,7 @@ class SparkEngine:
             for v in made:
                 spark.catalog.dropTempView(v)
         state.last_epoch = m1
-        return self._publish_nway_net(state, netins, netdel)
+        return self._publish_net(state, netins, netdel)
 
     # -- SELECT DISTINCT MVs: touched-value membership recompute --------
 
@@ -5462,25 +5374,13 @@ class SparkEngine:
         plan = state.inc_distinct
         spark = self.spark
         fq = state.fq
-        last = state.last_epoch
-        cl = self.changelog_name(plan["tbl_fq"])
-        if self.vacuum_floor.get(cl, 0) > last:
-            state.inc_distinct = None  # unconsumed epochs vacuumed
-            return False
-        m1 = self._changelog_max_epoch(cl) or 0
-        if m1 <= last:
-            self.next_epoch()
-            return True
-        spark.catalog.refreshTable(cl)
-        d = (
-            spark.table(cl)
-            .filter(
-                (F.col("rw_timestamp") > last)
-                & (F.col("rw_timestamp") <= m1)
-            )
-            .drop("op", "rw_timestamp")
-            .localCheckpoint(eager=True)
+        p = self._pending(
+            state, "inc_distinct", [self.changelog_name(plan["tbl_fq"])]
         )
+        if isinstance(p, bool):
+            return p
+        m1, (d,) = p
+        d = d.drop("op", "rw_timestamp")
         tag = "_".join(_split_fq(fq))
         v_d = f"__rw_dx_d_{tag}"
         v_t = f"__rw_dx_t_{tag}"
@@ -5533,7 +5433,7 @@ class SparkEngine:
             eager=True
         )
         state.last_epoch = m1
-        return self._publish_nway_net(state, netins, netdel)
+        return self._publish_net(state, netins, netdel)
 
     def create_mv(
         self,
@@ -5793,11 +5693,7 @@ class SparkEngine:
         delta = fresh.localCheckpoint(eager=True)
         if delta.isEmpty():
             return
-        epoch = self.next_epoch()
-        self._ensure_changelog(fq)
-        with self._lock:
-            delta.write.mode("append").insertInto(fq)
-            self._append_changelog(fq, delta, OP_INSERT, epoch)
+        self._publish(fq, self._tag_ops([(delta, OP_INSERT)]), rows=delta)
 
     def _refresh_incremental(self, state: MVState) -> bool:
         """Delta-merge refresh for a simple-agg MV — RETRACTION
@@ -5815,30 +5711,14 @@ class SparkEngine:
         spark = self.spark
         fq = state.fq
         tag = "_".join(_split_fq(fq))
-        base_cl = self.changelog_name(inc["base_fq"])
         r_keys = r_rows = None
         with self._lock:
-            # Floor check INSIDE the lock: vacuum_changelogs advances
-            # the floor and truncates under this lock, so checking
-            # outside it races a concurrent vacuum — the refresh would
-            # merge an incomplete delta and silently corrupt the MV.
-            if self.vacuum_floor.get(base_cl, 0) > state.last_epoch:
-                state.inc = None  # unconsumed delta epochs were vacuumed
-                return False
-            # High-water from partition metadata: a no-op refresh (the
-            # common case — FLUSH refreshes EVERY registered MV on
-            # every insert) costs zero Spark jobs.
-            m1 = self._changelog_max_epoch(base_cl)
-            if m1 is None or m1 <= state.last_epoch:
-                self.next_epoch()  # refresh always consumes one epoch
-                return True  # base unchanged — result already current
-            spark.catalog.refreshTable(base_cl)
-            pending = spark.table(base_cl).filter(
-                F.col("rw_timestamp") > state.last_epoch
+            p = self._pending(
+                state, "inc", [self.changelog_name(inc["base_fq"])]
             )
-            delta = pending.filter(F.col("rw_timestamp") <= m1).localCheckpoint(
-                eager=True
-            )
+            if isinstance(p, bool):
+                return p
+            m1, (delta,) = p
             recomp = bool(inc.get("recompute_only"))
             if recomp:
                 # Recompute-only plan (non-mergeable aggregates): EVERY
@@ -6130,29 +6010,12 @@ class SparkEngine:
         if retract is not None:
             # retraction-touched groups re-enter as their re-agg rows
             new_result = new_result.unionByName(repl_rows)
-        db, tbl = _split_fq(fq)
-        stage = f"{db}.__rw_stage__{tbl}"
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self._clear_stale_location(stage)
-        new_result.write.format("parquet").saveAsTable(stage)
-        self._ensure_changelog(fq)
+        stage = self._stage(fq, new_result)
         # One op-tagged delta, checkpointed on executors (tdf already
         # is; the branches are cheap projections of it), published as a
         # single append under the lock — no driver-side collect.
         tagged = self._tag_ops(batches).localCheckpoint(eager=True)
-        any_change = not tagged.isEmpty()
-        # Swap + changelog publication under ONE lock acquisition
-        # (same reader-consistency contract as insert_df and the
-        # join fast path).
-        with self._lock:
-            epoch = self.next_epoch()
-            if any_change:
-                self._append_changelog_tagged(fq, tagged, epoch)
-                spark.sql(f"DROP TABLE IF EXISTS {fq}")
-                spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-                spark.catalog.refreshTable(fq)
-        if not any_change:
-            spark.sql(f"DROP TABLE IF EXISTS {stage}")
+        self._publish(fq, None if tagged.isEmpty() else tagged, stage=stage)
         state.last_epoch = m1
 
     # -- incremental JOIN + AGGREGATION MVs (the star-join aggregate) --
@@ -6555,8 +6418,8 @@ class SparkEngine:
 
         SCALE DESIGN: partner-side relations are pinned TABLE
         snapshots, never changelog folds — the table IS the fold of
-        all published epochs (every publication swaps table +
-        changelog under one lock), so cost is O(table), not
+        all published epochs (_publish swaps table + changelog under
+        one hold of the engine lock), so cost is O(table), not
         O(history); pre-batch state is recovered algebraically as
         (table + Δdel) − Δins — add-before-subtract, or bag
         subtraction drops phantom rows (engine.py:2161 invariant).
@@ -6568,14 +6431,14 @@ class SparkEngine:
         semi-restricts that side to the touched keys BEFORE the join.
 
         Vacuum guard: only the un-consumed delta suffix comes from the
-        changelog, so the demotion rule is floor > last_epoch (same as
-        the single-table agg path) — and the re-arm probe recovers the
-        fast path at the next refresh.
+        changelog, so _pending's demotion rule (floor > last_epoch)
+        applies — and the re-arm probe recovers the fast path at the
+        next refresh.
 
         The publish lock is held for the WHOLE refresh (re-entrant):
         partner tables are read lazily with no snapshot copies, and
-        stay consistent because every publication path acquires the
-        same lock."""
+        stay consistent because every publication commits through
+        _publish, under the same lock."""
         with self._lock:
             return self._refresh_incremental_joinagg_locked(state)
 
@@ -6585,46 +6448,30 @@ class SparkEngine:
         fq = state.fq
         n = len(incja["sides"])
         bases = [b for b, _ in incja["sides"]]
-        cls = [self.changelog_name(b) for b in bases]
-        last = state.last_epoch
-        with self._lock:
-            if any(self.vacuum_floor.get(cl, 0) > last for cl in cls):
-                state.inc_joinagg = None  # unconsumed epochs vacuumed
-                return False
-            m1 = max(self._changelog_max_epoch(cl) or 0 for cl in cls)
-            if m1 <= last:
-                self.next_epoch()
-                return True
-            for cl in cls:
-                spark.catalog.refreshTable(cl)
-            logs = [spark.table(cl) for cl in cls]
-            # Pin the delta slices (cheap — footer stats + epoch
-            # partitions prune the scan to the new epochs).
-            deltas = [
-                lg.filter(
-                    (F.col("rw_timestamp") > last)
-                    & (F.col("rw_timestamp") <= m1)
-                ).localCheckpoint(eager=True)
-                for lg in logs
-            ]
-            ins_rows = [
-                d.filter(F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)).drop(
-                    "op", "rw_timestamp"
-                )
-                for d in deltas
-            ]
-            del_rows = [
-                d.filter(F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE)).drop(
-                    "op", "rw_timestamp"
-                )
-                for d in deltas
-            ]
-            has_ins = [not r.isEmpty() for r in ins_rows]
-            has_del_i = [not r.isEmpty() for r in del_rows]
-            has_del = any(has_del_i)
-        # (The enclosing wrapper still holds the lock — tables below
-        # are read lazily, no snapshot copies, consistent through
-        # publication.) Expose only the sides some term actually
+        p = self._pending(
+            state, "inc_joinagg", [self.changelog_name(b) for b in bases]
+        )
+        if isinstance(p, bool):
+            return p
+        m1, deltas = p
+        ins_rows = [
+            d.filter(F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT)).drop(
+                "op", "rw_timestamp"
+            )
+            for d in deltas
+        ]
+        del_rows = [
+            d.filter(F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE)).drop(
+                "op", "rw_timestamp"
+            )
+            for d in deltas
+        ]
+        has_ins = [not r.isEmpty() for r in ins_rows]
+        has_del_i = [not r.isEmpty() for r in del_rows]
+        has_del = any(has_del_i)
+        # (The enclosing wrapper holds the lock — tables below are read
+        # lazily, no snapshot copies, consistent through publication.)
+        # Expose only the sides some term actually
         # reads: all sides when retracting (or on the recompute-only
         # plan, whose re-agg reads every side), otherwise the partners
         # of sides with a non-empty insert delta.
@@ -7103,41 +6950,16 @@ class SparkEngine:
         fq = state.fq
         tag = "_".join(_split_fq(fq))
         base_fq = t["base_fq"]
-        base_cl = self.changelog_name(base_fq)
         part = t["part_cols"]
         with self._lock:
-            if self.vacuum_floor.get(base_cl, 0) > state.last_epoch:
-                state.inc_topn = None
-                return False
-            # No-op refresh decided from partition metadata — zero jobs
-            # when nothing changed (FLUSH refreshes every MV).
-            m_meta = self._changelog_max_epoch(base_cl)
-            if m_meta is None or m_meta <= state.last_epoch:
-                self.next_epoch()
-                return True
-            spark.catalog.refreshTable(base_cl)
-            # Publications take the same lock, so the pending suffix is
-            # stable here: checkpoint it once, then read the watermark
-            # and the has-deletes flag from the pinned copy in ONE pass
-            # (each avoided action is ~0.2 s of dispatch floor — the
-            # dominant refresh cost when deltas are small).
-            delta = (
-                spark.table(base_cl)
-                .filter(F.col("rw_timestamp") > state.last_epoch)
-                .localCheckpoint(eager=True)
-            )
-            m1, n_del = delta.agg(
-                F.max("rw_timestamp"),
-                F.count(
-                    F.when(
-                        F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE), 1
-                    )
-                ),
-            ).first()
-            if m1 is None:
-                self.next_epoch()
-                return True
-            insert_only = n_del == 0
+            p = self._pending(state, "inc_topn", [self.changelog_name(base_fq)])
+            if isinstance(p, bool):
+                return p
+            m1, (delta,) = p
+            # an insert-only batch re-ranks from stored winners (below)
+            insert_only = delta.filter(
+                F.col("op").isin(OP_DELETE, OP_UPDATE_DELETE)
+            ).isEmpty()
             # Touched partitions: delta rows that pass the MV's WHERE —
             # rows failing it can never change a ranking.
             v_delta = f"__rw_topn_delta_{tag}"
@@ -7220,26 +7042,11 @@ class SparkEngine:
                 spark.catalog.dropTempView(v_cand)
         # Outside the lock: diff + stage write (inputs are pinned).
         inserts, deletes = self._bag_diff_ops(old_touched, new_rows, cols)
-        new_result = old_keep.unionByName(new_rows)
-        db, tbl = _split_fq(fq)
-        stage = f"{db}.__rw_stage__{tbl}"
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self._clear_stale_location(stage)
-        new_result.write.format("parquet").saveAsTable(stage)
-        self._ensure_changelog(fq)
+        stage = self._stage(fq, old_keep.unionByName(new_rows))
         tagged = self._tag_ops(
             [(deletes, OP_DELETE), (inserts, OP_INSERT)]
         ).localCheckpoint(eager=True)
-        any_change = not tagged.isEmpty()
-        with self._lock:
-            epoch = self.next_epoch()
-            if any_change:
-                self._append_changelog_tagged(fq, tagged, epoch)
-                spark.sql(f"DROP TABLE IF EXISTS {fq}")
-                spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-                spark.catalog.refreshTable(fq)
-        if not any_change:
-            spark.sql(f"DROP TABLE IF EXISTS {stage}")
+        self._publish(fq, None if tagged.isEmpty() else tagged, stage=stage)
         state.last_epoch = m1
         return True
 
@@ -7320,16 +7127,12 @@ class SparkEngine:
             except Exception:  # pragma: no cover - defensive
                 logger.exception("fast-path re-arm of %s failed", fq)
                 state.fastpath_blocked = True
-        db, tbl = _split_fq(fq)
-        stage = f"{db}.__rw_stage__{tbl}"
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self._clear_stale_location(stage)
         src, views, finalize = armed or (
             spark.sql(RW.rewrite_query(state.stmt, self.version_string)),
             [], None,
         )
         try:
-            src.write.format("parquet").saveAsTable(stage)
+            stage = self._stage(fq, src)
         finally:
             for v in views:
                 spark.catalog.dropTempView(v)
@@ -7369,33 +7172,14 @@ class SparkEngine:
             inserts, deletes = self._bag_diff_ops(old, new, cols)
             batches = [(deletes, OP_DELETE), (inserts, OP_INSERT)]
 
-        self._ensure_changelog(fq)
         # Publish the whole epoch as ONE op-tagged DataFrame in ONE
         # append: a concurrently polling cursor must never see an epoch
         # with its UpdateDelete half but not yet its UpdateInsert half
         # (it would advance past the epoch and drop the missing rows
-        # forever). Atomicity comes from the engine lock — fetch_cursor
-        # reads under it — not from collecting the delta to the driver,
-        # which at scale (first refresh after a bulk load: delta = the
-        # entire result) is a driver OOM. The checkpoint materializes
-        # the diff on executors exactly once.
+        # forever). The checkpoint materializes the diff on executors
+        # exactly once.
         tagged = self._tag_ops(batches).localCheckpoint(eager=True)
-        any_change = not tagged.isEmpty()
-        with self._lock:
-            # Epoch is assigned at publish time, under the same lock as
-            # the append: changelog epochs are therefore strictly
-            # monotone in publication order, never just in assignment
-            # order.
-            epoch = self.next_epoch()
-            if any_change:
-                self._append_changelog_tagged(fq, tagged, epoch)
-
-        if any_change:
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
-        else:
-            spark.sql(f"DROP TABLE IF EXISTS {stage}")
+        self._publish(fq, None if tagged.isEmpty() else tagged, stage=stage)
         if finalize is not None:
             # Published from the pinned induction base: re-enter the
             # fast path with last_epoch = the pinned watermark.
@@ -7676,25 +7460,12 @@ class SparkEngine:
             # there is nothing droppable below the survivor — no-op.
             return
         self.vacuum_floor[cl] = max(self.vacuum_floor.get(cl, 0), keep_from - 1)
-        stage = f"{cl}__vacuum_stage"
-        self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        (
-            self.spark.table(cl)
-            .filter(F.col("rw_timestamp") >= keep_from)
-            .write.partitionBy("rw_timestamp")  # keep the pruning layout
-            .saveAsTable(stage)
+        self._rewrite_table(
+            cl, lambda df: df.filter(F.col("rw_timestamp") >= keep_from),
+            partition_by=["rw_timestamp"],  # keep the pruning layout
         )
-        self.spark.sql(f"DROP TABLE IF EXISTS {cl}")
-        self.spark.sql(f"ALTER TABLE {stage} RENAME TO {cl}")
-        # the rewrite moved the changelog's data dir: the direct
-        # ingest/fetch paths must re-resolve, not write into (or read
-        # from) the moved-away location — and the epoch manifest must
-        # re-list (truncated epochs leave it; the new dir has no
-        # marker, so the (loc, sig) check re-hydrates on first use)
-        self._forget(cl)
+        # the rewrite moved the changelog's data dir, so the epoch
+        # manifest must re-list (truncated epochs leave it; the new dir
+        # has no marker, so the (loc, sig) check re-hydrates on first
+        # use)
         self._epoch_cache.pop(cl, None)
-        # RENAME on a PARTITIONED managed table moves the data dir but
-        # drops the partition metadata — recover it from the directory
-        # structure or the table reads as empty.
-        self.spark.catalog.recoverPartitions(cl)
-        self.spark.catalog.refreshTable(cl)
