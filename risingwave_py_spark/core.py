@@ -520,6 +520,10 @@ class RisingWaveConnection:
     ) -> None:
         """Blocking changelog consumption loop (core.py:364-427).
 
+        A commit to the subscribed relation's changelog wakes the loop
+        at once; the reference's 100 ms idle interval is now only an
+        upper bound on the wait (see Subscription._run).
+
         ``_stop_when_idle`` / ``_stop_event`` are engine extensions
         (not in the reference): return when the changelog is drained /
         when the event is set — the reference offers only
@@ -620,6 +624,13 @@ class Subscription:
              wait_interval_ms: int = DEFAULT_CURSOR_IDLE_INTERVAL_MS,
              cursor_name: str = "default", stop_when_idle: bool = False,
              stop_event=None) -> None:
+        """FETCH and hand each non-empty batch to the handler until
+        stopped. After an empty FETCH the loop waits for the next
+        commit to the subscribed changelog, for at most
+        ``wait_interval_ms``: the interval is an upper bound, not a
+        poll period. The cap covers commits that do not notify this
+        engine (another engine's, for one) and bounds how long
+        ``stop_event`` takes to end the loop."""
         cursor = f"{self.schema_name}.risingwave_py_cursor_{cursor_name}_{self.sub_name}"
         fq_sub = f"{self.schema_name}.{self.sub_name}"
 
@@ -636,17 +647,21 @@ class Subscription:
         else:
             self.conn.execute(f"DECLARE {cursor} subscription cursor for {fq_sub}")
 
+        eng = self.conn.engine
         while True:
             if stop_event is not None and stop_event.is_set():
                 break
             try:
+                # read BEFORE the FETCH: a commit landing during it
+                # then ends the wait below at once
+                seen = eng.cursor_commits(cursor)
                 data = self.conn.fetch(
                     f"FETCH {max_batch_size} FROM {cursor}", format=output_format
                 )
                 if data is None or len(data) == 0:
                     if stop_when_idle:
                         break
-                    time.sleep(wait_interval_ms / 1000)
+                    eng.wait_cursor_commit(cursor, seen, wait_interval_ms / 1000)
                     continue
                 out = self.handler(data)
                 # The reference TYPES handlers Awaitable (core.py:18)

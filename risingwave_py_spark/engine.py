@@ -297,6 +297,11 @@ class SparkEngine:
         # at ~140 epochs; 10⁵–10⁶ partitions at default retention).
         # {cl: {"loc": str, "sig": (mtime_ns, size), "epochs": set}}
         self._epoch_cache: dict[str, dict] = {}
+        # Commits per changelog and the condition subscribers wait on
+        # between FETCHes (cursor_commits / wait_cursor_commit):
+        # _touch_epoch_marker bumps the count and wakes the waiters.
+        self._commits: dict[str, int] = {}
+        self._committed = threading.Condition(threading.Lock())
         # Diagnostic counters for the zero-job direct MV path (r10
         # verdict #5: attribute the avg-MV p99 tail): how often a
         # flush fell through to the Spark paths, how often the re-arm
@@ -698,7 +703,14 @@ class SparkEngine:
         and this touch leaves live foreign readers one epoch behind
         until the next commit bumps the marker (their own restart
         re-lists) — the same at-least-once window the refresh commit
-        order already documents."""
+        order already documents.
+
+        Also counts the commit and wakes this engine's subscribers of
+        ``cl``. Every caller holds the engine lock, so a woken FETCH
+        queues on it and reads as soon as the commit releases it."""
+        with self._committed:
+            self._commits[cl] = self._commits.get(cl, 0) + 1
+            self._committed.notify_all()
         loc = self._table_location(cl)
         if loc is None:
             return
@@ -7251,11 +7263,12 @@ class SparkEngine:
         pending epochs come from the catalog's partition list (a
         metadata lookup, no Spark job), whole-epoch batching from
         parquet footer row counts, and the rows themselves through a
-        pyarrow read of just the chosen partition dirs. An IDLE poll —
-        the common case of the reference's 100 ms on_change loop —
-        costs one catalog lookup and ZERO jobs, so a thousand idle
-        subscriptions put no load on the cluster; a non-idle poll
-        reads only the unconsumed suffix. Returns None when the
+        pyarrow read of just the chosen partition dirs, each dir listed
+        once. An IDLE poll costs one catalog lookup and ZERO jobs, so
+        a thousand idle subscriptions put no load on the cluster; a
+        non-idle poll — which on_change makes as soon as a commit
+        wakes it, between the insert and its FLUSH — reads only the
+        unconsumed suffix. Returns None when the
         changelog is ineligible (legacy unpartitioned layout, missing
         location) — the Spark read below is the fallback. Caller holds
         the engine lock, so registered partitions are complete epochs."""
@@ -7282,7 +7295,7 @@ class SparkEngine:
             except OSError:
                 return []
 
-        chosen: list[int] = []
+        chosen: list[tuple[int, list[str]]] = []
         cum = 0
         for e in cand:
             files = part_files(e)
@@ -7290,14 +7303,14 @@ class SparkEngine:
             if chosen and cum + rows_e > n:
                 break
             cum += rows_e
-            chosen.append(e)
+            chosen.append((e, files))
             if cum >= n:
                 break
         phys = [f.name for f in self._relation_schema(cl).fields]
         data_cols = [c for c in phys if c != "rw_timestamp"]
         out: list[tuple] = []
-        for e in chosen:
-            for f in part_files(e):
+        for e, files in chosen:
+            for f in files:
                 t = pq.read_table(f)
                 cols_present = {
                     name: self._pa_column_pylist(t.column(name))
@@ -7308,7 +7321,29 @@ class SparkEngine:
                         cols_present[c][i] if c in cols_present else None
                         for c in data_cols
                     ) + (e,))
-        return phys, out, chosen[-1]
+        return phys, out, chosen[-1][0]
+
+    def cursor_commits(self, cursor: str) -> int:
+        """How many commits ``cursor``'s changelog has taken in this
+        engine. Read it BEFORE a FETCH; after an empty FETCH, hand it
+        to wait_cursor_commit."""
+        cl = self.changelog_name(self.cursors[cursor]["rel"])
+        with self._committed:
+            return self._commits.get(cl, 0)
+
+    def wait_cursor_commit(self, cursor: str, seen: int, timeout: float) -> bool:
+        """Block until ``cursor``'s changelog commits past ``seen`` (a
+        cursor_commits reading) or ``timeout`` seconds pass; True when
+        a commit ended the wait. A commit made since ``seen`` was read
+        — during the FETCH, say — ends it at once, so no wakeup is
+        lost. Commits to other changelogs do not end it. Holds only the
+        condition's lock, never the engine lock: committers take the
+        condition's lock inside the engine lock."""
+        cl = self.changelog_name(self.cursors[cursor]["rel"])
+        with self._committed:
+            return self._committed.wait_for(
+                lambda: self._commits.get(cl, 0) != seen, timeout
+            )
 
     def fetch_cursor(self, cursor: str, n: int) -> tuple[list[str], list[tuple]]:
         """FETCH n: deliver whole epochs, never splitting one across
