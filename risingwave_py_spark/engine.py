@@ -92,6 +92,34 @@ class _Records(dict):
         self.clears = 0
 
 
+class _SessionCatalog:
+    """JVM handles for calling a session's ``SessionCatalog`` directly,
+    the catalog the SQL DDL commands call underneath. Held per engine:
+    a ``jvm.pkg.Class`` lookup costs milliseconds, a call on a held
+    object a fraction of one. One ``TableIdentifier`` is kept per name."""
+
+    def __init__(self, spark: SparkSession):
+        jvm = spark.sparkContext._jvm
+        js = spark._jsparkSession
+        self.catalog = js.sessionState().catalog()
+        self._parser = js.sessionState().sqlParser()
+        self.cache = js.sharedState().cacheManager()
+        pkg = jvm.org.apache.spark.sql.catalyst.catalog
+        self.utils = pkg.CatalogUtils
+        self.partition = pkg.CatalogTablePartition
+        self.storage = pkg.CatalogStorageFormat
+        self.py = jvm.org.apache.spark.api.python.PythonUtils
+        self.option = jvm.scala.Option
+        self.no_params = self.py.toScalaMap({})
+        self._idents: dict[str, object] = {}
+
+    def ident(self, fq: str):
+        i = self._idents.get(fq)
+        if i is None:
+            i = self._idents[fq] = self._parser.parseTableIdentifier(fq)
+        return i
+
+
 # One record store per SparkContext: every engine on the context — and
 # on its newSession()s, which share the catalog — reads and clears the
 # SAME records, so one engine's DDL or table swap can never leave
@@ -147,10 +175,10 @@ class MVState:
         # small insert-only deltas over small stored results; larger
         # work falls through to self.inc / snapshot-diff.
         self.inc_direct: dict | None = None
-        # Whether the catalog accepts the direct path's ``ALTER TABLE
-        # SET LOCATION`` swap: None until the first direct refresh of
-        # this arm probes it (a no-op SET LOCATION, before any
-        # mutation), then the recorded answer. Reset whenever the
+        # Whether the catalog accepts the direct path's location swap
+        # (_set_location): None until the first direct refresh of this
+        # arm probes it (a no-op swap to the current location, before
+        # any mutation), then the recorded answer. Reset whenever the
         # direct plan (re-)arms.
         self.set_location_ok: bool | None = None
         # avg() companions for the direct plan: {group key tuple:
@@ -266,6 +294,7 @@ class SparkEngine:
 
             spark = build_session()
         self.spark = spark
+        self._jc = _SessionCatalog(spark)
         self.default_schema = default_schema
         self._lock = threading.RLock()
         self._epoch = 0
@@ -601,18 +630,19 @@ class SparkEngine:
         None until first asked}``, or None for a missing table, a view
         or a location that is not a local directory. The direct ingest,
         refresh and cursor paths consult it on every call instead of
-        asking the catalog (DESC FORMATTED, ``spark.table(..).schema``
-        and tableExists each cost a JVM round trip or more).
+        asking the catalog.
 
-        Who writes a record: a miss resolves it here with one DESC
-        FORMATTED (the schema on first use, in _relation_schema), and
-        _refresh_direct writes the MV's new generation dir after its
-        own SET LOCATION swap. Who clears it (_forget): every DDL that
-        moves a table's directory or changes its columns — DROP,
-        RENAME, ADD/DROP COLUMN, the stage-and-rename rewrites, vacuum
-        — and every publication of an MV that does not go through the
-        direct path (_refresh_mv_locked). Records are shared by all
-        engines on one SparkContext, so a clear by one is seen by all.
+        Who writes a record: a miss resolves it here with one
+        ``getTableMetadata`` (_catalog_entry; the schema on first use,
+        in _relation_schema; a changelog's partition storage at its
+        first _commit_partition), and _refresh_direct writes the MV's
+        new generation dir after its own _set_location swap. Who
+        clears it (_forget): every DDL that moves a table's directory
+        or changes its columns — DROP, RENAME, ADD/DROP COLUMN, the
+        stage-and-rename rewrites, vacuum — and every publication of
+        an MV that does not go through the direct path
+        (_refresh_mv_locked). Records are shared by all engines on one
+        SparkContext, so a clear by one is seen by all.
         One os.path.isdir per use still guards against a missed
         invalidation: a record whose dir is gone re-resolves, so the
         direct ingest path never writes into an orphaned directory."""
@@ -622,30 +652,91 @@ class SparkEngine:
                 return rec
             self._records.pop(fq, None)
         clears = self._records.clears
-        if not self.spark.catalog.tableExists(fq):
-            return None
-        loc, parts, mode = None, [], None
-        for r in self.spark.sql(f"DESC FORMATTED {fq}").collect():
-            cn = (r.col_name or "").strip()
-            if cn == "# Partition Information":
-                mode = "part"
-                continue
-            if cn == "# Detailed Table Information":
-                mode = "detail"
-                continue
-            if mode == "part":
-                if cn in ("", "# col_name") or cn.startswith("#"):
-                    continue
-                parts.append(cn)
-            elif mode == "detail" and cn == "Location":
-                loc = re.sub(r"^file:", "", r.data_type)
-        if loc is None or not os.path.isdir(loc):
+        entry = self._catalog_entry(fq)
+        if entry is None or not os.path.isdir(entry[0]):
             return None  # don't record a miss
-        rec = {"loc": loc, "parts": parts, "schema": None}
+        rec = {"loc": entry[0], "parts": entry[1], "schema": None}
         with self._records.lock:
             if self._records.clears == clears:
                 self._records[fq] = rec
         return rec
+
+    def _catalog_entry(self, fq: str) -> tuple[str, list[str]] | None:
+        """(location without its ``file:`` scheme, partition columns) of
+        a catalog table from one ``getTableMetadata``, or None for a
+        missing table or a view."""
+        from py4j.protocol import Py4JJavaError
+
+        jc = self._jc
+        try:
+            meta = jc.catalog.getTableMetadata(jc.ident(fq))
+        except (AnalysisException, Py4JJavaError):  # no such table
+            return None
+        if meta.tableType().name() == "VIEW":
+            return None
+        loc = re.sub(r"^file:", "", jc.utils.URIToString(meta.location()))
+        return loc, list(meta.partitionSchema().fieldNames())
+
+    # -- direct catalog commits --------------------------------------------
+    #
+    # The tick path's catalog changes, made through the session catalog
+    # instead of SQL DDL. Each makes the change its SQL command makes
+    # (ALTER TABLE ADD PARTITION, ALTER TABLE SET LOCATION, refreshTable)
+    # without the parsing and analysis, and leaves the catalog in the
+    # same state, so every Spark reader reads as before.
+
+    def _commit_partition(self, cl: str, epoch: int) -> None:
+        """Register the ``rw_timestamp=<epoch>`` partition of ``cl``,
+        whose directory the caller has written: ``ALTER TABLE cl ADD IF
+        NOT EXISTS PARTITION (rw_timestamp=<epoch>)`` as one
+        ``createPartitions`` call with the table's storage minus its
+        location (the catalog puts the partition at its default path),
+        then _invalidate."""
+        jc = self._jc
+        rec = self._relation(cl)
+        st = rec.get("part_storage")
+        if st is None:
+            s = jc.catalog.getTableMetadata(jc.ident(cl)).storage()
+            st = rec["part_storage"] = jc.storage(
+                jc.option.empty(), s.inputFormat(), s.outputFormat(),
+                s.serde(), s.compressed(), s.properties(),
+            )
+        part = jc.partition(
+            jc.py.toScalaMap({"rw_timestamp": str(epoch)}), st,
+            jc.no_params, int(time.time() * 1000), -1, jc.option.empty(),
+        )
+        jc.catalog.createPartitions(jc.ident(cl), jc.py.toSeq([part]), True)
+        self._invalidate(cl)
+
+    def _set_location(self, fq: str, loc: str) -> None:
+        """``ALTER TABLE fq SET LOCATION 'loc'`` as one ``alterTable``
+        of the table's metadata with the new storage location (and the
+        command's ``compressed=false``), then _invalidate. Raises when
+        the catalog refuses."""
+        jc = self._jc
+        meta = jc.catalog.getTableMetadata(jc.ident(fq))
+        s = meta.storage()
+        jc.catalog.alterTable(meta.withNewStorage(
+            jc.option.apply(jc.utils.stringToURI(loc)), s.inputFormat(),
+            s.outputFormat(), False, s.serde(), s.properties(),
+        ))
+        self._invalidate(fq)
+
+    def _invalidate(self, fq: str) -> None:
+        """Drop the session's cached relation of ``fq`` so the next
+        Spark read lists its files again. While any relation is cached
+        (CACHE TABLE), run ``spark.catalog.refreshTable`` instead, which
+        also re-caches the plans that read ``fq``.
+
+        Unlike refreshTable, this does not re-list a file index in
+        place: a DataFrame analyzed before the commit keeps the file
+        listing it was analyzed with. Every query issued after the
+        commit sees it."""
+        jc = self._jc
+        if jc.cache.isEmpty():
+            jc.catalog.invalidateCachedTable(jc.ident(fq))
+        else:
+            self.spark.catalog.refreshTable(fq)
 
     def _relation_schema(self, fq: str) -> "T.StructType":
         """Schema of ``fq``, from its record when there is one."""
@@ -696,8 +787,10 @@ class SparkEngine:
         """Record an epoch-partition commit: add it to this engine's
         in-memory manifest and bump the on-disk marker so OTHER
         processes' manifests detect the change and re-list. Called
-        AFTER the partition is registered in the catalog, so a
-        manifest is always a subset of the registered partitions (a
+        AFTER the partition is registered in the catalog (by
+        _commit_partition on the direct paths, by the Spark append on
+        the others), so a manifest is always a subset of the
+        registered partitions (a
         listed-but-unregistered epoch would make Spark-side delta
         reads silently skip its rows). A crash between registration
         and this touch leaves live foreign readers one epoch behind
@@ -809,8 +902,10 @@ class SparkEngine:
         """Direct row-group ingest for small LOCAL batches (the
         buffered-insert client path): write one parquet row group
         straight into the managed table's storage and one into the
-        changelog's epoch partition, then commit the partition to the
-        catalog — ZERO Spark jobs on the producer side. This is how a
+        changelog's epoch partition, register the partition
+        (_commit_partition) and drop the base table's cached relation
+        (_invalidate) through the session catalog — ZERO Spark jobs and
+        no SQL statement on the producer side. This is how a
         real engine lands a 1-row batch (ingest appends a row group +
         a metadata commit; distributed jobs are for queries) — the
         Spark-job spelling of the same append costs 2 job dispatches,
@@ -822,9 +917,10 @@ class SparkEngine:
         path (upsert tables, bucketed layouts, missing table,
         non-scalar column types, or values pyarrow cannot coerce —
         createDataFrame would reject those same values, so fallback
-        keeps error parity). Locked readers are safe at every step
-        (the engine lock covers the whole publication exactly like
-        the Spark path). Crash windows: the changelog epoch commits
+        keeps error parity). Locked readers are safe at every step:
+        one hold of the engine lock covers the whole publication, in
+        the order changelog file, partition commit, epoch marker, base
+        file, invalidation. Crash windows: the changelog epoch commits
         BEFORE the base-table file becomes visible, so a crash in
         between leaves the base one row group BEHIND the changelog —
         downstream consumers (MV refreshes, subscriptions) still see
@@ -905,17 +1001,13 @@ class SparkEngine:
             os.makedirs(pdir, exist_ok=True)
             commit_file(pa.table(cl_cols), pdir,
                         f"rwfast-{uuid.uuid4().hex}.parquet")
-            self.spark.sql(
-                f"ALTER TABLE {cl} ADD IF NOT EXISTS "
-                f"PARTITION (rw_timestamp={epoch})"
-            )
+            self._commit_partition(cl, epoch)
             self._touch_epoch_marker(cl, epoch)
             commit_file(pa.table(cols), loc,
                         f"rwfast-{epoch}-{uuid.uuid4().hex}.parquet")
-            # ADD PARTITION already dropped cl's cached listing; the
-            # base file landed in an already-listed dir, so fq's must
-            # be dropped by hand or readers miss the row
-            self.spark.catalog.refreshTable(fq)
+            # the base file landed in an already-listed dir: drop fq's
+            # cached listing or readers miss the row
+            self._invalidate(fq)
         return epoch
 
     def insert_df(self, name: str, df: DataFrame, schema_name: str | None = None) -> int:
@@ -1488,9 +1580,10 @@ class SparkEngine:
                         max_epoch = max(max_epoch, m or 0)
                         # also count ON-DISK partition dirs: a crash in
                         # the direct-ingest path between file write and
-                        # ADD PARTITION leaves a dir the catalog read
+                        # partition commit leaves a dir the catalog read
                         # can't see — its epoch must not be re-issued
-                        # (ADD IF NOT EXISTS would resurrect the
+                        # (_commit_partition registers whatever the
+                        # dir already holds, so it would resurrect the
                         # orphaned rows under the reused epoch)
                         try:
                             loc = self._table_location(f"{db}.{t.name}")
@@ -3480,8 +3573,8 @@ class SparkEngine:
         insert-only delta: pending epochs come from the changelog's
         partition metadata, the delta rows from a pyarrow read of just
         those partition dirs, the group merge is a Python fold, and
-        publication is a metadata-only ``ALTER TABLE SET LOCATION``
-        swap of the (small) rewritten result plus the same
+        publication is a metadata-only location swap (_set_location)
+        of the (small) rewritten result plus the same
         changelog-partition commit the direct ingest path uses. This
         closes the reference's insert → FLUSH → on_change loop
         (/root/reference/risingwave/core.py:541-560) at engine-native
@@ -3500,23 +3593,22 @@ class SparkEngine:
         otherwise (global aggregates) — so a fallback mid-stream never
         changes what subscribers observe.
 
-        Catalog cost of a warm refresh: one ADD PARTITION and one SET
-        LOCATION, nothing else. Locations and schemas of the base
-        changelog, the MV and its changelog come from the engine's
-        relation records (_relation): this path writes the MV's record
-        itself after its SET LOCATION swap, and every other publication
-        of the MV clears it (_refresh_mv_locked), as DDL does for the
-        tables it touches. Both ALTERs drop the cached file listings
-        of the relations they change, so no refreshTable follows them.
-        The SET LOCATION capability probe runs once per arm
-        (MVState.set_location_ok)."""
+        Catalog cost of a warm refresh: one _commit_partition and one
+        _set_location, both direct session-catalog calls; no SQL
+        statement. Locations and schemas of the base changelog, the MV
+        and its changelog come from the engine's relation records
+        (_relation): this path writes the MV's record itself after its
+        swap, and every other publication of the MV clears it
+        (_refresh_mv_locked), as DDL does for the tables it touches.
+        Both commits drop the cached relations they change, so nothing
+        else follows them. The swap's capability probe runs once per
+        arm (MVState.set_location_ok)."""
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         d = state.inc_direct
-        spark = self.spark
         fq = state.fq
         base_cl = self.changelog_name(d["base_fq"])
         with self._lock:
@@ -3560,7 +3652,7 @@ class SparkEngine:
             if total > self.DIRECT_MAX_DELTA_ROWS:
                 return False
             # The MV's record is current: this path writes it after
-            # its own SET LOCATION swap below, and every other
+            # its own _set_location swap below, and every other
             # publication of fq (the Spark paths' DROP+RENAME to the
             # canonical location) clears it in _refresh_mv_locked, so
             # a generation dir read here is never a superseded one.
@@ -3690,7 +3782,7 @@ class SparkEngine:
             except Exception:  # noqa: BLE001 — overflow/coercion: Spark path
                 return False
             # Capability probe BEFORE any mutation, once per arm: a
-            # no-op SET LOCATION to the current path. A catalog that
+            # no-op _set_location to the current path. A catalog that
             # refuses the op (exotic deployments) falls back cleanly
             # here, and every later refresh of this arm falls back
             # without asking again; a catalog that accepted it makes
@@ -3698,7 +3790,7 @@ class SparkEngine:
             # near-certain to succeed.
             if state.set_location_ok is None:
                 try:
-                    spark.sql(f"ALTER TABLE {fq} SET LOCATION '{loc_mv}'")
+                    self._set_location(fq, loc_mv)
                     state.set_location_ok = True
                 except Exception:  # noqa: BLE001 — catalog refused
                     state.set_location_ok = False
@@ -3718,10 +3810,7 @@ class SparkEngine:
             tmp = os.path.join(pdir, f".rwfast-{uuid.uuid4().hex}.tmp")
             pq.write_table(cl_tab, tmp)
             os.rename(tmp, os.path.join(pdir, f"rwfast-{uuid.uuid4().hex}.parquet"))
-            spark.sql(
-                f"ALTER TABLE {cl} ADD IF NOT EXISTS "
-                f"PARTITION (rw_timestamp={epoch})"
-            )
+            self._commit_partition(cl, epoch)
             self._touch_epoch_marker(cl, epoch)
             new_loc = (
                 re.sub(r"__rwgen_\d+$", "", loc_mv.rstrip("/"))
@@ -3731,9 +3820,9 @@ class SparkEngine:
             pq.write_table(
                 mv_tab, os.path.join(new_loc, f"rwfast-{epoch}.parquet")
             )
-            spark.sql(f"ALTER TABLE {fq} SET LOCATION '{new_loc}'")
-            # Both ALTERs above already dropped the cached listings of
-            # fq and cl. Record the new generation dir (same schema,
+            self._set_location(fq, new_loc)
+            # Both commits above already dropped the cached relations
+            # of fq and cl. Record the new generation dir (same schema,
             # unpartitioned) instead of re-resolving it.
             self._records[fq] = {
                 "loc": new_loc, "parts": [], "schema": mv_schema,

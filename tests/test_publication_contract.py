@@ -74,13 +74,8 @@ class _Recorder:
     """Records the lock hold each epoch assignment, changelog write and
     table write of one engine runs in."""
 
-    # statements that write a table: a stage swap, the direct path's
-    # generation swap and its changelog partition commit
-    _SQL = re.compile(
-        r"ALTER TABLE \S+ RENAME TO (\S+)"
-        r"|ALTER TABLE (\S+) (?:SET LOCATION|ADD IF NOT EXISTS PARTITION)",
-        re.I,
-    )
+    # the statement that writes a table: a stage swap
+    _SQL = re.compile(r"ALTER TABLE \S+ RENAME TO (\S+)", re.I)
 
     def __init__(self, monkeypatch, eng: SparkEngine):
         self.lock = eng._lock = _CountingLock()
@@ -101,12 +96,19 @@ class _Recorder:
         def sql(self_, q, *a, **k):
             m = rec._SQL.search(" ".join(q.split()))
             if m:
-                rec.wrote(m.group(1) or m.group(2))
-                if m.group(1):
-                    rec.swaps.append(m.group(1))
+                rec.wrote(m.group(1))
+                rec.swaps.append(m.group(1))
             return orig_sql(self_, q, *a, **k)
 
         monkeypatch.setattr(SparkSession, "sql", sql)
+        # the direct paths' catalog commits: a partition commit writes
+        # the changelog, a generation swap writes the table
+        for meth in ("_commit_partition", "_set_location"):
+            def commit(name, *a, _orig=getattr(eng, meth), **k):
+                rec.wrote(name)
+                return _orig(name, *a, **k)
+
+            monkeypatch.setattr(eng, meth, commit)
         for meth in ("saveAsTable", "insertInto"):
             orig = getattr(DataFrameWriter, meth)
 

@@ -1,9 +1,9 @@
 """The engine's relation records (location, partition columns, schema)
-on the one-row tick path: the statement budget a warm tick may spend
-on the catalog, and every way a record can go stale — Spark-path MV
+on the one-row tick path: the catalog calls a warm tick may make, and
+every way a record or a cached relation can go stale — Spark-path MV
 publications, ALTER, DROP + re-CREATE, a second engine on the same
-session, and a catalog that refuses ``SET LOCATION``. Each
-invalidation test checks the MV against a fresh recompute and a
+session, a catalog that refuses ``SET LOCATION``, and CACHE TABLE.
+Each invalidation test checks the MV against a fresh recompute and a
 replay of its changelog."""
 
 from __future__ import annotations
@@ -61,24 +61,20 @@ def _assert_consistent(eng: SparkEngine, fq: str, stmt: str,
 
 
 class _Calls:
-    """Counts catalog statements and lookups while active."""
+    """Counts catalog statements and lookups while active, and the
+    engine's direct catalog commits."""
 
-    def __init__(self, monkeypatch, spark):
+    def __init__(self, monkeypatch, spark, eng: SparkEngine):
         self.n: Counter = Counter()
+        self.sql: list[str] = []
         self.on = False
         calls = self
         orig_sql = SparkSession.sql
 
         def sql(self, q, *a, **k):
             if calls.on:
-                u = " ".join(q.upper().split())
-                for kind in ("ADD IF NOT EXISTS PARTITION", "SET LOCATION",
-                             "DESC FORMATTED", "SHOW PARTITIONS"):
-                    if kind in u:
-                        calls.n[kind] += 1
-                        break
-                else:
-                    calls.n["other sql"] += 1
+                calls.n["spark.sql"] += 1
+                calls.sql.append(" ".join(q.split()))
             return orig_sql(self, q, *a, **k)
 
         monkeypatch.setattr(SparkSession, "sql", sql)
@@ -99,11 +95,20 @@ class _Calls:
             def wrap(fn=fn, m=m):
                 def f(self, *a, **k):
                     if calls.on:
-                        calls.n[m] += 1
+                        calls.n[f"spark.catalog.{m}"] += 1
                     return fn(self, *a, **k)
                 return f
 
             monkeypatch.setattr(cat, m, wrap())
+        for m in ("_commit_partition", "_set_location"):
+            def wrap(fn=getattr(eng, m), m=m):
+                def f(*a, **k):
+                    if calls.on:
+                        calls.n[m] += 1
+                    return fn(*a, **k)
+                return f
+
+            monkeypatch.setattr(eng, m, wrap())
 
 
 def _tick_shape(c: RisingWaveConnection, s: str) -> dict[str, str]:
@@ -144,19 +149,16 @@ def test_warm_tick_catalog_statement_budget(spark, conn, monkeypatch):
         assert len(_tick(c, s, i)) == 1
     for st in eng.mvs.values():
         assert st.inc_direct is not None and st.set_location_ok
-    calls = _Calls(monkeypatch, spark)
+    calls = _Calls(monkeypatch, spark, eng)
     fallback = eng.direct_stats["fallback"]
     calls.on = True
     got = _tick(c, s, 3)
     calls.on = False
     assert [r[0] for r in got] == [3]
-    n = calls.n
-    assert n["ADD IF NOT EXISTS PARTITION"] <= 3, n
-    assert n["SET LOCATION"] <= 2, n
-    assert n["refreshTable"] <= 1, n
-    for absent in ("DESC FORMATTED", "tableExists", "spark.table",
-                   "SHOW PARTITIONS", "other sql"):
-        assert n[absent] == 0, n
+    # no SQL statement, spark.catalog call or spark.table: one partition
+    # commit per changelog (the base's and both MVs') and one swap per MV
+    assert calls.n == Counter(_commit_partition=3, _set_location=2), (
+        calls.n, calls.sql)
     assert eng.direct_stats["fallback"] == fallback
     for fq, stmt in mvs.items():
         _assert_consistent(eng, fq, stmt)
@@ -283,15 +285,12 @@ def test_catalog_refusing_set_location_falls_back_cleanly(spark, conn,
     fq = f"{s}.m"
     c.execute(f"CREATE MATERIALIZED VIEW {fq} AS {stmt}")
     tries = []
-    orig_sql = SparkSession.sql
 
-    def sql(self, q, *a, **k):
-        if "SET LOCATION" in q.upper():
-            tries.append(q)
-            raise RuntimeError("catalog refuses SET LOCATION")
-        return orig_sql(self, q, *a, **k)
+    def set_location(fq, loc):
+        tries.append((fq, loc))
+        raise RuntimeError("catalog refuses SET LOCATION")
 
-    monkeypatch.setattr(SparkSession, "sql", sql)
+    monkeypatch.setattr(eng, "_set_location", set_location)
     for i in range(3):
         c.insert_row("t", schema_name=s, force_flush=True, k=f"k{i % 2}", v=i)
     assert eng.direct_stats["fallback"] == 3
@@ -301,6 +300,31 @@ def test_catalog_refusing_set_location_falls_back_cleanly(spark, conn,
     _assert_consistent(eng, fq, stmt)
 
 
+def test_cached_relations_see_direct_commits(spark, conn):
+    """CACHE TABLE on a base table and on a direct-path MV: a tick's
+    direct catalog commits re-cache both, so the next SELECT sees the
+    new row and the new MV value."""
+    c, eng, s = conn
+    c.execute(f"CREATE TABLE {s}.t (k STRING, v BIGINT)")
+    stmt = f"SELECT k, sum(v) AS sv, count(*) AS n FROM {s}.t GROUP BY k"
+    c.execute(f"CREATE MATERIALIZED VIEW {s}.m AS {stmt}")
+    for i in range(2):  # warm: records resolved, swap probed
+        c.insert_row("t", schema_name=s, force_flush=True, k="a", v=1)
+    fallback = eng.direct_stats["fallback"]
+    try:
+        for t in ("t", "m"):
+            spark.sql(f"CACHE TABLE {s}.{t}")
+        assert c.fetch(f"SELECT count(*) FROM {s}.t") == [(2,)]
+        c.insert_row("t", schema_name=s, force_flush=True, k="a", v=5)
+        assert c.fetch(f"SELECT count(*) FROM {s}.t") == [(3,)]
+        assert c.fetch(f"SELECT k, sv, n FROM {s}.m") == [("a", 7, 3)]
+    finally:
+        for t in ("t", "m"):
+            spark.sql(f"UNCACHE TABLE IF EXISTS {s}.{t}")
+    assert eng.direct_stats["fallback"] == fallback, "left the direct path"
+    _assert_consistent(eng, f"{s}.m", stmt)
+
+
 def test_resolve_racing_a_clear_never_stores_a_stale_record(tmp_path):
     """Readers resolve a record while DDL moves the table and clears
     it: a resolve that read the old location before the clear must not
@@ -308,24 +332,19 @@ def test_resolve_racing_a_clear_never_stores_a_stale_record(tmp_path):
     import sys
     import threading
     import time
-    from types import SimpleNamespace
 
     from risingwave_py_spark.engine import _Records
 
     where = [str(tmp_path / "v0")]
 
-    def sql(q):
+    def catalog_entry(fq):
         loc = where[0]
         time.sleep(0.0005)  # the catalog answers after the table moved
-        rows = [SimpleNamespace(col_name="# Detailed Table Information",
-                                data_type=""),
-                SimpleNamespace(col_name="Location", data_type=loc)]
-        return SimpleNamespace(collect=lambda: rows)
+        return loc, []
 
     eng = SparkEngine.__new__(SparkEngine)
     eng._records = _Records()
-    eng.spark = SimpleNamespace(
-        sql=sql, catalog=SimpleNamespace(tableExists=lambda fq: True))
+    eng._catalog_entry = catalog_entry
 
     def move(i):
         where[0] = str(tmp_path / f"v{i}")
