@@ -84,7 +84,9 @@ def _split_fq(name: str, default_schema: str = "public") -> tuple[str, str]:
 class _Records(dict):
     """fq -> relation record (see SparkEngine._relation), plus a count
     of clears: a resolve that raced a clear must not store what it
-    read before the DDL landed."""
+    read before the DDL landed. A changelog's record also holds the
+    epochs Spark's catalog has registered (SparkEngine._sync_changelog),
+    so every engine on the SparkContext sees the same set."""
 
     def __init__(self):
         super().__init__()
@@ -104,13 +106,11 @@ class _SessionCatalog:
         self.catalog = js.sessionState().catalog()
         self._parser = js.sessionState().sqlParser()
         self.cache = js.sharedState().cacheManager()
-        pkg = jvm.org.apache.spark.sql.catalyst.catalog
-        self.utils = pkg.CatalogUtils
-        self.partition = pkg.CatalogTablePartition
-        self.storage = pkg.CatalogStorageFormat
-        self.py = jvm.org.apache.spark.api.python.PythonUtils
-        self.option = jvm.scala.Option
-        self.no_params = self.py.toScalaMap({})
+        utils = jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils
+        # held as members: naming a method on a class is a round trip
+        self.uri_to_string = utils.URIToString
+        self.string_to_uri = utils.stringToURI
+        self.some = jvm.scala.Option.apply
         self._idents: dict[str, object] = {}
 
     def ident(self, fq: str):
@@ -318,13 +318,10 @@ class SparkEngine:
         self._records: _Records = _RELATION_RECORDS.setdefault(
             spark.sparkContext, _Records()
         )
-        # Per-changelog epoch manifest: the set of REGISTERED epoch
-        # partitions, maintained at every engine commit and validated
-        # per use by ONE os.stat of the on-disk commit marker — the
-        # per-flush hot loop's replacement for SHOW PARTITIONS, which
-        # is O(total retained epochs) driver-side (r10 verdict: 93 ms
-        # at ~140 epochs; 10⁵–10⁶ partitions at default retention).
-        # {cl: {"loc": str, "sig": (mtime_ns, size), "epochs": set}}
+        # Per-changelog epoch manifest: the PUBLISHED epoch dirs, kept
+        # at every engine commit and validated per use by ONE os.stat
+        # of the on-disk commit marker instead of a per-flush listing.
+        # {cl: {"loc": str, "sig": (mtime_ns, size, token), "epochs": set}}
         self._epoch_cache: dict[str, dict] = {}
         # Commits per changelog and the condition subscribers wait on
         # between FETCHes (cursor_commits / wait_cursor_commit):
@@ -634,9 +631,10 @@ class SparkEngine:
 
         Who writes a record: a miss resolves it here with one
         ``getTableMetadata`` (_catalog_entry; the schema on first use,
-        in _relation_schema; a changelog's partition storage at its
-        first _commit_partition), and _refresh_direct writes the MV's
-        new generation dir after its own _set_location swap. Who
+        in _relation_schema; a changelog's registered epochs in
+        _sync_changelog; an MV's catalog metadata in _set_location),
+        and _refresh_direct writes the MV's new generation dir after
+        its own _set_location swap. Who
         clears it (_forget): every DDL that moves a table's directory
         or changes its columns — DROP, RENAME, ADD/DROP COLUMN, the
         stage-and-rename rewrites, vacuum — and every publication of
@@ -674,53 +672,64 @@ class SparkEngine:
             return None
         if meta.tableType().name() == "VIEW":
             return None
-        loc = re.sub(r"^file:", "", jc.utils.URIToString(meta.location()))
+        loc = re.sub(r"^file:", "", jc.uri_to_string(meta.location()))
         return loc, list(meta.partitionSchema().fieldNames())
 
     # -- direct catalog commits --------------------------------------------
     #
     # The tick path's catalog changes, made through the session catalog
-    # instead of SQL DDL. Each makes the change its SQL command makes
-    # (ALTER TABLE ADD PARTITION, ALTER TABLE SET LOCATION, refreshTable)
-    # without the parsing and analysis, and leaves the catalog in the
-    # same state, so every Spark reader reads as before.
-
-    def _commit_partition(self, cl: str, epoch: int) -> None:
-        """Register the ``rw_timestamp=<epoch>`` partition of ``cl``,
-        whose directory the caller has written: ``ALTER TABLE cl ADD IF
-        NOT EXISTS PARTITION (rw_timestamp=<epoch>)`` as one
-        ``createPartitions`` call with the table's storage minus its
-        location (the catalog puts the partition at its default path),
-        then _invalidate."""
-        jc = self._jc
-        rec = self._relation(cl)
-        st = rec.get("part_storage")
-        if st is None:
-            s = jc.catalog.getTableMetadata(jc.ident(cl)).storage()
-            st = rec["part_storage"] = jc.storage(
-                jc.option.empty(), s.inputFormat(), s.outputFormat(),
-                s.serde(), s.compressed(), s.properties(),
-            )
-        part = jc.partition(
-            jc.py.toScalaMap({"rw_timestamp": str(epoch)}), st,
-            jc.no_params, int(time.time() * 1000), -1, jc.option.empty(),
-        )
-        jc.catalog.createPartitions(jc.ident(cl), jc.py.toSeq([part]), True)
-        self._invalidate(cl)
+    # instead of SQL DDL. _set_location makes the change ALTER TABLE SET
+    # LOCATION makes and _invalidate the one refreshTable makes, without
+    # the parsing and analysis. Changelog epochs reach the catalog only
+    # when Spark reads the changelog (_sync_changelog).
 
     def _set_location(self, fq: str, loc: str) -> None:
         """``ALTER TABLE fq SET LOCATION 'loc'`` as one ``alterTable``
         of the table's metadata with the new storage location (and the
         command's ``compressed=false``), then _invalidate. Raises when
-        the catalog refuses."""
+        the catalog refuses. ``fq``'s record keeps the metadata each
+        swap installs, so only the first swap after a resolve reads it."""
         jc = self._jc
-        meta = jc.catalog.getTableMetadata(jc.ident(fq))
-        s = meta.storage()
-        jc.catalog.alterTable(meta.withNewStorage(
-            jc.option.apply(jc.utils.stringToURI(loc)), s.inputFormat(),
-            s.outputFormat(), False, s.serde(), s.properties(),
-        ))
+        rec = self._relation(fq) or {}
+        if "meta" not in rec:
+            rec["meta"] = jc.catalog.getTableMetadata(jc.ident(fq))
+            s = rec["meta"].storage()
+            rec["fmt"] = (s.inputFormat(), s.outputFormat(), s.serde(),
+                          s.properties())
+        i, o, serde, props = rec["fmt"]
+        new = rec["meta"].withNewStorage(
+            jc.some(jc.string_to_uri(loc)), i, o, False, serde, props)
+        jc.catalog.alterTable(new)
+        rec["meta"] = new
         self._invalidate(fq)
+
+    def _sync_changelog(self, cl: str) -> None:
+        """Run before every Spark read of changelog ``cl``: register the
+        published epochs Spark's catalog lacks (the direct paths
+        register none) in ONE ``ALTER TABLE … ADD IF NOT EXISTS
+        PARTITION (…) (…)``, then _invalidate. The registered set lives
+        in the shared record; a cleared record registers every epoch
+        again, which IF NOT EXISTS makes harmless."""
+        rec = self._relation(cl)
+        if rec is None:
+            return
+        eps = self._changelog_epochs(cl)
+        if eps:
+            done = rec.get("registered", set())
+            missing = sorted(eps - done)
+            if missing:
+                self.spark.sql(f"ALTER TABLE {cl} ADD IF NOT EXISTS " + " ".join(
+                    f"PARTITION (rw_timestamp={e})" for e in missing))
+                rec["registered"] = done | set(missing)
+        self._invalidate(cl)
+
+    def changelog_table(self, fq: str) -> DataFrame:
+        """The changelog of table or MV ``fq`` as a Spark DataFrame,
+        synced first (_sync_changelog): read ``__rw_changelog__`` tables
+        through this, not ``spark.table``."""
+        cl = self.changelog_name(self.qualify(fq))
+        self._sync_changelog(cl)
+        return self.spark.table(cl)
 
     def _invalidate(self, fq: str) -> None:
         """Drop the session's cached relation of ``fq`` so the next
@@ -784,19 +793,18 @@ class SparkEngine:
             return None
 
     def _touch_epoch_marker(self, cl: str, epoch: int | None = None) -> None:
-        """Record an epoch-partition commit: add it to this engine's
-        in-memory manifest and bump the on-disk marker so OTHER
-        processes' manifests detect the change and re-list. Called
-        AFTER the partition is registered in the catalog (by
-        _commit_partition on the direct paths, by the Spark append on
-        the others), so a manifest is always a subset of the
-        registered partitions (a
-        listed-but-unregistered epoch would make Spark-side delta
-        reads silently skip its rows). A crash between registration
+        """Record an epoch commit: add it to this engine's in-memory
+        manifest and bump the on-disk marker so OTHER processes'
+        manifests detect the change and re-list. Called AFTER the
+        epoch's directory is published (_publish_epoch_dir's rename, or
+        the Spark append). A staging directory never counts; a
+        published one always does, registered with Spark or not:
+        internal changelog tables are complete in Spark once synced
+        (_sync_changelog), and subscriptions, FETCH and SDK SQL see
+        every published epoch as before. A crash between the rename
         and this touch leaves live foreign readers one epoch behind
-        until the next commit bumps the marker (their own restart
-        re-lists) — the same at-least-once window the refresh commit
-        order already documents.
+        until the next commit bumps the marker — the same
+        at-least-once window the refresh commit order documents.
 
         Also counts the commit and wakes this engine's subscribers of
         ``cl``. Every caller holds the engine lock, so a woken FETCH
@@ -838,19 +846,20 @@ class SparkEngine:
             self._epoch_cache.pop(cl, None)
 
     def _changelog_epochs(self, cl: str) -> set[int] | None:
-        """Registered epoch partitions of ``cl`` — O(1) steady state
-        (one os.stat against the commit marker), falling back to one
-        authoritative SHOW PARTITIONS listing on first touch, engine
-        restart, vacuum rewrite, or cross-process drift. None when the
-        changelog is not in the epoch-partitioned layout (legacy
-        unpartitioned tables take the aggregate/Spark paths)."""
+        """Published epochs of ``cl`` — O(1) steady state (one os.stat
+        against the commit marker), falling back to one listing of its
+        ``rw_timestamp=<E>`` directories (never the dot-named staging
+        ones) on first touch, engine restart, vacuum rewrite, or
+        cross-process drift. None when the changelog is not in the
+        epoch-partitioned layout (legacy unpartitioned tables take the
+        aggregate/Spark paths)."""
         loc, parts = self._table_meta(cl)
         if loc is None or parts != ["rw_timestamp"]:
             return None
         marker = self._epoch_marker_path(loc)
         # Signature captured BEFORE the listing: a foreign commit
         # landing between stat and list is either in the listing
-        # (registered first — fine) or changes the marker after our
+        # (published first — fine) or changes the marker after our
         # read, so the next call re-lists. Never the reverse. The
         # signature includes the marker CONTENT (unique per write),
         # so same-size writes within one mtime granule still differ.
@@ -871,20 +880,22 @@ class SparkEngine:
         ):
             return ent["epochs"]
         try:
-            rows = self.spark.sql(f"SHOW PARTITIONS {cl}").collect()
-        except Exception:  # noqa: BLE001 — layout drift: caller falls back
+            eps = {
+                int(d.split("=", 1)[1]) for d in os.listdir(loc)
+                if d.startswith("rw_timestamp=")
+            }
+        except (OSError, ValueError):  # layout drift: caller falls back
             return None
-        eps = {int(r[0].split("=", 1)[1]) for r in rows}
         if sig is not None:
             self._epoch_cache[cl] = {"loc": loc, "sig": sig, "epochs": eps}
         return eps
 
     def _changelog_max_epoch(self, cl: str) -> int | None:
         """Highest published epoch in a changelog WITHOUT a Spark job
-        when the epoch-partitioned layout allows it: the registered
-        partition values ARE the visible epochs (Spark reads these
-        tables through the same catalog partition metadata, so this is
-        exactly what the max-aggregate would return). Every MV refresh
+        when the epoch-partitioned layout allows it: the published
+        epoch directories ARE the visible epochs (a Spark read, synced
+        first, registers exactly these, so this is what the
+        max-aggregate would return). Every MV refresh
         starts with this check, and a FLUSH refreshes every registered
         MV — with N MVs over quiet bases the per-insert cost used to
         be N job dispatches for N 'nothing changed' answers. Falls
@@ -900,18 +911,18 @@ class SparkEngine:
         schema_name: str | None = None,
     ) -> int | None:
         """Direct row-group ingest for small LOCAL batches (the
-        buffered-insert client path): write one parquet row group
-        straight into the managed table's storage and one into the
-        changelog's epoch partition, register the partition
-        (_commit_partition) and drop the base table's cached relation
-        (_invalidate) through the session catalog — ZERO Spark jobs and
-        no SQL statement on the producer side. This is how a
-        real engine lands a 1-row batch (ingest appends a row group +
-        a metadata commit; distributed jobs are for queries) — the
-        Spark-job spelling of the same append costs 2 job dispatches,
-        the whole sub-second latency budget (BASELINE.md subscription
-        row). On a lakehouse the equivalent is a single-file Delta/
-        Iceberg append commit.
+        buffered-insert client path): publish one parquet row group as
+        the changelog's epoch directory (_publish_epoch_dir; Spark
+        registers it when it reads, _sync_changelog), write one into the
+        managed table's storage and drop the base table's cached
+        relation (_invalidate) — ZERO Spark jobs and no SQL statement
+        on the producer side. This is how a real engine lands a 1-row
+        batch (ingest appends a
+        row group + a log commit; distributed jobs are for queries) —
+        the Spark-job spelling of the same append costs 2 job
+        dispatches, the whole sub-second latency budget (BASELINE.md
+        subscription row). On a lakehouse the equivalent is a
+        single-file Delta/Iceberg append commit.
 
         Returns the epoch, or None when the batch must take the Spark
         path (upsert tables, bucketed layouts, missing table,
@@ -919,19 +930,16 @@ class SparkEngine:
         createDataFrame would reject those same values, so fallback
         keeps error parity). Locked readers are safe at every step:
         one hold of the engine lock covers the whole publication, in
-        the order changelog file, partition commit, epoch marker, base
-        file, invalidation. Crash windows: the changelog epoch commits
+        the order changelog directory rename, epoch marker, base file,
+        invalidation. Crash windows: the changelog epoch commits
         BEFORE the base-table file becomes visible, so a crash in
         between leaves the base one row group BEHIND the changelog —
         downstream consumers (MV refreshes, subscriptions) still see
         every committed epoch and stay mutually consistent; only a
         raw base SELECT can briefly under-read, and the staged base
         dotfile is an unregistered orphan that never resurfaces. A
-        crash before the partition commit leaves only hidden dotfiles
-        (epoch recovery counts on-disk partition dirs, so the epoch
-        is not reused)."""
-        import uuid
-
+        crash before the rename leaves only a staging directory, which
+        nothing counts; its epoch may be issued again."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -984,31 +992,45 @@ class SparkEngine:
                 if ct is None:
                     return None
                 cl_cols[c] = pa.nulls(n, type=ct)
-        def commit_file(tab, dirpath: str, fname: str) -> None:
-            # dotfile-stage + rename: lock-free readers (plain SELECTs
-            # list the dir outside the engine lock) must never see a
-            # half-written footer — listings skip dotfiles, and the
-            # rename is atomic on one filesystem (the same contract
-            # Spark's own file committer provides via _temporary)
-            tmp = os.path.join(dirpath, f".{fname}.tmp")
-            pq.write_table(tab, tmp)
-            os.rename(tmp, os.path.join(dirpath, fname))
-
         with self._lock:
             epoch = self.next_epoch()
             # changelog first (see docstring crash-window contract)
-            pdir = os.path.join(cl_loc, f"rw_timestamp={epoch}")
-            os.makedirs(pdir, exist_ok=True)
-            commit_file(pa.table(cl_cols), pdir,
-                        f"rwfast-{uuid.uuid4().hex}.parquet")
-            self._commit_partition(cl, epoch)
+            self._publish_epoch_dir(cl_loc, epoch, pa.table(cl_cols))
             self._touch_epoch_marker(cl, epoch)
-            commit_file(pa.table(cols), loc,
-                        f"rwfast-{epoch}-{uuid.uuid4().hex}.parquet")
+            # dotfile-stage + rename: lock-free readers (plain SELECTs)
+            # never see a half-written footer; listings skip dotfiles
+            fname = f"rwfast-{epoch}-{_uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(loc, f".{fname}.tmp")
+            pq.write_table(pa.table(cols), tmp)
+            os.rename(tmp, os.path.join(loc, fname))
             # the base file landed in an already-listed dir: drop fq's
             # cached listing or readers miss the row
             self._invalidate(fq)
         return epoch
+
+    @staticmethod
+    def _publish_epoch_dir(cl_loc: str, epoch: int, tab) -> None:
+        """Publish changelog epoch ``epoch`` holding ``tab``: write it
+        into the staging directory ``.rw_timestamp=<epoch>`` (dot-named:
+        no listing sees it; one a crash left is cleared first) and
+        rename that to ``rw_timestamp=<epoch>``. If the epoch's
+        directory exists (two engines' counters issued it), the file
+        joins it, as a second Spark append would."""
+        import pyarrow.parquet as pq
+
+        stage = os.path.join(cl_loc, f".rw_timestamp={epoch}")
+        pdir = os.path.join(cl_loc, f"rw_timestamp={epoch}")
+        shutil.rmtree(stage, ignore_errors=True)
+        os.mkdir(stage)
+        fname = f"rwfast-{_uuid.uuid4().hex}.parquet"
+        pq.write_table(tab, os.path.join(stage, fname))
+        try:
+            os.replace(stage, pdir)
+        except OSError:
+            if not os.path.isdir(pdir):
+                raise
+            os.replace(os.path.join(stage, fname), os.path.join(pdir, fname))
+            os.rmdir(stage)
 
     def insert_df(self, name: str, df: DataFrame, schema_name: str | None = None) -> int:
         """Append a DataFrame to a table (creating it if absent — the
@@ -1109,7 +1131,7 @@ class SparkEngine:
             return True  # bases unchanged — result already current
         slices = []
         for cl in changelogs:
-            self.spark.catalog.refreshTable(cl)
+            self._sync_changelog(cl)
             slices.append(
                 self.spark.table(cl)
                 .filter(
@@ -1565,36 +1587,18 @@ class SparkEngine:
                 logger.warning("could not restore UDF %s: %s", name, e)
         # epoch recovery: the changelogs are the authoritative
         # high-water mark (persisting per-epoch would put a write on
-        # the data path).
+        # the data path): the published epoch dirs, listed without a
+        # Spark job, registered with Spark or not.
         max_epoch = 0
         try:
             for db_obj in self.spark.catalog.listDatabases():
                 db = db_obj.name
                 for t in self.spark.catalog.listTables(db):
                     if t.name.startswith("__rw_changelog__"):
-                        m = (
-                            self.spark.table(f"{db}.{t.name}")
-                            .agg(F.max("rw_timestamp"))
-                            .first()[0]
+                        max_epoch = max(
+                            max_epoch,
+                            self._changelog_max_epoch(f"{db}.{t.name}") or 0,
                         )
-                        max_epoch = max(max_epoch, m or 0)
-                        # also count ON-DISK partition dirs: a crash in
-                        # the direct-ingest path between file write and
-                        # partition commit leaves a dir the catalog read
-                        # can't see — its epoch must not be re-issued
-                        # (_commit_partition registers whatever the
-                        # dir already holds, so it would resurrect the
-                        # orphaned rows under the reused epoch)
-                        try:
-                            loc = self._table_location(f"{db}.{t.name}")
-                            for d in os.listdir(loc or ""):
-                                if d.startswith("rw_timestamp="):
-                                    max_epoch = max(
-                                        max_epoch,
-                                        int(d.split("=", 1)[1]),
-                                    )
-                        except Exception:  # noqa: BLE001
-                            pass
         except Exception:  # noqa: BLE001
             pass
         # The persisted counter floors epochs consumed without
@@ -1664,7 +1668,10 @@ class SparkEngine:
         vacuum): no self-overwrite read hazard, and readers only ever
         see the old or the new complete table. ``partition_by``
         preserves a partitioned layout across the rewrite (changelogs
-        keep their epoch-pruning dirs)."""
+        keep their epoch-pruning dirs, and are synced before the read,
+        so every published epoch is rewritten)."""
+        if partition_by:
+            self._sync_changelog(fq)
         stage = self._stage(fq, transform(self.spark.table(fq)), partition_by)
         self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
         self.spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
@@ -2517,9 +2524,7 @@ class SparkEngine:
             upto = self.current_epoch
             if upto <= sink["pos"]:
                 continue
-            cl = self.changelog_name(sink["rel"])
-            self.spark.catalog.refreshTable(cl)
-            batch = self.spark.table(cl).filter(
+            batch = self.changelog_table(sink["rel"]).filter(
                 (F.col("rw_timestamp") > sink["pos"]) & (F.col("rw_timestamp") <= upto)
             )
             if sink["mode"] == "append-only":
@@ -2537,6 +2542,9 @@ class SparkEngine:
             sink["path"]
         )
 
+    # an internal changelog table named in user SQL, with its schema
+    _CHANGELOG_REF = re.compile(r"(?:\b(\w+)\.)?\b(__rw_changelog__\w+)", re.I)
+
     def sql(self, sql: str, args=None) -> DataFrame:
         """Run a query; ``args`` are Spark SQL bind parameters — a dict
         for named ``:name`` markers (the same marker syntax SQLAlchemy
@@ -2546,6 +2554,8 @@ class SparkEngine:
         self.spark.catalog.setCurrentDatabase(self.default_schema)
         if re.search(r"\binformation_schema\.", sql, re.I):
             self.refresh_info_schema()
+        for db, cl in self._CHANGELOG_REF.findall(sql):
+            self._sync_changelog(f"{db or self.default_schema}.{cl}")
         if self._ASOF_EPOCH.search(sql):
             sql = self._rewrite_asof_epoch(sql)
         rewritten = RW.rewrite_query(sql, self.version_string)
@@ -2619,7 +2629,7 @@ class SparkEngine:
                 f"{fq}, but its changelog is vacuumed through epoch "
                 f"{self.vacuum_floor[cl]}"
             )
-        log = self.spark.table(cl).filter(F.col("rw_timestamp") <= epoch)
+        log = self.changelog_table(fq).filter(F.col("rw_timestamp") <= epoch)
         payload = [c for c in log.columns if c not in ("op", "rw_timestamp")]
         weight = F.when(
             F.col("op").isin(OP_INSERT, OP_UPDATE_INSERT), F.lit(1)
@@ -2680,10 +2690,9 @@ class SparkEngine:
                     f"vacuumed through epoch {self.vacuum_floor[cl]}"
                 )
             self.spark.catalog.refreshTable(fq)
-            self.spark.catalog.refreshTable(cl)
             cur = self.spark.table(fq)
             payload = cur.columns
-            log = self.spark.table(cl)
+            log = self.changelog_table(fq)
             missing = set(payload) - set(log.columns)
             if missing:
                 raise ValueError(
@@ -3570,12 +3579,13 @@ class SparkEngine:
 
     def _refresh_direct(self, state: MVState) -> bool:
         """Zero-Spark-job refresh of a simple-agg MV for a small
-        insert-only delta: pending epochs come from the changelog's
-        partition metadata, the delta rows from a pyarrow read of just
-        those partition dirs, the group merge is a Python fold, and
-        publication is a metadata-only location swap (_set_location)
-        of the (small) rewritten result plus the same
-        changelog-partition commit the direct ingest path uses. This
+        insert-only delta: pending epochs come from the engine's epoch
+        manifest (_changelog_epochs), the delta rows from a pyarrow
+        read of just those epoch dirs, the group merge is a Python
+        fold, and publication is the same changelog epoch-directory
+        rename the direct ingest path uses plus a metadata-only
+        location swap (_set_location) of the (small) rewritten result.
+        This
         closes the reference's insert → FLUSH → on_change loop
         (/root/reference/risingwave/core.py:541-560) at engine-native
         cost: no job dispatch anywhere between the client's insert and
@@ -3593,18 +3603,14 @@ class SparkEngine:
         otherwise (global aggregates) — so a fallback mid-stream never
         changes what subscribers observe.
 
-        Catalog cost of a warm refresh: one _commit_partition and one
-        _set_location, both direct session-catalog calls; no SQL
-        statement. Locations and schemas of the base changelog, the MV
-        and its changelog come from the engine's relation records
-        (_relation): this path writes the MV's record itself after its
+        Catalog cost of a warm refresh: one _set_location; no SQL
+        statement and no epoch registration (_sync_changelog does that
+        when Spark reads). Locations and schemas come from the relation
+        records (_relation): this path writes the MV's record after its
         swap, and every other publication of the MV clears it
         (_refresh_mv_locked), as DDL does for the tables it touches.
-        Both commits drop the cached relations they change, so nothing
-        else follows them. The swap's capability probe runs once per
-        arm (MVState.set_location_ok)."""
-        import uuid
-
+        The swap's capability probe runs once per arm
+        (MVState.set_location_ok)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -3625,11 +3631,8 @@ class SparkEngine:
                     self.next_epoch()  # refresh always consumes one epoch
                     return True
                 return False
-            # The epoch manifest serves both the high-water check and
-            # the pending-epoch list — O(1) steady state (one os.stat
-            # of the commit marker); SHOW PARTITIONS runs only on
-            # first touch / restart / cross-process drift, keeping the
-            # per-flush hot loop flat in the retained-epoch count.
+            # The epoch manifest (one os.stat when warm) serves both the
+            # high-water check and the pending-epoch list.
             eps_all = self._changelog_epochs(base_cl)
             if eps_all is None:
                 return False
@@ -3805,12 +3808,7 @@ class SparkEngine:
             # order could let the fallback re-MERGE an already-merged
             # delta into the table: wrong results, not just duplicate
             # delivery.
-            pdir = os.path.join(cl_loc, f"rw_timestamp={epoch}")
-            os.makedirs(pdir, exist_ok=True)
-            tmp = os.path.join(pdir, f".rwfast-{uuid.uuid4().hex}.tmp")
-            pq.write_table(cl_tab, tmp)
-            os.rename(tmp, os.path.join(pdir, f"rwfast-{uuid.uuid4().hex}.parquet"))
-            self._commit_partition(cl, epoch)
+            self._publish_epoch_dir(cl_loc, epoch, cl_tab)
             self._touch_epoch_marker(cl, epoch)
             new_loc = (
                 re.sub(r"__rwgen_\d+$", "", loc_mv.rstrip("/"))
@@ -3821,12 +3819,11 @@ class SparkEngine:
                 mv_tab, os.path.join(new_loc, f"rwfast-{epoch}.parquet")
             )
             self._set_location(fq, new_loc)
-            # Both commits above already dropped the cached relations
-            # of fq and cl. Record the new generation dir (same schema,
-            # unpartitioned) instead of re-resolving it.
-            self._records[fq] = {
-                "loc": new_loc, "parts": [], "schema": mv_schema,
-            }
+            # The swap dropped fq's cached relation. Record the new
+            # generation dir (same schema, unpartitioned) and keep the
+            # metadata the swap installed instead of re-resolving them.
+            self._records[fq] = dict(self._records.get(fq, {}), loc=new_loc,
+                                     parts=[], schema=mv_schema)
             shutil.rmtree(loc_mv, ignore_errors=True)  # superseded gen
             state.last_epoch = m1
             if aux_new is not None:
@@ -7349,18 +7346,20 @@ class SparkEngine:
         self, cl: str, pos: int, n: int
     ) -> tuple[list[str], list[tuple], int] | None:
         """Driver-side FETCH over an epoch-partitioned changelog:
-        pending epochs come from the catalog's partition list (a
-        metadata lookup, no Spark job), whole-epoch batching from
-        parquet footer row counts, and the rows themselves through a
-        pyarrow read of just the chosen partition dirs, each dir listed
-        once. An IDLE poll costs one catalog lookup and ZERO jobs, so
-        a thousand idle subscriptions put no load on the cluster; a
+        pending epochs come from the engine's epoch manifest
+        (_changelog_epochs: published directories, registered with
+        Spark or not), whole-epoch batching from parquet footer row
+        counts, and the rows themselves through a pyarrow read of just
+        the chosen epoch dirs, each dir listed once. An IDLE poll costs
+        one os.stat and ZERO jobs or catalog calls, so a thousand idle
+        subscriptions put no load on the cluster; a
         non-idle poll — which on_change makes as soon as a commit
         wakes it, between the insert and its FLUSH — reads only the
         unconsumed suffix. Returns None when the
         changelog is ineligible (legacy unpartitioned layout, missing
         location) — the Spark read below is the fallback. Caller holds
-        the engine lock, so registered partitions are complete epochs."""
+        the engine lock, and epochs are published by directory rename,
+        so every listed epoch is complete."""
         import pyarrow.parquet as pq
 
         loc, part_cols = self._table_meta(cl)
@@ -7452,8 +7451,8 @@ class SparkEngine:
                     return [], []
                 st["pos"] = new_pos
                 return self._cursor_column_order(cols, tuples)
-            self.spark.catalog.refreshTable(cl)
-            pending = self.spark.table(cl).filter(F.col("rw_timestamp") > st["pos"])
+            pending = self.changelog_table(st["rel"]).filter(
+                F.col("rw_timestamp") > st["pos"])
             epochs = (
                 pending.groupBy("rw_timestamp")
                 .agg(F.count("*").alias("n"))
@@ -7535,7 +7534,7 @@ class SparkEngine:
         """Compact one changelog to its epochs younger than the
         retention window. Runs under the engine lock (caller) so the
         drop+rename rewrite never races a polling cursor's read."""
-        self.spark.catalog.refreshTable(cl)
+        self._sync_changelog(cl)
         cutoff = time.time() - max(int(sub["retention_s"]), 0)
         # Expiry is decided per epoch PRESENT IN THIS CHANGELOG by
         # joining its (pruned, one-row-per-partition) epoch column

@@ -577,7 +577,7 @@ def join_inc_mv_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
     conn.insert(pd.DataFrame({"uid": [4], "amt": [9.0]}),
                 table_name="orders", schema_name="rwdemo_ij", force_flush=True)
     assert eng.mvs["rwdemo_ij.mv"].inc_join is not None, "join fast path lost"
-    cl = spark.table("rwdemo_ij.__rw_changelog__mv")
+    cl = eng.changelog_table("rwdemo_ij.mv")
     rows = [tuple(r) for r in cl.collect()]
     return spark.createDataFrame(
         sorted(rows, key=lambda r: (r[-1], str(r))),
@@ -623,7 +623,7 @@ def join_agg_inc_mv_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
     conn.insert(pd.DataFrame({"uid": [9], "qty": [7]}),
                 table_name="fact", schema_name="rwdemo_jag", force_flush=True)
     assert eng.mvs["rwdemo_jag.mv"].inc_joinagg is not None, "join-agg fast path lost"
-    cl = spark.table("rwdemo_jag.__rw_changelog__mv")
+    cl = eng.changelog_table("rwdemo_jag.mv")
     rows = [tuple(r) for r in cl.collect()]
     return spark.createDataFrame(
         sorted(rows, key=lambda r: (r[-1], str(r))),
@@ -1758,7 +1758,7 @@ def having_inc_mv_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
     conn.execute("FLUSH")
     assert st.inc is not None, "HAVING plan lost mid-scenario"
     ops = [r["op"] for r in
-           eng.spark.table(eng.changelog_name("rwdemo_hv.m"))
+           eng.changelog_table("rwdemo_hv.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops, (
         "publication gate must emit Insert/Delete on threshold crossings"
@@ -1913,7 +1913,7 @@ def joinagg_having_distinct_scenario(spark: SparkSession, sf_dir: str) -> DataFr
     conn.execute("DELETE FROM rwdemo_jhd.o WHERE amt = 7.0")
     conn.execute("FLUSH")
     assert st.inc_joinagg is not None, "join+agg gate plan lost"
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_jhd.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_jhd.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(
@@ -2054,7 +2054,7 @@ def nway_join_inc_mv_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
     conn.insert(pd.DataFrame({"k1": [3], "name1": ["c"]}),
                 table_name="d1", schema_name="rwdemo_jn", force_flush=True)
     assert st.inc_join_nway is not None, "late dim arrival demoted the MV"
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_jn.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_jn.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(
@@ -2148,7 +2148,7 @@ def session_inc_mv_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
     conn.execute("UPDATE rwdemo_sw.ev SET v = 100 WHERE v = 1")
     conn.execute("FLUSH")
     assert st.inc_session is not None, "DML demoted the session MV"
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_sw.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_sw.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(
@@ -2308,7 +2308,7 @@ def outer_interval_join_inc_mv_scenario(
     )
     conn.execute("FLUSH")
     assert st.inc_join is not None, "DML demoted the outer interval MV"
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_oij.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_oij.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(
@@ -2396,7 +2396,7 @@ def star_left_join_inc_mv_scenario(
     conn.insert(pd.DataFrame({"pk": [300], "pname": ["gizmo"]}),
                 table_name="p", schema_name="rwdemo_sn", force_flush=True)
     assert st.inc_join_nway is not None, "multi-side flush demoted the MV"
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_sn.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_sn.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(
@@ -2474,7 +2474,7 @@ def union_all_inc_mv_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
     conn.insert(pd.DataFrame({"uid": [7], "amt": [70], "page": ["e"]}),
                 table_name="web", schema_name="rwdemo_un", force_flush=True)
     assert st.inc_union is not None, "multi-side flush demoted the MV"
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_un.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_un.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(
@@ -2558,7 +2558,7 @@ def left_joinagg_inc_mv_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LEFT JOIN rwdemo_lja.o o ON c.ck = o.ck GROUP BY o.ck"
     )
     assert eng.mvs["rwdemo_lja.mg"].inc_joinagg is None
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_lja.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_lja.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(
@@ -2633,7 +2633,7 @@ def select_distinct_inc_mv_scenario(
         "SELECT DISTINCT max(amt) AS m FROM rwdemo_dx.ev"
     )
     assert eng.mvs["rwdemo_dx.mg"].inc_distinct is None
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("rwdemo_dx.m"))
+    ops = [r["op"] for r in eng.changelog_table("rwdemo_dx.m")
            .orderBy("rw_timestamp").collect()]
     assert "Insert" in ops and "Delete" in ops
     cols, rows = conn._dispatch(

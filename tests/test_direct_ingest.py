@@ -53,11 +53,11 @@ def test_insert_row_takes_direct_path_and_reads_back(spark, conn):
     ]
     # changelog carries the same rows with op + monotone epochs,
     # partition-pruned SINCE reads see exactly the suffix
-    cl = spark.table(eng.changelog_name(fq)).orderBy("rw_timestamp").collect()
+    cl = eng.changelog_table(fq).orderBy("rw_timestamp").collect()
     assert [r["op"] for r in cl] == ["Insert", "Insert"]
     e1, e2 = (r["rw_timestamp"] for r in cl)
     assert e1 < e2
-    since = spark.table(eng.changelog_name(fq)).filter(
+    since = eng.changelog_table(fq).filter(
         f"rw_timestamp > {e1}"
     ).collect()
     assert len(since) == 1 and since[0]["k"] == 2

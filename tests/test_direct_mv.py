@@ -68,7 +68,7 @@ def test_global_agg_runs_zero_jobs_and_matches_recompute(spark, conn):
     assert jobs.clean, "insert+flush+MV refresh dispatched Spark jobs"
     assert c.fetch(f"SELECT n, sm, lo, hi FROM {s}.agg") == [(3, 1.5, -1.0, 2.5)]
     # changelog contract: keyless bag diff (Delete old + Insert new)
-    ops = [r["op"] for r in spark.table(eng.changelog_name(f"{s}.agg"))
+    ops = [r["op"] for r in eng.changelog_table(f"{s}.agg")
            .orderBy("rw_timestamp").collect()]
     assert ops[-2:] == ["Delete", "Insert"]
     assert st.inc_direct is not None
@@ -99,7 +99,7 @@ def test_grouped_agg_direct_matches_recompute_bit_exact(spark, conn):
         ("a", 6, 2, 1, 5), ("b", 2, 1, 2, 2), ("c", None, 1, None, None)
     ]
     # grouped emission: UpdateDelete/UpdateInsert pairs + Insert
-    cl = spark.table(eng.changelog_name(f"{s}.m"))
+    cl = eng.changelog_table(f"{s}.m")
     last = cl.agg({"rw_timestamp": "max"}).first()[0]
     prev_ops = sorted(
         r["op"] for r in cl.filter(f"rw_timestamp < {last}")
@@ -411,13 +411,12 @@ def test_avg_round_hides_change_but_companions_advance(spark, conn):
         f"SELECT round(avg(v)) AS r FROM {s}.ev"
     )
     c.insert_row("ev", schema_name=s, force_flush=True, v=10.0)
-    cl = eng.changelog_name(f"{s}.m")
-    n_ops0 = spark.table(cl).count()
+    n_ops0 = eng.changelog_table(f"{s}.m").count()
     with _no_jobs(spark) as jobs:
         # avg 10.0 -> 10.2, rounded stays 10.0: no visible change
         c.insert_row("ev", schema_name=s, force_flush=True, v=10.4)
     assert jobs.clean
-    assert spark.table(cl).count() == n_ops0
+    assert eng.changelog_table(f"{s}.m").count() == n_ops0
     assert c.fetch(f"SELECT r FROM {s}.m") == [(10.0,)]
     with _no_jobs(spark) as jobs:
         # avg (10+10.4+30)/3 = 16.8 -> 17.0: must merge from the TRUE

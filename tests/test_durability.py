@@ -127,7 +127,7 @@ def test_epoch_recovery_covers_all_schemas(spark):
     rw1.insert(pd.DataFrame({"k": [1, 2]}), table_name="t",
                schema_name=sch, force_flush=True)
     hiwater = (
-        spark.table(f"{sch}.__rw_changelog__t")
+        rw1.engine.changelog_table(f"{sch}.t")
         .agg(F.max("rw_timestamp"))
         .first()[0]
     )

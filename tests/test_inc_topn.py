@@ -312,7 +312,7 @@ def test_topn_changelog_replay_consistency(eng_conn, spark):
     st = eng.mvs["tnt.m"]
     assert st.inc_topn is not None, "history demoted the top-n MV"
 
-    cl = spark.table("tnt.__rw_changelog__m").collect()
+    cl = eng.changelog_table("tnt.m").collect()
     for r in sorted(cl, key=lambda r: r["rw_timestamp"]):
         key = (r["p"], r["v"], r["rnk"])
         if r["op"] in ("Insert", "UpdateInsert"):

@@ -362,7 +362,7 @@ def test_incremental_left_join_mv_retracts_padded_rows(spark):
     assert sorted(rw.fetch(f"SELECT * FROM {mv}"), key=str) == [
         (1, "a", 10.0), (2, "b", 20.0)]
     ops = {(r.uid, r.name, r.op)
-           for r in spark.table(f"public.__rw_changelog__{mv}").collect()}
+           for r in rw.engine.changelog_table(mv).collect()}
     assert (2, None, "Delete") in ops and (2, "b", "Insert") in ops
 
     rw.insert(pd.DataFrame({"uid": [5], "amt": [50.0]}),
@@ -634,7 +634,7 @@ def test_incremental_join_agg_mv(spark):
     assert sorted(rw.fetch(f"SELECT * FROM {mv}")) == [
         ("ap", 7, 1, 7), ("eu", 5, 1, 5), ("na", 15, 3, 10)]
     ops = {(r.region, r.op) for r in
-           spark.table(f"public.__rw_changelog__{mv}")
+           rw.engine.changelog_table(mv)
            .filter("rw_timestamp > 4").collect()}
     assert ("na", "UpdateDelete") in ops and ("na", "UpdateInsert") in ops
     assert ("ap", "Insert") in ops
@@ -660,7 +660,7 @@ def test_incremental_join_agg_mv(spark):
     assert sorted(rw.fetch(f"SELECT * FROM {mv}")) == recompute()
     assert not any(r[0] == "ap" for r in rw.fetch(f"SELECT * FROM {mv}"))
     dels = {(r.region, r.op) for r in
-            spark.table(f"public.__rw_changelog__{mv}")
+            rw.engine.changelog_table(mv)
             .filter("op = 'Delete'").collect()}
     assert ("ap", "Delete") in dels
 
@@ -1019,7 +1019,7 @@ def test_join_mv_same_flush_insert_delete_reinsert_churn(spark):
     assert st.inc_join is not None, "churn flush must NOT demote"
     assert sorted(rw.fetch(f"SELECT * FROM {mv}")) == [(1, "na", 7)]
     # no spurious Delete in the MV changelog (breaks replay consumers)
-    cl = spark.table(f"public.__rw_changelog__{mv}")
+    cl = rw.engine.changelog_table(mv)
     assert cl.filter("op = 'Delete'").count() == 0
 
     # same churn against the join+agg fast path
@@ -1199,7 +1199,7 @@ def test_recompute_only_matches_recompute_through_dml(eng_conn):
     want = _r6(conn._dispatch(RC_SEL)[1])
     assert got == want
     # emptied group c emits Delete; b's change emits the update pair
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("inct.m"))
+    ops = [r["op"] for r in eng.changelog_table("inct.m")
            .orderBy("rw_timestamp").collect()]
     assert "Delete" in ops and "UpdateDelete" in ops
 
@@ -1272,7 +1272,7 @@ def test_joinagg_recompute_only_avg_by_dimension(eng_conn):
     conn.execute("DELETE FROM inct.o WHERE uid = 9")  # empties group ap
     conn.execute("FLUSH")
     check()
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("inct.m"))
+    ops = [r["op"] for r in eng.changelog_table("inct.m")
            .orderBy("rw_timestamp").collect()]
     assert "Delete" in ops and "UpdateDelete" in ops
 

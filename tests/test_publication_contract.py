@@ -101,14 +101,28 @@ class _Recorder:
             return orig_sql(self_, q, *a, **k)
 
         monkeypatch.setattr(SparkSession, "sql", sql)
-        # the direct paths' catalog commits: a partition commit writes
-        # the changelog, a generation swap writes the table
-        for meth in ("_commit_partition", "_set_location"):
-            def commit(name, *a, _orig=getattr(eng, meth), **k):
-                rec.wrote(name)
-                return _orig(name, *a, **k)
+        # the direct paths' commits: an epoch directory renamed into a
+        # changelog writes the changelog, a generation swap writes the
+        # table
+        set_location = eng._set_location
 
-            monkeypatch.setattr(eng, meth, commit)
+        def swap(name, *a, **k):
+            rec.wrote(name)
+            return set_location(name, *a, **k)
+
+        monkeypatch.setattr(eng, "_set_location", swap)
+        replace = os.replace
+
+        def publish(src, dst, *a, **k):
+            out = replace(src, dst, *a, **k)
+            parent, leaf = os.path.split(os.fspath(dst))
+            if leaf.startswith("rw_timestamp="):
+                for name, r in list(eng._records.items()):
+                    if r["loc"].rstrip("/") == parent:
+                        rec.wrote(name)
+            return out
+
+        monkeypatch.setattr(os, "replace", publish)
         for meth in ("saveAsTable", "insertInto"):
             orig = getattr(DataFrameWriter, meth)
 
@@ -125,8 +139,7 @@ class _Recorder:
         """Each epoch in ``fq``'s changelog was assigned, appended to the
         changelog and written to ``fq`` in one hold; returns them."""
         cl = eng.changelog_name(fq)
-        eng.spark.catalog.refreshTable(cl)
-        epochs = sorted(r[0] for r in eng.spark.table(cl)
+        epochs = sorted(r[0] for r in eng.changelog_table(fq)
                         .select("rw_timestamp").distinct().collect())
         assert epochs, f"{fq} published nothing"
         for e in epochs:

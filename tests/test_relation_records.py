@@ -41,7 +41,7 @@ def _bag(rows) -> Counter:
 def _replay(eng: SparkEngine, fq: str) -> Counter:
     """Fold the MV's whole changelog; a row retracted more often than
     it was added stays negative so the comparison fails."""
-    cl = eng.spark.table(eng.changelog_name(fq))
+    cl = eng.changelog_table(fq)
     cols = [c for c in cl.columns if c not in ("op", "rw_timestamp")]
     bag: Counter = Counter()
     for r in cl.collect():
@@ -100,15 +100,14 @@ class _Calls:
                 return f
 
             monkeypatch.setattr(cat, m, wrap())
-        for m in ("_commit_partition", "_set_location"):
-            def wrap(fn=getattr(eng, m), m=m):
-                def f(*a, **k):
-                    if calls.on:
-                        calls.n[m] += 1
-                    return fn(*a, **k)
-                return f
+        set_location = eng._set_location
 
-            monkeypatch.setattr(eng, m, wrap())
+        def counted_set_location(*a, **k):
+            if calls.on:
+                calls.n["_set_location"] += 1
+            return set_location(*a, **k)
+
+        monkeypatch.setattr(eng, "_set_location", counted_set_location)
 
 
 def _tick_shape(c: RisingWaveConnection, s: str) -> dict[str, str]:
@@ -142,7 +141,8 @@ def _tick(c: RisingWaveConnection, s: str, i: int) -> list:
     return c.fetch(f"FETCH 10 FROM {s}_cur")
 
 
-def test_warm_tick_catalog_statement_budget(spark, conn, monkeypatch):
+def test_warm_tick_catalog_statement_budget(spark, conn, monkeypatch,
+                                            py4j_calls):
     c, eng, s = conn
     mvs = _tick_shape(c, s)
     for i in range(3):  # warm: records resolved, SET LOCATION probed
@@ -152,13 +152,17 @@ def test_warm_tick_catalog_statement_budget(spark, conn, monkeypatch):
     calls = _Calls(monkeypatch, spark, eng)
     fallback = eng.direct_stats["fallback"]
     calls.on = True
+    py4j_calls.start()
     got = _tick(c, s, 3)
+    py4j_calls.stop()
     calls.on = False
     assert [r[0] for r in got] == [3]
-    # no SQL statement, spark.catalog call or spark.table: one partition
-    # commit per changelog (the base's and both MVs') and one swap per MV
-    assert calls.n == Counter(_commit_partition=3, _set_location=2), (
-        calls.n, calls.sql)
+    # no SQL statement, spark.catalog call or spark.table, and no
+    # partition registration (Spark registers changelog epochs when it
+    # reads them): one swap per MV
+    assert calls.n == Counter(_set_location=2), (calls.n, calls.sql)
+    assert py4j_calls.methods["createPartitions"] == 0, py4j_calls.methods
+    assert py4j_calls.n <= 30, (py4j_calls.n, py4j_calls.methods)
     assert eng.direct_stats["fallback"] == fallback
     for fq, stmt in mvs.items():
         _assert_consistent(eng, fq, stmt)

@@ -206,10 +206,9 @@ def test_mv_asof_crash_redelivery_dedup_keyed(conn_eng, spark):
     # the applied refresh delta (epoch E')
     conn.insert(pd.DataFrame({"p": ["a"], "v": [4]}),
                 table_name="b", schema_name="tt_t", force_flush=True)
-    cl = eng.changelog_name("tt_t.m")
-    spark.catalog.refreshTable(cl)
-    e_applied = spark.table(cl).agg(F.max("rw_timestamp")).first()[0]
-    delta = spark.table(cl).filter(
+    cl = eng.changelog_table("tt_t.m")
+    e_applied = cl.agg(F.max("rw_timestamp")).first()[0]
+    delta = cl.filter(
         F.col("rw_timestamp") == e_applied
     ).drop("rw_timestamp").localCheckpoint(eager=True)
 
@@ -254,10 +253,9 @@ def test_mv_asof_crash_redelivery_refused_for_bag_mv(conn_eng, spark):
     e_created = eng.current_epoch
     conn.insert(pd.DataFrame({"p": ["z"], "v": [7]}),
                 table_name="b2", schema_name="tt_t", force_flush=True)
-    cl = eng.changelog_name("tt_t.mb")
-    spark.catalog.refreshTable(cl)
-    e_applied = spark.table(cl).agg(F.max("rw_timestamp")).first()[0]
-    delta = spark.table(cl).filter(
+    cl = eng.changelog_table("tt_t.mb")
+    e_applied = cl.agg(F.max("rw_timestamp")).first()[0]
+    delta = cl.filter(
         F.col("rw_timestamp") == e_applied
     ).drop("rw_timestamp").localCheckpoint(eager=True)
     with eng._lock:

@@ -103,7 +103,7 @@ def test_tumble_mv_dml_retraction_keeps_armed(eng_conn):
     assert sorted(conn._dispatch("SELECT * FROM winc.m")[1]) == sorted(
         conn._dispatch(TUMBLE_SEL)[1]
     )
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("winc.m"))
+    ops = [r["op"] for r in eng.changelog_table("winc.m")
            .orderBy("rw_timestamp").collect()]
     assert "Delete" in ops
 
@@ -203,7 +203,7 @@ def test_having_mv_publication_gate(eng_conn):
     assert sorted(conn._dispatch("SELECT * FROM winc.m")[1]) == sorted(
         conn._dispatch(HAV_SEL)[1]
     ) == [("b", 3, 15)]
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("winc.m"))
+    ops = [r["op"] for r in eng.changelog_table("winc.m")
            .orderBy("rw_timestamp").collect()]
     assert "Delete" in ops and "Insert" in ops
 
@@ -425,7 +425,7 @@ def test_joinagg_having_and_distinct_recompute(eng_conn):
     assert sorted(conn._dispatch("SELECT * FROM winc.m")[1]) == sorted(
         conn._dispatch(JAHD_SEL)[1]
     ) == [("us", 1, 12.0)]
-    ops = [r["op"] for r in eng.spark.table(eng.changelog_name("winc.m"))
+    ops = [r["op"] for r in eng.changelog_table("winc.m")
            .orderBy("rw_timestamp").collect()]
     assert "Delete" in ops and "Insert" in ops
 
