@@ -181,6 +181,16 @@ class MVState:
         # any mutation), then the recorded answer. Reset whenever the
         # direct plan (re-)arms.
         self.set_location_ok: bool | None = None
+        # The direct plan's current result, kept in memory after the
+        # refresh that published it: (the relation record installed
+        # with that generation, {column: the list _direct_merge
+        # returned}). The next direct refresh merges into these lists
+        # instead of reading the stored files, but only while
+        # SparkEngine._records still holds that very record (identity,
+        # not location): every _forget, a foreign engine's swap, a
+        # re-arm and a restart send the refresh back to the disk read.
+        # A result read from disk is never kept.
+        self.direct_result: tuple[dict, dict[str, list]] | None = None
         # avg() companions for the direct plan: {group key tuple:
         # {alias: (sum_double, count)}} — the decomposition the Python
         # fold merges (avg = sum/count; the stored table holds only
@@ -323,6 +333,11 @@ class SparkEngine:
         # of the on-disk commit marker instead of a per-flush listing.
         # {cl: {"loc": str, "sig": (mtime_ns, size, token), "epochs": set}}
         self._epoch_cache: dict[str, dict] = {}
+        # Write-through copy of the newest epoch file each changelog
+        # published through _publish_epoch_dir: {changelog location:
+        # (file path, the Arrow table written there)}, replaced at the
+        # changelog's next publish. See _epoch_files.
+        self._written: dict[str, tuple[str, object]] = {}
         # Commits per changelog and the condition subscribers wait on
         # between FETCHes (cursor_commits / wait_cursor_commit):
         # _touch_epoch_marker bumps the count and wakes the waiters.
@@ -764,14 +779,6 @@ class SparkEngine:
             for fq in fqs:
                 self._records.pop(fq, None)
 
-    def _table_meta(self, fq: str) -> tuple[str | None, list[str]]:
-        """(filesystem location, partition columns) from the record."""
-        rec = self._relation(fq)
-        return (rec["loc"], rec["parts"]) if rec is not None else (None, [])
-
-    def _table_location(self, fq: str) -> str | None:
-        return self._table_meta(fq)[0]
-
     @staticmethod
     def _epoch_marker_path(loc: str) -> str:
         # underscore-prefixed: invisible to Spark's file listings and
@@ -812,9 +819,10 @@ class SparkEngine:
         with self._committed:
             self._commits[cl] = self._commits.get(cl, 0) + 1
             self._committed.notify_all()
-        loc = self._table_location(cl)
-        if loc is None:
+        rec = self._relation(cl)
+        if rec is None:
             return
+        loc = rec["loc"]
         marker = self._epoch_marker_path(loc)
         # Unique per write: epoch number + a uuid, so the signature is
         # CONTENT-based and a foreign process's write can never be
@@ -853,9 +861,10 @@ class SparkEngine:
         cross-process drift. None when the changelog is not in the
         epoch-partitioned layout (legacy unpartitioned tables take the
         aggregate/Spark paths)."""
-        loc, parts = self._table_meta(cl)
-        if loc is None or parts != ["rw_timestamp"]:
+        rec = self._relation(cl)
+        if rec is None or rec["parts"] != ["rw_timestamp"]:
             return None
+        loc = rec["loc"]
         marker = self._epoch_marker_path(loc)
         # Signature captured BEFORE the listing: a foreign commit
         # landing between stat and list is either in the listing
@@ -952,9 +961,10 @@ class SparkEngine:
         # bucket-aware Spark insertInto path.
         if self.table_props.get(fq, {}).get("bucket_by"):
             return None
-        loc = self._table_location(fq)  # None: missing table or view
-        if loc is None:
+        rec = self._relation(fq)  # None: missing table or view
+        if rec is None:
             return None
+        loc = rec["loc"]
         arrow_fields = []
         for f in schema.fields:
             t = self._arrow_type(f.dataType)
@@ -970,11 +980,12 @@ class SparkEngine:
             return None
         self._ensure_changelog(fq)
         cl = self.changelog_name(fq)
-        cl_loc, cl_parts = self._table_meta(cl)
+        cl_rec = self._relation(cl)
         # legacy-unpartitioned changelogs (pre-round-8 ALTER rewrites)
         # can't take a partition-dir append — Spark path handles them
-        if cl_loc is None or cl_parts != ["rw_timestamp"]:
+        if cl_rec is None or cl_rec["parts"] != ["rw_timestamp"]:
             return None
+        cl_loc = cl_rec["loc"]
         # align to the changelog's physical column order (diverges
         # after ALTER ADD COLUMN); rw_timestamp is the partition dir
         n = len(rows)
@@ -1008,14 +1019,19 @@ class SparkEngine:
             self._invalidate(fq)
         return epoch
 
-    @staticmethod
-    def _publish_epoch_dir(cl_loc: str, epoch: int, tab) -> None:
+    def _publish_epoch_dir(self, cl_loc: str, epoch: int, tab) -> None:
         """Publish changelog epoch ``epoch`` holding ``tab``: write it
         into the staging directory ``.rw_timestamp=<epoch>`` (dot-named:
         no listing sees it; one a crash left is cleared first) and
         rename that to ``rw_timestamp=<epoch>``. If the epoch's
         directory exists (two engines' counters issued it), the file
-        joins it, as a second Spark append would."""
+        joins it, as a second Spark append would.
+
+        Then keep ``tab`` under the published file's path as the
+        changelog's write-through entry (``self._written``), replacing
+        the previous epoch's: the direct refresh and FETCH that read
+        this epoch next take it from memory (_epoch_files). One entry
+        per changelog bounds the memory; a crash loses only that."""
         import pyarrow.parquet as pq
 
         stage = os.path.join(cl_loc, f".rw_timestamp={epoch}")
@@ -1031,6 +1047,29 @@ class SparkEngine:
                 raise
             os.replace(os.path.join(stage, fname), os.path.join(pdir, fname))
             os.rmdir(stage)
+        self._written[cl_loc] = (os.path.join(pdir, fname), tab)
+
+    def _epoch_files(self, cl_loc: str, epoch: int) -> list[tuple]:
+        """The files of changelog ``cl_loc``'s published epoch
+        ``epoch``, as (path, row count, Arrow table or None). The
+        directory listing decides which files exist, so a file another
+        engine joined into the epoch, a vacuum and a rewrite are all
+        honoured. The file _publish_epoch_dir last wrote to this
+        changelog comes with the table it wrote and costs no read;
+        every other file is counted from its footer and left for the
+        caller to read."""
+        import pyarrow.parquet as pq
+
+        kept = self._written.get(cl_loc)
+        out = []
+        for f in self._direct_part_files(
+            os.path.join(cl_loc, f"rw_timestamp={epoch}")
+        ):
+            if kept is not None and kept[0] == f:
+                out.append((f, kept[1].num_rows, kept[1]))
+            else:
+                out.append((f, pq.ParquetFile(f).metadata.num_rows, None))
+        return out
 
     def insert_df(self, name: str, df: DataFrame, schema_name: str | None = None) -> int:
         """Append a DataFrame to a table (creating it if absent — the
@@ -3580,18 +3619,27 @@ class SparkEngine:
     def _refresh_direct(self, state: MVState) -> bool:
         """Zero-Spark-job refresh of a simple-agg MV for a small
         insert-only delta: pending epochs come from the engine's epoch
-        manifest (_changelog_epochs), the delta rows from a pyarrow
-        read of just those epoch dirs, the group merge is a Python
-        fold, and publication is the same changelog epoch-directory
-        rename the direct ingest path uses plus a metadata-only
-        location swap (_set_location) of the (small) rewritten result.
-        This
+        manifest (_changelog_epochs), the delta rows from just those
+        epoch dirs (_epoch_files: the file the ingest just wrote comes
+        from memory, any other is read with pyarrow), the group merge
+        is a Python fold, and publication is the same changelog
+        epoch-directory rename the direct ingest path uses plus a
+        metadata-only location swap (_set_location) of the (small)
+        rewritten result. This
         closes the reference's insert → FLUSH → on_change loop
         (/root/reference/risingwave/core.py:541-560) at engine-native
         cost: no job dispatch anywhere between the client's insert and
         the subscriber's delivery. On a cluster lakehouse the
         equivalent is a driver-side merge commit of touched groups
         (Delta/Iceberg MERGE over a tiny delta file).
+
+        The stored result is read from disk only when it is not
+        resident: after a publication the merged column lists stay on
+        ``state.direct_result`` with the record installed for that
+        generation, and the next refresh merges into them while
+        ``self._records`` still holds that record (an identity test; a
+        refresh whose delta changes nothing keeps them). A warm tick
+        therefore reads no parquet and converts no stored row.
 
         Returns True when fully handled; False falls through to the
         Spark fast path / snapshot-diff (large delta, retractions in
@@ -3621,8 +3669,8 @@ class SparkEngine:
             if self.vacuum_floor.get(base_cl, 0) > state.last_epoch:
                 state.inc_direct = None
                 return False
-            loc_cl, parts_cl = self._table_meta(base_cl)
-            if loc_cl is None or parts_cl != ["rw_timestamp"]:
+            rec_cl = self._relation(base_cl)
+            if rec_cl is None or rec_cl["parts"] != ["rw_timestamp"]:
                 # legacy unpartitioned layout: answer the no-op check
                 # (the common idle-flush case) before handing larger
                 # work to the Spark paths
@@ -3643,36 +3691,41 @@ class SparkEngine:
             epochs = sorted(
                 e for e in eps_all if state.last_epoch < e <= m1
             )
-            files: list[str] = []
-            total = 0
-            for e in epochs:
-                fs = self._direct_part_files(
-                    os.path.join(loc_cl, f"rw_timestamp={e}")
-                )
-                for f in fs:
-                    total += pq.ParquetFile(f).metadata.num_rows
-                files.extend(fs)
-            if total > self.DIRECT_MAX_DELTA_ROWS:
+            files = [
+                f for e in epochs
+                for f in self._epoch_files(rec_cl["loc"], e)
+            ]
+            if sum(n for _, n, _ in files) > self.DIRECT_MAX_DELTA_ROWS:
                 return False
             # The MV's record is current: this path writes it after
             # its own _set_location swap below, and every other
             # publication of fq (the Spark paths' DROP+RENAME to the
             # canonical location) clears it in _refresh_mv_locked, so
             # a generation dir read here is never a superseded one.
-            loc_mv, parts_mv = self._table_meta(fq)
-            if loc_mv is None or parts_mv:
+            rec_mv = self._relation(fq)
+            if rec_mv is None or rec_mv["parts"]:
                 return False
-            mv_files = self._direct_part_files(loc_mv)
-            if (
-                sum(pq.ParquetFile(f).metadata.num_rows for f in mv_files)
-                > self.DIRECT_MAX_RESULT_ROWS
-            ):
+            loc_mv = rec_mv["loc"]
+            # The resident result is this generation's only while fq's
+            # record is the very one installed with it.
+            resident = state.direct_result
+            if resident is not None and resident[0] is not rec_mv:
+                resident = state.direct_result = None
+            if resident is None:
+                mv_files = self._direct_part_files(loc_mv)
+                n_stored = sum(
+                    pq.ParquetFile(f).metadata.num_rows for f in mv_files
+                )
+            else:
+                n_stored = len(next(iter(resident[1].values())))
+            if n_stored > self.DIRECT_MAX_RESULT_ROWS:
                 return False
             cl = self.changelog_name(fq)
             self._ensure_changelog(fq)
-            cl_loc, cl_parts = self._table_meta(cl)
-            if cl_loc is None or cl_parts != ["rw_timestamp"]:
+            cl_rec = self._relation(cl)
+            if cl_rec is None or cl_rec["parts"] != ["rw_timestamp"]:
                 return False
+            cl_loc = cl_rec["loc"]
             # avg groups merge through their sum/count companions;
             # without them (engine restart, post-Spark-path rewrite)
             # the re-arm probe must rebuild the aux first.
@@ -3692,8 +3745,9 @@ class SparkEngine:
             )
             delta_cols: dict[str, list] = {c: [] for c in need}
             ops: list[str] = []
-            for f in files:
-                t = pq.read_table(f, columns=[*need, "op"])
+            for f, _, t in files:
+                if t is None:
+                    t = pq.read_table(f, columns=[*need, "op"])
                 ops.extend(t.column("op").to_pylist())
                 for c in need:
                     delta_cols[c].extend(self._pa_column_pylist(t.column(c)))
@@ -3736,11 +3790,14 @@ class SparkEngine:
                 if at is None:
                     return False
                 pa_types[fld.name] = at
-            stored: dict[str, list] = {c: [] for c in cols}
-            for f in mv_files:
-                t = pq.read_table(f)
-                for c in cols:
-                    stored[c].extend(self._pa_column_pylist(t.column(c)))
+            if resident is not None:
+                stored = resident[1]
+            else:
+                stored = {c: [] for c in cols}
+                for f in mv_files:
+                    t = pq.read_table(f)
+                    for c in cols:
+                        stored[c].extend(self._pa_column_pylist(t.column(c)))
             try:
                 merged = self._direct_merge(
                     d, state, cols, stored, delta_cols, n_delta,
@@ -3821,9 +3878,12 @@ class SparkEngine:
             self._set_location(fq, new_loc)
             # The swap dropped fq's cached relation. Record the new
             # generation dir (same schema, unpartitioned) and keep the
-            # metadata the swap installed instead of re-resolving them.
-            self._records[fq] = dict(self._records.get(fq, {}), loc=new_loc,
-                                     parts=[], schema=mv_schema)
+            # metadata the swap installed instead of re-resolving them;
+            # the merged lists stay resident with that record.
+            rec = dict(self._records.get(fq, {}), loc=new_loc, parts=[],
+                       schema=mv_schema)
+            self._records[fq] = rec
+            state.direct_result = (rec, new_rows)
             shutil.rmtree(loc_mv, ignore_errors=True)  # superseded gen
             state.last_epoch = m1
             if aux_new is not None:
@@ -5716,6 +5776,7 @@ class SparkEngine:
             state.inc_direct = d
             state.direct_aux = aux if d is not None else None
             state.set_location_ok = None  # new arm: probe again
+            state.direct_result = None
             state.last_epoch = m0
 
         return df, list(views.values()), finalize
@@ -7348,9 +7409,12 @@ class SparkEngine:
         """Driver-side FETCH over an epoch-partitioned changelog:
         pending epochs come from the engine's epoch manifest
         (_changelog_epochs: published directories, registered with
-        Spark or not), whole-epoch batching from parquet footer row
-        counts, and the rows themselves through a pyarrow read of just
-        the chosen epoch dirs, each dir listed once. An IDLE poll costs
+        Spark or not), and each chosen epoch dir is listed once
+        (_epoch_files). The file this engine last published to the
+        changelog comes with the table it wrote, so the subscriber of
+        a tick reads nothing from disk; other files give whole-epoch
+        batching from their footer row counts and their rows through a
+        pyarrow read. An IDLE poll costs
         one os.stat and ZERO jobs or catalog calls, so a thousand idle
         subscriptions put no load on the cluster; a
         non-idle poll — which on_change makes as soon as a commit
@@ -7362,8 +7426,8 @@ class SparkEngine:
         so every listed epoch is complete."""
         import pyarrow.parquet as pq
 
-        loc, part_cols = self._table_meta(cl)
-        if loc is None or part_cols != ["rw_timestamp"]:
+        rec = self._relation(cl)
+        if rec is None or rec["parts"] != ["rw_timestamp"]:
             return None  # legacy unpartitioned changelog: Spark path
         eps = self._changelog_epochs(cl)
         if eps is None:
@@ -7371,23 +7435,11 @@ class SparkEngine:
         cand = sorted(e for e in eps if e > pos)
         if not cand:
             return [], [], pos
-
-        def part_files(epoch: int) -> list[str]:
-            pdir = os.path.join(loc, f"rw_timestamp={epoch}")
-            try:
-                return [
-                    os.path.join(pdir, f)
-                    for f in sorted(os.listdir(pdir))
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                ]
-            except OSError:
-                return []
-
-        chosen: list[tuple[int, list[str]]] = []
+        chosen: list[tuple[int, list[tuple]]] = []
         cum = 0
         for e in cand:
-            files = part_files(e)
-            rows_e = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+            files = self._epoch_files(rec["loc"], e)
+            rows_e = sum(n_f for _, n_f, _ in files)
             if chosen and cum + rows_e > n:
                 break
             cum += rows_e
@@ -7398,8 +7450,9 @@ class SparkEngine:
         data_cols = [c for c in phys if c != "rw_timestamp"]
         out: list[tuple] = []
         for e, files in chosen:
-            for f in files:
-                t = pq.read_table(f)
+            for f, _, t in files:
+                if t is None:
+                    t = pq.read_table(f)
                 cols_present = {
                     name: self._pa_column_pylist(t.column(name))
                     for name in t.column_names

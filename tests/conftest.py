@@ -72,3 +72,63 @@ def py4j_calls(monkeypatch):
 
     monkeypatch.setattr(ClientServerConnection, "send_command", send_command)
     return calls
+
+
+class ParquetReads:
+    """Counts, per thread, between start() and stop(): parquet reads
+    (``read_table`` calls and ``ParquetFile`` opens) and the Arrow
+    columns SparkEngine._pa_column_pylist turns into Python
+    (``conversions``) with the values they held (``values``)."""
+
+    def __init__(self):
+        self.threads: dict[int, Counter] = {}
+        self.on = False
+
+    def start(self) -> None:
+        self.threads.clear()
+        self.on = True
+
+    def stop(self) -> None:
+        self.on = False
+
+    def record(self, what: str, n: int = 1) -> None:
+        if self.on:
+            c = self.threads.setdefault(threading.get_ident(), Counter())
+            c[what] += n
+
+    def of(self, thread: int | None = None) -> Counter:
+        """The counts of ``thread`` (default: the calling thread)."""
+        return self.threads.get(thread or threading.get_ident(), Counter())
+
+
+@pytest.fixture
+def parquet_reads(monkeypatch):
+    """A ParquetReads fed by every pyarrow parquet read and every
+    SparkEngine._pa_column_pylist call of this test."""
+    import pyarrow.parquet as pq
+
+    from risingwave_py_spark.engine import SparkEngine
+
+    reads = ParquetReads()
+    read_table, parquet_file = pq.read_table, pq.ParquetFile
+    pylist = SparkEngine._pa_column_pylist
+
+    def counted_read_table(*a, **k):
+        reads.record("read_table")
+        return read_table(*a, **k)
+
+    def counted_parquet_file(*a, **k):
+        reads.record("ParquetFile")
+        return parquet_file(*a, **k)
+
+    def counted_pylist(col):
+        vals = pylist(col)
+        reads.record("conversions")
+        reads.record("values", len(vals))
+        return vals
+
+    monkeypatch.setattr(pq, "read_table", counted_read_table)
+    monkeypatch.setattr(pq, "ParquetFile", counted_parquet_file)
+    monkeypatch.setattr(SparkEngine, "_pa_column_pylist",
+                        staticmethod(counted_pylist))
+    return reads

@@ -23,13 +23,17 @@ from risingwave_py_spark.engine import SparkEngine
 @pytest.fixture
 def conn(spark):
     schema = f"ing_{uuid.uuid4().hex[:8]}"
+    current = spark.catalog.currentDatabase()
     eng = SparkEngine(spark=spark, default_schema=schema)
     yield RisingWaveConnection(eng), eng, schema
+    # SparkEngine.sql switches the session to the engine's schema;
+    # later tests resolve unqualified names against the current one
+    spark.catalog.setCurrentDatabase(current)
     spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
 
 
 def _rwfast_files(eng, fq):
-    loc = eng._table_location(fq)
+    loc = eng._relation(fq)["loc"]
     return glob.glob(os.path.join(loc, "rwfast-*.parquet"))
 
 

@@ -106,7 +106,7 @@ def test_manifest_content_signature_same_size_drift(fresh):
                 table_name="t", schema_name="mant", force_flush=True)
     cl = eng.changelog_name("mant.t")
     eng._changelog_max_epoch(cl)  # hydrate the manifest
-    loc = eng._table_location(cl)
+    loc = eng._relation(cl)["loc"]
     marker = eng._epoch_marker_path(loc)
     st = os.stat(marker)
     with open(marker) as fh:

@@ -170,7 +170,7 @@ def test_staging_directory_never_counts(spark, conn):
     eps = _direct(eng, fq, [("a", 1), ("b", 2)])
     # a crash after writing an epoch's staging directory, before its
     # rename: a complete file under the dot-name
-    loc = eng._table_location(cl)
+    loc = eng._relation(cl)["loc"]
     staged = max(eps) + 100
     stage = os.path.join(loc, f".rw_timestamp={staged}")
     os.mkdir(stage)

@@ -206,7 +206,7 @@ def test_direct_fast_paths_under_hive_catalog(tmp_path):
         assert eng.mvs["public.ms_agg"].inc_direct is not None
         conn.insert_row("ms_ev", force_flush=True, k=1, v=10)
         # 1) ingest took the direct path (rwfast files on disk)
-        loc = eng._table_location("public.ms_ev")
+        loc = eng._relation("public.ms_ev")["loc"]
         assert glob.glob(os.path.join(loc, "rwfast-*.parquet")), loc
         # 2) steady state is Spark-job-free under Hive too
         tracker = spark.sparkContext.statusTracker()
@@ -221,7 +221,7 @@ def test_direct_fast_paths_under_hive_catalog(tmp_path):
         cols, rows = eng.fetch_cursor("ms_cur", 100)
         assert [r[:3] for r in rows] == [(1, 10, "Insert"), (2, 20, "Insert")], rows
         # 4) the MV table is being served from a generation dir
-        mv_loc = eng._table_meta("public.ms_agg")[0]
+        mv_loc = eng._relation("public.ms_agg")["loc"]
         print("MV_LOC_GEN", "__rwgen_" in mv_loc)
         print("A_MV", conn.fetch("SELECT n, s FROM ms_agg"))
         spark.stop()

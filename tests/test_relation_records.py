@@ -177,7 +177,7 @@ def test_spark_path_refresh_between_direct_refreshes(spark, conn):
     c.insert_row("t", schema_name=s, force_flush=True, k="a", v=1)
     c.insert_row("t", schema_name=s, force_flush=True, k="b", v=2)
     assert eng.direct_stats["fallback"] == 0
-    assert "__rwgen_" in eng._table_location(fq)
+    assert "__rwgen_" in eng._relation(fq)["loc"]
     _assert_consistent(eng, fq, stmt)
     # retractions take a Spark path, which republishes the MV
     c.execute(f"UPDATE {s}.t SET v = v + 10 WHERE k = 'a'")
@@ -233,7 +233,7 @@ def test_drop_and_recreate_mv_with_another_select(spark, conn):
               f"SELECT k, sum(v) AS sv FROM {s}.t GROUP BY k")
     for i in range(3):
         c.insert_row("t", schema_name=s, force_flush=True, k=f"k{i % 2}", v=i)
-    assert "__rwgen_" in eng._table_location(fq)
+    assert "__rwgen_" in eng._relation(fq)["loc"]
     c.execute(f"DROP MATERIALIZED VIEW {fq}")
     assert fq not in eng._records
     stmt = f"SELECT k, count(*) AS n, max(v) AS hi FROM {s}.t GROUP BY k"
@@ -300,7 +300,7 @@ def test_catalog_refusing_set_location_falls_back_cleanly(spark, conn,
     assert eng.direct_stats["fallback"] == 3
     assert len(tries) == 1, "the refusal is recorded: probed once per arm"
     assert eng.mvs[fq].set_location_ok is False
-    assert "__rwgen_" not in eng._table_location(fq)
+    assert "__rwgen_" not in eng._relation(fq)["loc"]
     _assert_consistent(eng, fq, stmt)
 
 
