@@ -351,6 +351,17 @@ class SparkEngine:
         # phase deltas next to the latency percentiles.
         self.direct_stats = {"fallback": 0, "rearm": 0, "aux_rebuild": 0}
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {default_schema}")
+        # Static for the session's life, read once so the catalog log
+        # (_persist_catalog, _restore_catalog) makes no JVM call: the
+        # default schema's directory, <warehouse>/<schema>.db (the
+        # warehouse itself for `default`), and the stamp rule's inputs.
+        self._schema_dir = (
+            self._jc.catalog.getDatabaseMetadata(default_schema).locationUri().getPath()
+        )
+        self._app_id = spark.sparkContext.applicationId
+        self._in_memory_catalog = (
+            spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "in-memory"
+        )
         RW.register_pg_shims(self.spark)
         self._restore_catalog()
         self._install_persist_hooks()
@@ -558,7 +569,7 @@ class SparkEngine:
                 # then need NO exchange (the bucketed scan already
                 # satisfies the required hash distribution). This is
                 # the measured −47%/zero-exchange q18-shape layout
-                # (SCALE.md, tools/bucketing_probe.py) promoted to DDL;
+                # (SCALE.md, "Bucketed layout") promoted to DDL;
                 # on a lakehouse the equivalent is Delta liquid
                 # clustering / Iceberg sorted partitions.
                 bcols = ", ".join(f"`{c}`" for c in bucket_by)
@@ -1361,11 +1372,28 @@ class SparkEngine:
         return [key_norm], [(vars_[key_norm],)]
 
     # -- catalog durability (reference parity: the RW server's catalog
-    # -- survives restarts; here the engine catalog persists as a
-    # -- one-row JSON table in the warehouse) ------------------------------
+    # -- survives restarts; here the engine catalog doc is a log of
+    # -- numbered JSON files, <schema dir>/_rw_meta/<seq>.json, in the
+    # -- default schema's directory: one file per DDL, created
+    # -- exclusively, and the newest complete file wins) ------------------
 
-    def _catalog_fq(self) -> str:
-        return f"{self.default_schema}.__rw_catalog__"
+    # The log keeps the newest version and the one below it: a crash
+    # that leaves the newest half-written falls back to its
+    # predecessor.
+    _CATALOG_VERSIONS_KEPT = 2
+
+    def _catalog_dir(self) -> str:
+        return os.path.join(self._schema_dir, "_rw_meta")
+
+    def _catalog_versions(self) -> list[int]:
+        """The log's version numbers, ascending."""
+        try:
+            names = os.listdir(self._catalog_dir())
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
+        )
 
     _DDL_METHODS = (
         "create_table", "drop_table", "create_mv", "drop_mv",
@@ -1393,10 +1421,16 @@ class SparkEngine:
 
     def _persist_catalog(self) -> None:
         """Write the engine's object catalog (MV/subscription/source/
-        sink/upsert/index/watermark/UDF definitions + vacuum floors)
-        to the warehouse. Called after every DDL mutation — NOT on the
-        data path (epochs are recovered from the changelogs, which are
-        the authoritative high-water mark)."""
+        sink/upsert/index/watermark/UDF definitions + vacuum floors) as
+        the next version of the catalog log. Called after every DDL
+        mutation — NOT on the data path (epochs are recovered from the
+        changelogs, which are the authoritative high-water mark).
+
+        The version is 1 + the highest listed one, created with
+        exclusive create and fsynced; a version another engine took
+        first moves this write to the next number, so no write
+        overwrites another and the last writer wins. Versions below
+        the previous one are then deleted. No JVM call, no Spark job."""
         import json
 
         def scalarize(v):
@@ -1412,166 +1446,96 @@ class SparkEngine:
         def j(d: dict) -> dict:
             return {k: scalarize(v) for k, v in d.items()}
 
-        # Monotonic persist stamp: restore picks the candidate doc
-        # (live catalog or any leftover stage) with the HIGHEST stamp,
-        # never "whatever listTables yields first". Seeded from the
-        # restored doc at startup so it keeps rising across restarts.
-        self._persist_seq = getattr(self, "_persist_seq", 0) + 1
-        doc = {
-            "persist_seq": self._persist_seq,
-            "epoch": self._epoch,
-            "mvs": {
-                fq: {
-                    "stmt": s.stmt,
-                    "key_cols": s.key_cols,
-                    "emit_on_close": s.emit_on_close,
-                    "created_epoch": s.created_epoch,
-                }
-                for fq, s in self.mvs.items()
-            },
-            "upsert_meta": j(self.upsert_meta),
-            "subscriptions": j(self.subscriptions),
-            "sources": j(self.sources),
-            "sinks": j(self.sinks),
-            "watermarks": j(self.watermarks),
-            "table_props": j(self.table_props),
-            "indexes": j(self.indexes),
-            "udf_defs": self.udf_defs,
-            "vacuum_floor": dict(self.vacuum_floor),
-            "epoch_wall": {str(k): v for k, v in self.epoch_wall.items()},
-        }
-        df = self.spark.createDataFrame([(json.dumps(doc),)], "doc string")
-        cat = self._catalog_fq()
-        # Stage name is PER-ENGINE: two live engines over one warehouse
-        # (restart tests, multi-client) must never clobber each other's
-        # in-flight stage write; only the final drop+rename swap is
-        # shared, and that is retried (last writer wins).
-        if not hasattr(self, "_engine_tag"):
-            import uuid as _uuid
-
-            self._engine_tag = _uuid.uuid4().hex[:8]
-        stage = f"{cat}stage_{self._engine_tag}__"
         with self._lock:
-            # Stage-then-swap: the new doc is fully committed to a
-            # staging table BEFORE the live catalog is touched, so a
-            # crash at any point leaves a readable doc (either the old
-            # catalog, or — in the drop→rename window — the staged one;
-            # _restore_catalog picks the highest-stamped readable doc).
-            for _attempt in range(3):
-                self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-                self._clear_stale_location(stage)
-                df.write.format("parquet").saveAsTable(stage)
+            doc = {
+                # the writing SparkContext: see _restore_catalog
+                "app": self._app_id,
+                "epoch": self._epoch,
+                "mvs": {
+                    fq: {
+                        "stmt": s.stmt,
+                        "key_cols": s.key_cols,
+                        "emit_on_close": s.emit_on_close,
+                        "created_epoch": s.created_epoch,
+                    }
+                    for fq, s in self.mvs.items()
+                },
+                "upsert_meta": j(self.upsert_meta),
+                "subscriptions": j(self.subscriptions),
+                "sources": j(self.sources),
+                "sinks": j(self.sinks),
+                "watermarks": j(self.watermarks),
+                "table_props": j(self.table_props),
+                "indexes": j(self.indexes),
+                "udf_defs": self.udf_defs,
+                "vacuum_floor": dict(self.vacuum_floor),
+                "epoch_wall": {str(k): v for k, v in self.epoch_wall.items()},
+            }
+            text = json.dumps(doc)
+            log_dir = self._catalog_dir()
+            # mkdir, not makedirs: a dropped schema's directory is not
+            # brought back
+            with contextlib.suppress(FileExistsError):
+                os.mkdir(log_dir)
+            listed = self._catalog_versions()
+            seq = (listed[-1] if listed else 0) + 1
+            while True:
                 try:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
-                    # a prior PROCESS may have left the data dir behind
-                    # while this session's catalog has no such table
-                    self._clear_stale_location(cat)
-                    self.spark.sql(f"ALTER TABLE {stage} RENAME TO {cat}")
+                    f = open(os.path.join(log_dir, f"{seq}.json"), "x")
                     break
-                except Exception:  # noqa: BLE001 — another engine won
-                    # the swap between our drop and rename (or GC'd our
-                    # stage as superseded); replace, re-staging if gone
-                    if not self.spark.catalog.tableExists(stage):
-                        continue  # stage vanished — rebuild and retry
-                    self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
-                    self._clear_stale_location(cat)
-                    self.spark.sql(f"ALTER TABLE {stage} RENAME TO {cat}")
-                    break
-            else:
-                # Every attempt lost the stage to a concurrent GC.
-                # DDL must never APPEAR durable while the doc was
-                # silently dropped — make one final unconditional
-                # stage+swap and let any failure here raise loudly.
-                self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-                self._clear_stale_location(stage)
-                df.write.format("parquet").saveAsTable(stage)
-                self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
-                self._clear_stale_location(cat)
-                self.spark.sql(f"ALTER TABLE {stage} RENAME TO {cat}")
-            self.spark.catalog.refreshTable(cat)
-            self._gc_foreign_stages(cat, doc["persist_seq"])
+                except FileExistsError:
+                    seq += 1  # another engine took this version
+            with f:
+                f.write(text)
+                f.flush()
+                os.fsync(f.fileno())
+            for old in listed:
+                if old <= seq - self._CATALOG_VERSIONS_KEPT:
+                    # another engine's persist may have deleted it
+                    with contextlib.suppress(FileNotFoundError):
+                        os.unlink(os.path.join(log_dir, f"{old}.json"))
 
-    def _gc_foreign_stages(
-        self, cat_fq: str, installed_seq: int, keep: str | None = None
-    ) -> None:
-        """Drop leftover stage tables from OTHER engines whose doc is
-        superseded by the stamp just installed. Stages with a higher
-        stamp (a concurrent engine about to win the swap),
-        in-flight/unreadable stages, and ``keep`` (the stage a restore
-        just read the newest doc from) are left alone. Normally there
-        are zero foreign stages, so this is one listTables probe."""
+    def _read_catalog(self) -> dict | None:
+        """The newest version of the catalog log that parses, or None.
+        A crash leaves a half-written version that never parses, so
+        the read falls back to the one below it; a version deleted
+        under the read (a newer persist) makes it list again."""
         import json
 
-        try:
-            db, tbl = _split_fq(cat_fq)
-            mine = f"{tbl}stage_{getattr(self, '_engine_tag', None)}__"
-            for t in self.spark.catalog.listTables(db):
-                if not t.name.startswith(tbl + "stage_") or t.name == mine:
-                    continue
-                stage_fq = f"{db}.{t.name}"
-                if keep is not None and stage_fq == keep:
-                    continue
+        while True:
+            for seq in reversed(self._catalog_versions()):
                 try:
-                    rows = self.spark.table(stage_fq).limit(1).collect()
-                    d = json.loads(rows[0][0]) if rows else {}
-                    seq = int(d.get("persist_seq", d.get("epoch", 0)))
-                except Exception:  # noqa: BLE001 — in-flight: keep
+                    with open(os.path.join(self._catalog_dir(), f"{seq}.json")) as f:
+                        return json.loads(f.read())
+                except FileNotFoundError:
+                    break
+                except ValueError:
                     continue
-                if seq <= installed_seq:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {stage_fq}")
-        except Exception:  # noqa: BLE001 — GC is best-effort
-            pass
+            else:
+                return None
 
     def _restore_catalog(self) -> None:
-        """Rehydrate the engine catalog from a previous engine's
-        persisted state over the same warehouse: object definitions
-        come from the catalog doc; the epoch counter is recovered from
-        the changelogs themselves (max rw_timestamp), so epochs never
-        repeat even if the process died mid-flush. Incremental MVs
-        restart on the snapshot-diff path (their delta induction base
-        died with the process) and re-arm on their first refresh."""
-        import json
+        """Rehydrate the engine catalog from the newest complete version
+        of the catalog log (_read_catalog) a previous engine over the
+        same warehouse wrote: object definitions come from the doc; the
+        epoch counter is recovered from the changelogs themselves (max
+        rw_timestamp), so epochs never repeat even if the process died
+        mid-flush. Incremental MVs restart on the snapshot-diff path
+        (their delta induction base died with the process) and re-arm
+        on their first refresh.
 
-        fq = self._catalog_fq()
-        # The persist path stages then swaps; a crash in the
-        # drop→rename window leaves only a staged doc. Read EVERY
-        # readable candidate (live catalog + any stage a dead engine
-        # left) and restore the HIGHEST persist_seq stamp —
-        # listTables order is arbitrary, and a stage from a long-dead
-        # engine must never shadow the newest doc.
-        stage_cands: list[str] = []
-        try:
-            _db, _tbl = _split_fq(fq)
-            stage_cands = [
-                f"{_db}.{t.name}"
-                for t in self.spark.catalog.listTables(_db)
-                if t.name.startswith(_tbl + "stage_")
-            ]
-        except Exception:  # noqa: BLE001 — no schema yet = fresh start
-            pass
-        doc, best_seq, winner = None, -1, None
-        for cand in [fq] + stage_cands:
-            try:
-                if not self.spark.catalog.tableExists(cand):
-                    continue
-                rows = self.spark.table(cand).limit(1).collect()
-                if not rows:
-                    continue
-                d = json.loads(rows[0][0])
-            except Exception:  # noqa: BLE001 — unreadable = try next
-                continue
-            seq = int(d.get("persist_seq", d.get("epoch", 0)))
-            if seq > best_seq:  # strict >: the live catalog wins ties
-                doc, best_seq, winner = d, seq, cand
+        On the in-memory Spark catalog a doc restores only in the
+        SparkContext that wrote it: another one's catalog, and every
+        table the doc names, died with it, so its log is debris and is
+        cleared (as _clear_stale_location clears a dead process's table
+        directory). A persistent metastore keeps the tables, so there
+        any doc restores."""
+        doc = self._read_catalog()
         if doc is None:
             return
-        # Keep the stamp rising across restarts, then GC the
-        # now-superseded stages so they never shadow a future restore.
-        # The winner itself is protected: if the newest doc lives ONLY
-        # in a crashed engine's stage, dropping it before this engine
-        # re-persists would lose the catalog to a crash right here.
-        self._persist_seq = max(getattr(self, "_persist_seq", 0), best_seq)
-        self._gc_foreign_stages(fq, best_seq, keep=winner)
+        if self._in_memory_catalog and doc.get("app") != self._app_id:
+            shutil.rmtree(self._catalog_dir(), ignore_errors=True)
+            return
         for mv_fq, m in doc.get("mvs", {}).items():
             if self.spark.catalog.tableExists(mv_fq):
                 self._register_existing_mv(
@@ -1627,17 +1591,18 @@ class SparkEngine:
         # epoch recovery: the changelogs are the authoritative
         # high-water mark (persisting per-epoch would put a write on
         # the data path): the published epoch dirs, listed without a
-        # Spark job, registered with Spark or not.
+        # Spark job, registered with Spark or not. The external catalog
+        # lists names directly; spark.catalog's listings are Datasets
+        # that each run Spark jobs.
         max_epoch = 0
         try:
-            for db_obj in self.spark.catalog.listDatabases():
-                db = db_obj.name
-                for t in self.spark.catalog.listTables(db):
-                    if t.name.startswith("__rw_changelog__"):
-                        max_epoch = max(
-                            max_epoch,
-                            self._changelog_max_epoch(f"{db}.{t.name}") or 0,
-                        )
+            ext = self.spark._jsparkSession.sharedState().externalCatalog()
+            for db in ext.listDatabases().mkString("\n").split("\n"):
+                names = ext.listTables(db, "__rw_changelog__*").mkString("\n")
+                for t in filter(None, names.split("\n")):
+                    max_epoch = max(
+                        max_epoch, self._changelog_max_epoch(f"{db}.{t}") or 0
+                    )
         except Exception:  # noqa: BLE001
             pass
         # The persisted counter floors epochs consumed without
@@ -1648,12 +1613,6 @@ class SparkEngine:
         # epoch, which by definition exists in a changelog and is
         # covered by max_epoch.
         self._epoch = max(self._epoch, max_epoch, int(doc.get("epoch", 0)))
-        if winner != fq:
-            # The newest doc was recovered from a crashed engine's
-            # stage: re-commit it to the live catalog immediately —
-            # that persist (stamped best_seq+1) also GCs the crashed
-            # stage once the doc is safely swapped in.
-            self._persist_catalog()
 
     def show_create(self, name: str, schema_name: str | None = None):
         """``SHOW CREATE TABLE|MATERIALIZED VIEW|SOURCE|SINK x`` —

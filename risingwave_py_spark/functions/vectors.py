@@ -768,8 +768,8 @@ def _ivf_probe_topk(
     codebook from the stored cents table, query vectors and candidates
     from the stored posting lists — nothing rescans the corpus.
     ``n_probe`` is the cost/recall dial (registered queries pin it to
-    N_PROBE so the oracle matches; tools/ivf_recall_probe.py sweeps
-    it to measure the curve)."""
+    N_PROBE so the oracle matches; SCALE.md records the measured
+    cost/recall curve)."""
     from pyspark.sql import Window as W
 
     from risingwave_py_spark.functions.index_store import live_index

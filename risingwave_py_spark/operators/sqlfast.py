@@ -64,8 +64,8 @@ _REV_SUM = _limb_sum(_REV_E4, 4)
 _CHARGE_E6 = f"({_REV_E4}) * (100 + {_cents('l_tax')})"
 
 
-# SQL text per registered query — tools/scaling_probe.py's hint-A/B
-# mode reads these to time hint-stripped variants interleaved.
+# SQL text per registered query; operators/bucketed.py reads it to
+# build each query's bucketed variant.
 SQL_TEXT: dict[str, str] = {}
 
 

@@ -37,12 +37,15 @@ def build_session(
     ``persistent_metastore`` (or env SPARK_GRAFT_METASTORE=derby)
     backs the Spark catalog with a local embedded Derby Hive
     metastore next to the warehouse: table/view definitions then
-    survive PROCESS restarts natively, so a fresh process recovers
-    the engine catalog without relying on the JSON-doc replay alone
-    (the doc still restores MV/subscription/upsert semantics the
-    Spark catalog cannot hold). Single-process-at-a-time: embedded
-    Derby locks its database directory, so the multi-engine-one-
-    warehouse scenarios stay on the default in-memory catalog. On a
+    survive PROCESS restarts natively, and a fresh process restores
+    the engine's catalog log (``<schema dir>/_rw_meta/<seq>.json``,
+    the MV/subscription/upsert semantics the Spark catalog cannot
+    hold). On the default in-memory catalog a new process sees none
+    of the old tables, so it restores no catalog doc either: a doc
+    restores only in the SparkContext that wrote it.
+    Single-process-at-a-time: embedded Derby locks its database
+    directory, so the multi-engine-one-warehouse scenarios stay on
+    the default in-memory catalog. On a
     real cluster the same flag's role is played by the shared Hive/
     Glue metastore spark-submit configures.
     """

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
 import threading
 from collections import Counter
@@ -18,6 +20,21 @@ def spark():
 
     s = build_session("tests", shuffle_partitions=8)
     yield s
+
+
+def drop_schema(spark, schema: str) -> None:
+    """Drop ``schema`` and its directory, first handing the session back
+    a live current database. SparkEngine.sql makes an engine's schema
+    the session's current database; a later fixture that saves and
+    restores the current database must never find a dropped one.
+    Every schema fixture drops through here."""
+    cat = spark.catalog
+    current = cat.currentDatabase()
+    if current == schema or not cat.databaseExists(current):
+        cat.setCurrentDatabase("default")
+    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    wh = re.sub(r"^file:", "", spark.conf.get("spark.sql.warehouse.dir"))
+    shutil.rmtree(os.path.join(wh, f"{schema}.db"), ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

@@ -18,6 +18,8 @@ equal it.
 
 from __future__ import annotations
 
+import json
+import os
 import threading
 
 import pandas as pd
@@ -168,13 +170,13 @@ def test_concurrent_refreshes_of_distinct_mvs(rw):
             rw.execute(f"DROP TABLE IF EXISTS {tag}")
 
 
-def test_concurrent_persists_with_stage_gc(spark):
+def test_concurrent_persists_leave_one_complete_log(spark):
     """Two live engines over one warehouse running DDL storms: each
-    persist GCs superseded foreign stages, which can yank the other
-    engine's stage between its write and rename — the persist path
-    must re-stage and retry, both engines' final DDL must survive, a
-    fresh engine must restore the newest doc, and no stage tables may
-    leak."""
+    DDL writes the next catalog version with exclusive create, so the
+    two engines never overwrite each other's version; both engines'
+    final DDL must survive, a fresh engine must restore the newest doc,
+    and the log must hold only complete versions, no more than it
+    keeps."""
     import uuid
 
     from risingwave_py_spark.core import RisingWaveConnection
@@ -206,13 +208,12 @@ def test_concurrent_persists_with_stage_gc(spark):
     for who in ("a", "b"):
         for i in range(6):
             assert spark.catalog.tableExists(f"public.t_gc_{tag}_{who}_{i}")
-    # no stage tables leaked (engines idle → all stages superseded+GC'd
-    # by the last persist, or renamed away)
-    cat = e3._catalog_fq()
-    db, tbl = cat.split(".", 1)
-    stages = [t.name for t in spark.catalog.listTables(db)
-              if t.name.startswith(tbl + "stage_")]
-    assert stages == [], stages
+    # no partial or stale versions remain
+    versions = e3._catalog_versions()
+    assert len(versions) <= SparkEngine._CATALOG_VERSIONS_KEPT, versions
+    for seq in versions:
+        with open(os.path.join(e3._catalog_dir(), f"{seq}.json")) as f:
+            json.loads(f.read())  # a half-written version would raise here
     for who in ("a", "b"):
         for i in range(6):
             e3.drop_table(f"t_gc_{tag}_{who}_{i}")

@@ -15,18 +15,15 @@ import pytest
 
 from risingwave_py_spark.core import RisingWaveConnection
 from risingwave_py_spark.engine import SparkEngine
+from conftest import drop_schema
 
 
 @pytest.fixture
 def conn(spark):
     schema = f"cur_{uuid.uuid4().hex[:8]}"
-    current = spark.catalog.currentDatabase()
     eng = SparkEngine(spark=spark, default_schema=schema)
     yield RisingWaveConnection(eng), eng, schema
-    # SparkEngine.sql switches the session to the engine's schema;
-    # later tests resolve unqualified names against the current one
-    spark.catalog.setCurrentDatabase(current)
-    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    drop_schema(spark, schema)
 
 
 def _mixed_dml(c, schema):

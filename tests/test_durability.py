@@ -5,6 +5,8 @@ high-water mark — the reference server's persistent-catalog contract
 
 from __future__ import annotations
 
+import json
+import os
 import uuid
 
 import pandas as pd
@@ -268,46 +270,48 @@ def test_fast_paths_rearm_after_restart(spark):
         conn3.execute(f"DROP TABLE IF EXISTS {tb}")
 
 
-def test_restore_prefers_newest_doc_after_crash_mid_swap(spark):
-    """Crash in the persist drop→rename window with an OLDER foreign
-    stage present: the restore must pick the highest-stamped readable
-    doc — never whatever listTables yields first — GC the stale stage,
-    and re-commit the recovered doc to the live catalog."""
-    import json
+def _catalog_docs(eng) -> dict[int, str]:
+    """Every version of the engine's catalog log: number -> text."""
+    out = {}
+    for seq in eng._catalog_versions():
+        with open(os.path.join(eng._catalog_dir(), f"{seq}.json")) as f:
+            out[seq] = f.read()
+    return out
 
-    from pyspark.sql import functions as F  # noqa: F401
 
+def test_restore_prefers_newest_complete_doc_after_crash(spark):
+    """A crash mid-persist leaves the newest catalog version
+    half-written, above an older version without the MV and a newer
+    one with it: the restore picks the newest COMPLETE doc, the next
+    persist numbers above the truncated file, and the restored engine
+    keeps maintaining the MV."""
     tag = uuid.uuid4().hex[:8]
     t, mv = f"durc_t_{tag}", f"durc_mv_{tag}"
     rw1 = RisingWave(spark=spark)
     rw1.insert(pd.DataFrame({"k": [1, 2], "v": [1.0, 2.0]}), table_name=t,
                force_flush=True)
+    eng1 = rw1.engine
+    # the older version: the insert's implicit table creation writes
+    # none, and a fresh process's log may hold no version yet
+    eng1._persist_catalog()
     rw1.execute(f"CREATE MATERIALIZED VIEW {mv} AS "
                 f"SELECT k, sum(v) AS s FROM {t} GROUP BY k")
-    eng1 = rw1.engine
-    cat = eng1._catalog_fq()
+    docs = _catalog_docs(eng1)
+    (_, o_text), (newer, n_text) = sorted(docs.items())
+    assert f"public.{mv}" not in json.loads(o_text)["mvs"]
+    assert f"public.{mv}" in json.loads(n_text)["mvs"]
 
-    # A long-dead engine's leftover stage: a low-stamp doc that lacks
-    # the MV created above. Before the stamped-selection fix, restore
-    # could pick this one and silently roll the catalog back.
-    stale = json.loads(spark.table(cat).first()[0])
-    stale["persist_seq"] = 1
-    stale["mvs"] = {}
-    spark.createDataFrame([(json.dumps(stale),)], "doc string") \
-        .write.format("parquet").saveAsTable(f"{cat}stage_deadbeef__")
-
-    # Simulate the crash mid-swap: the live catalog is gone and the
-    # newest doc lives ONLY in the crashing engine's stage.
-    crashed = f"{cat}stage_feedface__"
-    spark.sql(f"ALTER TABLE {cat} RENAME TO {crashed}")
+    # the crash: the next version holds half of its doc
+    truncated = newer + 1
+    with open(os.path.join(eng1._catalog_dir(), f"{truncated}.json"), "x") as f:
+        f.write(n_text[: len(n_text) // 2])
 
     e2 = SparkEngine(spark)
-    assert f"public.{mv}" in e2.mvs, "newest (staged) doc must win restore"
-    assert spark.catalog.tableExists(cat), "recovered doc re-committed"
-    assert not spark.catalog.tableExists(f"{cat}stage_deadbeef__"), \
-        "superseded foreign stage must be GC'd"
-    assert not spark.catalog.tableExists(crashed), \
-        "crashed stage must be GC'd once the doc is re-committed"
+    assert f"public.{mv}" in e2.mvs, "newest complete doc must win restore"
+    e2._persist_catalog()
+    assert e2._catalog_versions() == [truncated, truncated + 1]
+    assert json.loads(_catalog_docs(e2)[truncated + 1])["mvs"].keys() \
+        == json.loads(n_text)["mvs"].keys()
     # the restored engine still maintains the MV
     conn2 = RisingWaveConnection(e2)
     conn2.insert(pd.DataFrame({"k": [2], "v": [5.0]}), table_name=t,
@@ -366,8 +370,8 @@ def test_epoch_wall_pruned_at_vacuum(spark):
 
 class _CrashingSpark:
     """SparkSession proxy that raises on the Nth .sql() call —
-    simulates a crash at each DDL statement inside catalog persist
-    (everything else delegates to the real session)."""
+    simulates a crash at each DDL statement inside an upsert-log
+    compaction (everything else delegates to the real session)."""
 
     def __init__(self, real, fail_at: int):
         self._real = real
@@ -384,12 +388,77 @@ class _CrashingSpark:
         return self._real.sql(*a, **kw)
 
 
-def test_persist_crash_recovery_at_every_sql_point(spark):
-    """Atomicity sweep: inject a crash at EVERY sql-statement position
-    inside a catalog persist. Whatever the crash point, a fresh engine
-    must restore a consistent doc (objects committed by the previous
-    successful persist are never lost), stay fully operational, and
-    the stage tables crashes leave behind must all be GC'd by the end."""
+class _CrashingFiles:
+    """Inside the block, the file operations a catalog persist makes —
+    open, write, fsync, unlink — are counted (``ops``), and the Nth one
+    raises as a crash there would end the persist (0 = never). A
+    crashing write leaves the first half of its text in the file."""
+
+    def __init__(self, fail_at: int):
+        self.fail_at = fail_at
+        self.ops: list[str] = []
+        self._mp = pytest.MonkeyPatch()
+
+    def _op(self, name: str) -> bool:
+        self.ops.append(name)
+        return len(self.ops) == self.fail_at
+
+    def __enter__(self):
+        import risingwave_py_spark.engine as engine_mod
+
+        crash = RuntimeError("injected persist crash")
+        real_open, real_fsync, real_unlink = open, os.fsync, os.unlink
+        files = self
+
+        class File:
+            def __init__(self, f):
+                self._f = f
+
+            def __getattr__(self, a):
+                return getattr(self._f, a)
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *a):
+                return self._f.__exit__(*a)
+
+            def write(self, text):
+                if files._op("write"):
+                    self._f.write(text[: len(text) // 2])
+                    raise crash
+                return self._f.write(text)
+
+        def open_(*a, **kw):
+            if self._op("open"):
+                raise crash
+            return File(real_open(*a, **kw))
+
+        def fsync(fd):
+            if self._op("fsync"):
+                raise crash
+            return real_fsync(fd)
+
+        def unlink(path):
+            if self._op("unlink"):
+                raise crash
+            return real_unlink(path)
+
+        self._mp.setattr(engine_mod, "open", open_, raising=False)
+        self._mp.setattr(os, "fsync", fsync)
+        self._mp.setattr(os, "unlink", unlink)
+        return self
+
+    def __exit__(self, *a):
+        self._mp.undo()
+
+
+def test_persist_crash_recovery_at_every_file_operation(spark):
+    """Atomicity sweep: inject a crash at EVERY file operation of a
+    catalog persist. Whatever the crash point, a fresh engine must
+    restore a consistent doc (objects committed by the previous
+    successful persist are never lost) and stay fully operational,
+    and the log must hold only complete versions by the end."""
     tag = uuid.uuid4().hex[:8]
     t, mv = f"pcr_t_{tag}", f"pcr_mv_{tag}"
     base = RisingWaveConnection(SparkEngine(spark))
@@ -398,41 +467,36 @@ def test_persist_crash_recovery_at_every_sql_point(spark):
     base.execute(f"CREATE MATERIALIZED VIEW {mv} AS "
                  f"SELECT k, sum(v) AS s FROM {t} GROUP BY k")
 
-    # count the sql statements one successful persist makes
+    # count the file operations one successful persist makes
     eng0 = SparkEngine(spark)
-    probe = _CrashingSpark(spark, fail_at=0)  # 0 = never fires
-    eng0.spark = probe
-    eng0._persist_catalog()
-    eng0.spark = spark
-    n_calls = probe._n
-    assert n_calls >= 2
+    with _CrashingFiles(fail_at=0) as probe:
+        eng0._persist_catalog()
+    assert sorted(set(probe.ops)) == ["fsync", "open", "unlink", "write"], probe.ops
+    n_ops = len(probe.ops)
 
-    for k in range(1, n_calls + 1):
+    for k in range(1, n_ops + 1):
         eng = SparkEngine(spark)
         # a NEW object whose persist will crash mid-flight
         eng.subscriptions[f"public.pcr_sub_{tag}_{k}"] = {
             "rel": f"public.{t}", "retention_s": 60,
         }
-        eng.spark = _CrashingSpark(spark, fail_at=k)
-        try:
-            eng._persist_catalog()
-        except RuntimeError:
-            pass  # the injected crash propagated — that's the scenario
-        eng.spark = spark
+        with _CrashingFiles(fail_at=k):
+            with pytest.raises(RuntimeError, match="injected"):
+                eng._persist_catalog()
         e2 = SparkEngine(spark)  # fresh restore after the "crash"
         assert f"public.{mv}" in e2.mvs, f"crash point {k} lost the MV"
-        e2._persist_catalog()  # the survivor heals the catalog
+        e2._persist_catalog()  # the survivor writes the next version
 
-    # cleanup: strip the fake subs, then assert no stage tables leaked
+    # cleanup: strip the fake subs, then assert no debris remains
     fin = SparkEngine(spark)
     for name in [s for s in fin.subscriptions if f"pcr_sub_{tag}_" in s]:
         fin.subscriptions.pop(name)
     fin._persist_catalog()
-    cat = fin._catalog_fq()
-    db, tbl = cat.split(".", 1)
-    leaks = [x.name for x in spark.catalog.listTables(db)
-             if x.name.startswith(tbl + "stage_")]
-    assert leaks == [], leaks
+    docs = _catalog_docs(fin)
+    assert len(docs) == SparkEngine._CATALOG_VERSIONS_KEPT, sorted(docs)
+    for seq, text in docs.items():
+        json.loads(text)  # a half-written version would raise here
+    assert f"public.{mv}" in json.loads(docs[max(docs)])["mvs"]
     fin.drop_mv(mv)
     fin.drop_table(t)
 

@@ -9,20 +9,18 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from conftest import drop_schema
 
 
 @pytest.fixture()
 def fresh(spark):
-    import shutil
-
     from risingwave_py_spark.core import RisingWaveConnection
     from risingwave_py_spark.engine import SparkEngine
 
-    spark.sql("DROP DATABASE IF EXISTS mant CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(f"{wh.removeprefix('file:')}/mant.db", ignore_errors=True)
+    drop_schema(spark, "mant")  # debris of an earlier run
     eng = SparkEngine(spark=spark, default_schema="mant")
-    return RisingWaveConnection(eng), eng
+    yield RisingWaveConnection(eng), eng
+    drop_schema(spark, "mant")
 
 
 def test_manifest_tracks_in_process_commits(fresh):

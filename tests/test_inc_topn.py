@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from conftest import drop_schema
 # Long-running sweep: excluded from the default fast lane (pyproject addopts
 # -m "not slow"); the full suite runs it via -m "slow or not slow".
 pytestmark = pytest.mark.slow
@@ -19,16 +20,13 @@ pytestmark = pytest.mark.slow
 
 @pytest.fixture()
 def eng_conn(spark):
-    import shutil
-
     from risingwave_py_spark.core import RisingWaveConnection
     from risingwave_py_spark.engine import SparkEngine
 
-    spark.sql("DROP DATABASE IF EXISTS tnt CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(f"{wh.removeprefix('file:')}/tnt.db", ignore_errors=True)
+    drop_schema(spark, "tnt")  # debris of an earlier run
     eng = SparkEngine(spark=spark, default_schema="tnt")
-    return RisingWaveConnection(eng), eng
+    yield RisingWaveConnection(eng), eng
+    drop_schema(spark, "tnt")
 
 
 TOPN_STMT = (

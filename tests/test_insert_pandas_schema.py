@@ -18,6 +18,7 @@ import pytest
 
 from risingwave_py_spark.core import RisingWaveConnection
 from risingwave_py_spark.engine import SparkEngine
+from conftest import drop_schema
 
 ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
 
@@ -37,7 +38,7 @@ def conn(spark):
     schema = f"inspd_{uuid.uuid4().hex[:8]}"
     eng = SparkEngine(spark=spark, default_schema=schema)
     yield RisingWaveConnection(eng), eng, schema
-    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    drop_schema(spark, schema)
 
 
 def test_all_none_column_insert_arrow_off(spark, conn):

@@ -20,16 +20,15 @@ import pytest
 from risingwave_py_spark.core import RisingWaveConnection
 from risingwave_py_spark.engine import SparkEngine
 from tests.test_relation_records import _assert_consistent, _bag
+from conftest import drop_schema
 
 
 @pytest.fixture
 def conn(spark):
     schema = f"lazy_{uuid.uuid4().hex[:8]}"
-    current = spark.catalog.currentDatabase()
     eng = SparkEngine(spark=spark, default_schema=schema)
     yield RisingWaveConnection(eng), eng, schema
-    spark.catalog.setCurrentDatabase(current)
-    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    drop_schema(spark, schema)
 
 
 def _direct(eng: SparkEngine, fq: str, rows: list[tuple]) -> list[int]:

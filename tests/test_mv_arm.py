@@ -7,7 +7,6 @@ session's current database as the caller set it."""
 
 from __future__ import annotations
 
-import shutil
 import uuid
 
 import pytest
@@ -15,6 +14,7 @@ import pytest
 from risingwave_py_spark.core import RisingWaveConnection
 from risingwave_py_spark.engine import SparkEngine
 from tests.test_relation_records import _assert_consistent, _bag
+from conftest import drop_schema
 
 # shape attribute -> (table DDL, seed rows, MV SQL, rows inserted
 # after the restart); one base table ``t`` unless the DDL says more
@@ -65,13 +65,8 @@ CASES = {
 @pytest.fixture
 def schema(spark):
     name = f"arm_{uuid.uuid4().hex[:8]}"
-    current = spark.catalog.currentDatabase()
     yield name
-    # SparkEngine.sql (INSERT ... VALUES) switches to the engine's schema
-    spark.catalog.setCurrentDatabase(current)
-    spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(f"{wh.removeprefix('file:')}/{name}.db", ignore_errors=True)
+    drop_schema(spark, name)
 
 
 def _insert(conn: RisingWaveConnection, schema: str, rows: dict) -> None:

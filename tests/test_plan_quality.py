@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from risingwave_py_spark import registry
+from conftest import drop_schema
 
 registry.load_all()
 
@@ -546,7 +547,7 @@ def test_cobucketed_fact_join_has_zero_exchanges(spark):
     from risingwave_py_spark.core import RisingWaveConnection
     from risingwave_py_spark.engine import SparkEngine
 
-    spark.sql("DROP DATABASE IF EXISTS plq_bk CASCADE")
+    drop_schema(spark, "plq_bk")
     conn = RisingWaveConnection(SparkEngine(spark, default_schema="plq_bk"))
     conn.execute("CREATE TABLE plq_bk.fa (k BIGINT, v BIGINT) "
                  "WITH (bucket_by = 'k', buckets = '4')")
@@ -568,6 +569,6 @@ def test_cobucketed_fact_join_has_zero_exchanges(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP DATABASE IF EXISTS plq_bk CASCADE")
+        drop_schema(spark, "plq_bk")
     assert "Exchange" not in plan, plan
     assert "SelectedBucketsCount" in plan  # scans really are bucketed

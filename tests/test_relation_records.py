@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 
 from risingwave_py_spark.core import RisingWaveConnection
 from risingwave_py_spark.engine import SparkEngine
+from conftest import drop_schema
 
 ADD_OPS = ("Insert", "UpdateInsert")
 DEL_OPS = ("Delete", "UpdateDelete")
@@ -25,13 +26,9 @@ DEL_OPS = ("Delete", "UpdateDelete")
 @pytest.fixture
 def conn(spark):
     schema = f"rrec_{uuid.uuid4().hex[:8]}"
-    current = spark.catalog.currentDatabase()
     eng = SparkEngine(spark=spark, default_schema=schema)
     yield RisingWaveConnection(eng), eng, schema
-    # SparkEngine.sql switches the session to the engine's schema;
-    # later tests resolve unqualified names against the current one
-    spark.catalog.setCurrentDatabase(current)
-    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    drop_schema(spark, schema)
 
 
 def _bag(rows) -> Counter:
@@ -278,7 +275,7 @@ def test_two_engines_on_one_session_share_invalidation(spark, conn):
         assert [r[:2] for r in rows] == [("c", 4)], rows
         _assert_consistent(eng1, f"{s}.m", stmt)
     finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {s2} CASCADE")
+        drop_schema(spark, s2)
 
 
 def test_catalog_refusing_set_location_falls_back_cleanly(spark, conn,

@@ -28,18 +28,15 @@ from pyspark.sql import types as T
 from risingwave_py_spark.core import OutputFormat, RisingWaveConnection
 from risingwave_py_spark.engine import SparkEngine
 from tests.test_relation_records import _assert_consistent, _bag
+from conftest import drop_schema
 
 
 @pytest.fixture
 def conn(spark):
     schema = f"res_{uuid.uuid4().hex[:8]}"
-    current = spark.catalog.currentDatabase()
     eng = SparkEngine(spark=spark, default_schema=schema)
     yield RisingWaveConnection(eng), eng, schema
-    # SparkEngine.sql switches the session to the engine's schema;
-    # later tests resolve unqualified names against the current one
-    spark.catalog.setCurrentDatabase(current)
-    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    drop_schema(spark, schema)
 
 
 def _no_reads(counts) -> bool:
@@ -245,7 +242,7 @@ def test_shared_epoch_dir_and_fetch_types(spark, conn, parquet_reads):
                          k=k, d=d, ts=ts, v=v)
             fetch_live()
     finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {s}_b CASCADE")
+        drop_schema(spark, f"{s}_b")
     assert eng.direct_stats["fallback"] == 0
     _assert_consistent(eng, fq, stmt)
     fresh = SparkEngine(spark=spark, default_schema=s)

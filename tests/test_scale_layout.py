@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from risingwave_py_spark.catalog import (
     fanout, table, write_bucketed, write_partitioned,
 )
+from conftest import drop_schema
 
 
 def _fmt_plan(df) -> str:
@@ -157,7 +158,7 @@ def _bk_conn(spark, schema):
     from risingwave_py_spark.core import RisingWaveConnection
     from risingwave_py_spark.engine import SparkEngine
 
-    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    drop_schema(spark, schema)
     eng = SparkEngine(spark, default_schema=schema)
     return RisingWaveConnection(eng), eng
 
@@ -190,7 +191,7 @@ def test_create_table_bucketed_ddl_roundtrip(spark):
     assert "bucket_by = 'k'" in ddl2
     conn.execute("DROP TABLE bkddl.f")
     assert "bkddl.f" not in eng.table_props
-    spark.sql("DROP DATABASE IF EXISTS bkddl CASCADE")
+    drop_schema(spark, "bkddl")
 
 
 def test_bucketed_ddl_validation(spark):
@@ -213,7 +214,7 @@ def test_bucketed_ddl_validation(spark):
             "ON CONFLICT DO UPDATE IF NOT NULL WITH VERSION COLUMN(ver) "
             "WITH (bucket_by = 'k', buckets = '4')"
         )
-    spark.sql("DROP DATABASE IF EXISTS bkval CASCADE")
+    drop_schema(spark, "bkval")
 
 
 def test_split_cache_rebuilds_on_source_change(spark, tmp_path, monkeypatch):

@@ -23,6 +23,7 @@ from risingwave_py_spark.core import (
     Subscription,
 )
 from risingwave_py_spark.engine import SparkEngine
+from conftest import drop_schema
 
 INTERVAL_MS = 10_000
 WAKE_S = 1.0
@@ -31,15 +32,9 @@ WAKE_S = 1.0
 @pytest.fixture(scope="module")
 def eng(spark):
     schema = f"wake_{uuid.uuid4().hex[:8]}"
-    current = spark.catalog.currentDatabase()
     e = SparkEngine(spark=spark, default_schema=schema)
     yield e
-    # SparkEngine.sql switches the session to the engine's schema: hand
-    # back a database that still exists before dropping this one
-    spark.catalog.setCurrentDatabase(
-        current if spark.catalog.databaseExists(current) else "default"
-    )
-    spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    drop_schema(spark, schema)
 
 
 class _Fetches(Counter):

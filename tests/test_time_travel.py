@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from conftest import drop_schema
 # Long-running sweep: excluded from the default fast lane (pyproject addopts
 # -m "not slow"); the full suite runs it via -m "slow or not slow".
 pytestmark = pytest.mark.slow
@@ -20,14 +21,10 @@ def conn_eng(spark):
     from risingwave_py_spark.core import RisingWaveConnection
     from risingwave_py_spark.engine import SparkEngine
 
-    spark.sql("DROP DATABASE IF EXISTS tt_t CASCADE")
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(f"{wh.removeprefix('file:')}/tt_t.db", ignore_errors=True)
+    drop_schema(spark, "tt_t")  # debris of an earlier run
     eng = SparkEngine(spark=spark, default_schema="tt_t")
     yield RisingWaveConnection(eng), eng
-    spark.sql("DROP DATABASE IF EXISTS tt_t CASCADE")
+    drop_schema(spark, "tt_t")
 
 
 def test_asof_latest_epoch_equals_current_table(conn_eng, spark):

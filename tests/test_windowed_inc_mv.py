@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from conftest import drop_schema
 # Long-running sweep: excluded from the default fast lane (pyproject addopts
 # -m "not slow"); the full suite runs it via -m "slow or not slow".
 pytestmark = pytest.mark.slow
@@ -23,16 +24,13 @@ pytestmark = pytest.mark.slow
 
 @pytest.fixture()
 def eng_conn(spark):
-    import shutil
-
     from risingwave_py_spark.core import RisingWaveConnection
     from risingwave_py_spark.engine import SparkEngine
 
-    spark.sql("DROP DATABASE IF EXISTS winc CASCADE")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    shutil.rmtree(f"{wh.removeprefix('file:')}/winc.db", ignore_errors=True)
+    drop_schema(spark, "winc")  # debris of an earlier run
     eng = SparkEngine(spark=spark, default_schema="winc")
-    return RisingWaveConnection(eng), eng
+    yield RisingWaveConnection(eng), eng
+    drop_schema(spark, "winc")
 
 
 def _bulk_ticks(n: int, start: str = "2024-01-01 00:00:00") -> pd.DataFrame:
