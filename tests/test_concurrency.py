@@ -170,13 +170,14 @@ def test_concurrent_refreshes_of_distinct_mvs(rw):
             rw.execute(f"DROP TABLE IF EXISTS {tag}")
 
 
-def test_concurrent_persists_leave_one_complete_log(spark):
+def test_concurrent_persists_with_stage_gc(spark):
     """Two live engines over one warehouse running DDL storms: each
     DDL writes the next catalog version with exclusive create, so the
-    two engines never overwrite each other's version; both engines'
-    final DDL must survive, a fresh engine must restore the newest doc,
-    and the log must hold only complete versions, no more than it
-    keeps."""
+    two engines never overwrite each other's version, and each persist
+    GCs the superseded versions, which may be the other engine's; both
+    engines' final DDL must survive, a fresh engine must restore the
+    newest doc, and the log must hold only complete versions, no more
+    than it keeps."""
     import uuid
 
     from risingwave_py_spark.core import RisingWaveConnection
