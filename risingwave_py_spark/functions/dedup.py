@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from risingwave_py_spark.catalog import fanout, table
+from risingwave_py_spark.catalog import ensure_views, fanout, table
 from risingwave_py_spark.functions.text import duck_hash32, spark_hash32
-from risingwave_py_spark.registry import register
+from risingwave_py_spark.registry import _sql_query, register
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -35,8 +35,16 @@ ROWS_PER_BAND = N_MINHASH // N_BANDS
 SIMHASH_BITS = 32
 
 
-@register(
+# Exact dedup: hash group-by on the content hash, keeping the smallest
+# doc_id per group (a deterministic survivor policy).
+_sql_query(
     "dedup_exact_docs",
+    """
+    SELECT md5(text) AS content_hash,
+           MIN(doc_id) AS keep_doc_id,
+           COUNT(*) AS n_copies
+    FROM documents GROUP BY md5(text) HAVING COUNT(*) >= 1
+    """,
     oracle="""
     SELECT md5(text) AS content_hash,
            MIN(doc_id) AS keep_doc_id,
@@ -46,15 +54,6 @@ SIMHASH_BITS = 32
     HAVING COUNT(*) >= 1
     """,
 )
-def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on content hash, keep the smallest
-    doc_id per group (deterministic survivor policy)."""
-    d = table(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.md5("text").alias("content_hash"))
-        .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies"))
-        .filter(F.col("n_copies") >= 1)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -299,20 +298,75 @@ def _minhash_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_MH_WH, _MH_SH = _spark_shingle_hashes()
+_MH_SIG_SELECT = [f"{_spark_sig_expr(i)} AS s{i}" for i in range(N_MINHASH)]
+# All 4 band hashes in ONE pass over the signature relation
+# (posexplode: pos == band_id), not a 4-way UNION ALL that re-reads
+# the checkpoint per band — at corpus scale that was 4 re-reads of an
+# O(n) materialization per join side. Same (doc_id, band_id,
+# band_hash) rows, same result.
+_MH_BAND_EXPRS = ", ".join(
+    f"md5(concat_ws(',', {', '.join(f's{b * ROWS_PER_BAND + r}' for r in range(ROWS_PER_BAND))}))"
+    for b in range(N_BANDS)
+)
+_MH_BAND_ROWS = (
+    "        SELECT doc_id, band_id, band_hash FROM __sqlfast_mh_sigs\n"
+    f"        LATERAL VIEW posexplode(array({_MH_BAND_EXPRS}))"
+    " AS band_id, band_hash"
+)
+_MH_EQ = " + ".join(
+    f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)" for i in range(N_MINHASH)
+)
+_MH_PAIRS_SQL = f"""
+    WITH bands AS (
+{_MH_BAND_ROWS}
+    ), cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b
+          ON a.band_id = b.band_id AND a.band_hash = b.band_hash
+         AND a.doc_id < b.doc_id
+    )
+    SELECT doc_a, doc_b,
+           CAST({_MH_EQ} AS DOUBLE) / {N_MINHASH} AS est_jaccard
+    FROM cand
+    JOIN __sqlfast_mh_sigs sa ON sa.doc_id = doc_a
+    JOIN __sqlfast_mh_sigs sb ON sb.doc_id = doc_b
+    ORDER BY est_jaccard DESC, doc_a, doc_b
+    LIMIT 20
+"""
+
+
 @register("dedup_minhash_lsh", oracle=_minhash_oracle())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (k=16) + LSH (4 bands × 4 rows) near-dup candidates.
 
     Signatures are a pure per-row projection (higher-order array
     functions — shingle sets never leave the row, no explode); only
-    (doc_id, band_id, band_hash) tuples shuffle for the bucket join.
-    At 100 TB this is the textbook scalable pipeline: O(n) signature
-    pass + equi-join on band buckets."""
-    return (
-        _minhash_scored_pairs(spark, sf_dir)
-        .orderBy(F.desc("est_jaccard"), "doc_a", "doc_b")
-        .limit(20)
+    (doc_id, band_id, band_hash) tuples shuffle for the bucket join:
+    an O(n) signature pass plus an equi-join on band buckets. The
+    signature pass is a fanout'd DataFrame (pre-split so the md5
+    shingle work parallelizes; three selectExpr calls over import-time
+    strings), materialized once (localCheckpoint — it feeds 6 plan
+    branches); the band/candidate/verify stage is one SQL statement
+    over a temp view, about 0.5 s less py4j plan construction per
+    invocation than building it through the Column API."""
+    import uuid
+
+    d = fanout(table(spark, sf_dir, "documents"))
+    sigs = (
+        d.selectExpr("doc_id", f"{_MH_WH} AS __wh")
+        .selectExpr("doc_id", f"{_MH_SH} AS __hs")
+        .selectExpr("doc_id", *_MH_SIG_SELECT)
+        .localCheckpoint(eager=True)
     )
+    view = f"__sqlfast_mh_sigs_{uuid.uuid4().hex[:8]}"  # per-call scope
+    sigs.createOrReplaceTempView(view)
+    try:
+        # analyzed HERE (view resolved into the plan); execution reads
+        # the checkpoint RDD, so the immediate drop below is safe
+        return spark.sql(_MH_PAIRS_SQL.replace("__sqlfast_mh_sigs", view))
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 # ---------------------------------------------------------------------------
@@ -453,6 +507,81 @@ def _duck_simhash_expr() -> str:
 _DUCK_SIMHASH = _duck_simhash_expr()
 
 
+# The SimHash plans are SQL text assembled once at import: building them
+# through the Column API cost 1.1 s of py4j round trips per invocation
+# (32 vote sums, band projections, self-joins), an order of magnitude
+# more than executing them at sf0.1.
+_SH_VOTES = ", ".join(
+    f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
+    for b in range(SIMHASH_BITS)
+)
+_SH_FP = " + ".join(
+    f"(CASE WHEN v{b} >= 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
+    for b in range(SIMHASH_BITS)
+)
+_SH_FP_SQL = f"""
+    SELECT doc_id, CAST({_SH_FP} AS BIGINT) AS simhash
+    FROM (
+        SELECT doc_id, {_SH_VOTES}
+        FROM documents
+        LATERAL VIEW explode(transform(split(text, '\\\\s+'), w -> {spark_hash32('w')})) AS h
+        GROUP BY doc_id
+    )
+"""
+
+
+def _sh_rung_sql(n_bands: int) -> str:
+    """One rung: all candidate pairs within the band radius, top-20.
+
+    The rung's DISTINCT runs over a bounded TakeOrdered prefix of the raw collision stream: a pair occurs at
+    most once per colliding band, so the top-20 distinct pairs always
+    sit inside the top-(20*n_bands) raw rows under the same total
+    order — no O(pairs) hash-aggregate state at any scale."""
+    band_bits = SIMHASH_BITS // n_bands
+    mask = (1 << band_bits) - 1
+    arr = ", ".join(
+        f"(shiftrightunsigned(simhash, {band_bits * i}) & {mask})"
+        for i in range(n_bands)
+    )
+    return f"""
+    WITH bands AS (
+        SELECT doc_id, simhash, band, val
+        FROM __sqlfast_sh_fp LATERAL VIEW posexplode(array({arr})) AS band, val
+    ), raw_top AS (
+        SELECT doc_a, doc_b, hamming FROM (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                   CAST(bit_count(a.simhash ^ b.simhash) AS INT) AS hamming
+            FROM bands a JOIN bands b
+              ON a.band = b.band AND a.val = b.val AND a.doc_id < b.doc_id
+        ) WHERE hamming <= {n_bands - 1}
+        ORDER BY hamming, doc_a, doc_b LIMIT {20 * n_bands}
+    )
+    SELECT DISTINCT doc_a, doc_b, hamming FROM raw_top
+    """
+
+
+# Templates reference the placeholder name __sqlfast_sh_fp; each
+# invocation rewrites it to a unique per-call view name (two
+# concurrent invocations in one session must not race on the view).
+#
+# A VALUE-level rung (band join over DISTINCT fingerprints + counted
+# expansion) was implemented, verified result-identical at 4 scales,
+# and MEASURED WORSE on quiet interleaved A/B at BOTH sf0.1 (+33%,
+# collapse factor 1.07) and sf1 (+20-25% despite collapse 10.7): the
+# candidate checkpoint, level collect, and two expansion joins cost
+# more than the collision rows they avoid, because the doc-level
+# stream is generated inside one codegen pipeline straight into a
+# bounded TakeOrdered heap (~100ns/row). Rejected with measurements —
+# see OPTIMIZATION_r13.md (dedup_simhash).
+_SH_RUNGS = {n: _sh_rung_sql(n) for n in (4, 8, 16)}
+_SH_ALLPAIRS = """
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(bit_count(a.simhash ^ b.simhash) AS INT) AS hamming
+    FROM __sqlfast_sh_fp a JOIN __sqlfast_sh_fp b ON a.doc_id < b.doc_id
+    ORDER BY hamming, doc_a, doc_b LIMIT 20
+"""
+
+
 @register(
     "dedup_simhash",
     oracle=rf"""
@@ -473,123 +602,75 @@ _DUCK_SIMHASH = _duck_simhash_expr()
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup detection: each doc reduces to one 32-bit
-    fingerprint (weighted bit-vote over word hashes, computed entirely
-    in codegen), then pairs rank by Hamming distance (`bit_count` of
-    XOR).
+    fingerprint (a bit-vote over its word hashes: one explode and one
+    hash aggregate of 32 conditional sums, map-side combined), then
+    pairs rank by Hamming distance (`bit_count` of XOR).
 
-    The pair stage is banded, not a cross join: the 32-bit fingerprint
-    splits into 4 8-bit bands, and by pigeonhole any pair with hamming
-    <= 3 collides on at least one band — so the band-equality self-join
-    generates EVERY such pair as a candidate. If >= 20 candidate pairs
-    have hamming <= 3, the global top-20 lies entirely inside them
-    (exact, not approximate); only when near-dups are that scarce does
-    it fall back to the all-pairs join. At 100 TB the banded join
-    shuffles one (band, value, doc) row per band per doc — O(n) — and
-    each bucket is a tiny local pair-enumeration; the fingerprints are
-    materialized once (localCheckpoint) so the word-hash projection
-    doesn't run once per join side.
-    """
-    d = fanout(table(spark, sf_dir, "documents"), "doc_id")
-    # Bit-vote via explode + one hash aggregate (32 conditional sums):
-    # a single pass over the word hashes with map-side combine, vs 32
-    # array traversals as a projection — measured 1.6× faster, and the
-    # shuffle carries only (doc_id, 32 longs). Fingerprints are
-    # bit-identical to the oracle's per-row formulation.
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias(f"v{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    fingerprint = sum(
-        F.when(F.col(f"v{b}") >= 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for b in range(SIMHASH_BITS)
-    )
-    # Lazy fingerprint relation: the rung-1 band self-join's two sides
-    # are identical subplans, so Spark's exchange reuse computes fp
-    # ONCE inside the close job (verified ReusedExchange in the plan) —
-    # no separate materialization job. An escalation past rung 1
-    # recomputes fp per rung; that path needs a corpus with <20 pairs
-    # at hamming<=3 (sf0.1 has 95,951), where the recompute is noise.
-    fp = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.expr(f"transform(split(text, '\\\\s+'), w -> {spark_hash32('w')})")
-            ).alias("h"),
-        )
-        .groupBy("doc_id")
-        .agg(*votes)
-        .select("doc_id", fingerprint.alias("simhash"))
-    )
+    The pair stage is banded, not a cross join: the fingerprint splits
+    into n bands, and by pigeonhole any pair with hamming <= n - 1
+    collides on at least one band, so the band-equality self-join
+    generates EVERY such pair as a candidate. The ladder widens the
+    guaranteed radius (4 bands -> h<=3, 8 -> h<=7, 16 -> h<=15) until
+    a rung holds the top-20, which is then exact, not approximate.
+    Random 32-bit fingerprints sit at expected hamming 16, so
+    P(h<=15) ~ 0.43 per pair: the h<=15 rung finds 20 pairs whenever
+    the corpus has more than ~10 documents. Each rung shuffles one
+    (band, value, doc) row per band per doc — O(n * bands) — and each
+    bucket is a small local pair enumeration. The exact all-pairs join
+    is only a guard for degenerate inputs (<= 10k documents, at most
+    5e7 comparisons); a larger corpus with < 20 pairs within hamming
+    15 would need a near-uniform spread at h >= 16, and gets the exact
+    pairs found within that radius.
 
-    def pairs(left, right, cond) -> DataFrame:
-        return left.join(right, cond).select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-            .cast("int")
-            .alias("hamming"),
-        )
+    Each rung materializes only its TOP-20 (TakeOrderedAndProject —
+    20 rows kept per partition, ONE job), not the full candidate-pair
+    set: the previous form localCheckpointed every candidate pair
+    (~96k rows at sf0.1, O(near-dup pairs) disk at corpus scale) just
+    to count them. "20 rows came back from LIMIT 20" is the same
+    predicate as "count >= 20", and when it holds the global top-20
+    IS those rows, so nothing else ever needed materializing. The
+    checkpoint pins the 20 rows so the caller's action does not
+    re-run the rung.
 
-    def banded_close(n_bands: int) -> DataFrame:
-        """All pairs with hamming <= n_bands - 1, via the band join.
-        Pigeonhole: a pair differing in < n_bands bit positions must
-        agree on at least one of n_bands disjoint bands — the join is
-        exact for that radius, and shuffles O(n * n_bands) rows."""
-        band_bits = SIMHASH_BITS // n_bands
-        mask = (1 << band_bits) - 1
-        bands = fp.select(
-            "doc_id",
-            "simhash",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned(F.col("simhash"), band_bits * i)
-                        .bitwiseAND(F.lit(mask))
-                        for i in range(n_bands)
-                    ]
-                )
-            ).alias("band", "val"),
-        )
-        a, b = bands.alias("a"), bands.alias("b")
-        return (
-            pairs(
-                a,
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.val") == F.col("b.val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
+    r13: each rung's DISTINCT consumes a bounded TakeOrdered prefix of
+    the raw collision stream instead of the whole stream
+    (_sh_rung_sql docstring) — no O(pairs) hash-aggregate state at any
+    scale. A value-level rung variant was measured and rejected (see
+    the note above _SH_RUNGS).
+
+    The fingerprint relation (one full tokenize+hash pass over the
+    corpus — the dominant cost at scale) is computed ONCE and
+    localCheckpointed; every rung, the all-pairs guard, and the
+    all-pairs fallback read the checkpoint. The previous form inlined
+    the fp CTE per statement, so an escalating ladder re-tokenized
+    the whole corpus per rung (up to 5 passes on near-dup-poor
+    corpora)."""
+    import uuid
+
+    ensure_views(spark, sf_dir)
+    view = f"__sqlfast_sh_fp_{uuid.uuid4().hex[:8]}"  # per-call scope
+    fp = spark.sql(_SH_FP_SQL).localCheckpoint(eager=True)
+    fp.createOrReplaceTempView(view)
+    try:
+        for n_bands in (4, 8, 16):
+            top = (
+                spark.sql(_SH_RUNGS[n_bands].replace("__sqlfast_sh_fp", view))
+                .orderBy("hamming", "doc_a", "doc_b")
+                .limit(20)
+                .localCheckpoint(eager=True)
             )
-            .distinct()  # pairs colliding on >1 band appear once
-            .filter(F.col("hamming") <= n_bands - 1)
-        )
-
-    # Escalation ladder instead of an all-pairs fallback: widen the
-    # guaranteed radius (4 bands -> h<=3, 8 -> h<=7, 16 -> h<=15) until
-    # the top-20 is fully inside the banded candidates. Random 32-bit
-    # fingerprints sit at expected hamming 16, so P(h<=15) ~ 0.43 per
-    # pair — the h<=15 rung finds >= 20 pairs whenever the corpus has
-    # more than ~10 documents, and each rung stays O(n * bands) shuffle
-    # + local bucket pair-enumeration. The exact all-pairs join only
-    # remains as a guard for degenerate tiny inputs where it is O(1).
-    for n_bands in (4, 8, 16):
-        close = banded_close(n_bands).localCheckpoint(eager=True)
-        if close.count() >= 20:
-            return close.orderBy("hamming", "doc_a", "doc_b").limit(20)
-    if fp.count() <= 10_000:  # bounded: <= 5e7 comparisons, one task wave
-        a, b = fp.alias("a"), fp.alias("b")
-        return (
-            pairs(a, b, F.col("a.doc_id") < F.col("b.doc_id"))
-            .orderBy("hamming", "doc_a", "doc_b")
-            .limit(20)
-        )
-    # > 10k docs yet < 20 pairs within hamming 15: statistically
-    # impossible for real text (would need a near-uniform spread at
-    # h >= 16); return the exact pairs found within radius 15.
-    return close.orderBy("hamming", "doc_a", "doc_b").limit(20)
+            if top.count() == 20:  # count of 20 checkpointed rows: ~0 cost
+                # explicit ordering on the returned frame — the rows
+                # are the checkpointed 20, the sort is free and
+                # restores the ordering contract
+                return top.orderBy("hamming", "doc_a", "doc_b")
+        if fp.count() <= 10_000:  # count of checkpointed fp: no recompute
+            # analyzed against the view HERE; execution reads the
+            # checkpoint RDD, so the finally-drop below is safe
+            return spark.sql(_SH_ALLPAIRS.replace("__sqlfast_sh_fp", view))
+        return top.orderBy("hamming", "doc_a", "doc_b")
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 def _pipeline_oracle() -> str:

@@ -15,11 +15,10 @@ Two tiers live here:
     inflate wrapping any of the three). Closed-form synthetic
     payloads make the ENTIRE encode→compress→inflate→decode→
     featurize chain DuckDB-oracle-checked — no rows-only queries.
-  * A disclosed FAKE kernel (``decode_payload``) standing in for
-    lossy-format codecs (JPEG/FLAC/H.264) whose libraries
-    (PIL/torchaudio/pyav) are not in this container — swap the kernel
-    body, nothing else changes. Kept as the documented plug point;
-    no registered query depends on it.
+  * STUB kernels (``resize_images``, ``sample_frames``) with the
+    batch shapes a real PIL/pyav kernel has; those libraries are not
+    in this container, so a real implementation swaps the kernel
+    body and nothing else.
 
 The fixture has no binary column, so payloads are synthesized
 deterministically (from text bytes or doc_id): stable inputs →
@@ -41,12 +40,6 @@ from risingwave_py_spark.registry import register
 
 MODALITIES = ("image", "audio", "video")
 
-FEATURE_SCHEMA = (
-    "doc_id long, modality string, n_bytes long, byte_mean double, "
-    "byte_std double, feat_head string, decoder string"
-)
-
-
 def with_payload(df: DataFrame) -> DataFrame:
     """Attach a synthetic binary payload + modality metadata to each doc.
     (In production this column comes straight from parquet/Delta.)"""
@@ -59,53 +52,6 @@ def with_payload(df: DataFrame) -> DataFrame:
         modality.alias("modality"),
         F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
-
-
-def decode_payload(payload: bytes, modality: str) -> dict:
-    """STUB DECODER (deterministic fake).
-
-    A real implementation would dispatch on modality:
-      image → PIL.Image.open(io.BytesIO(payload)) → resize → pixels
-      audio → torchaudio.load → resample → frames
-      video → pyav keyframe sample
-    None of those libraries exist in this container, so we derive
-    deterministic pseudo-features from the raw bytes. The Spark-side
-    contract (signature, batching, schema) is exactly what a real
-    decoder plugs into."""
-    import numpy as np
-
-    arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-    if arr.size == 0:
-        return {"byte_mean": 0.0, "byte_std": 0.0, "feat_head": ""}
-    return {
-        "byte_mean": float(arr.mean()),
-        "byte_std": float(arr.std()),
-        "feat_head": payload[:8].hex(),
-    }
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction: Arrow batches of binary payloads
-    in, flat feature rows out. Scales as a pure map — no shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_payload(p, m) for p, m in zip(pdf["payload"], pdf["modality"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "byte_mean": [f["byte_mean"] for f in feats],
-                    "byte_std": [f["byte_std"] for f in feats],
-                    "feat_head": [f["feat_head"] for f in feats],
-                    "decoder": "stub-v1",
-                }
-            )
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 @register(

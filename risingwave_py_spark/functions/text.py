@@ -113,13 +113,6 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _langid_score_sql(words_expr: str, contains_fn: str) -> dict[str, str]:
-    return {
-        lang: f"len(list_filter({words_expr}, w -> {contains_fn}({markers!r}, w)))"
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 @register(
     "text_langid_markers",
     oracle=rf"""

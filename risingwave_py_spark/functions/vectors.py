@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from risingwave_py_spark.catalog import fanout, table
+from risingwave_py_spark.catalog import ensure_views, fanout, table
 from risingwave_py_spark.functions.text import duck_hash32
 from risingwave_py_spark.registry import register
 
@@ -324,6 +324,63 @@ def _probe_cells(e: DataFrame, cents1: DataFrame, n_probe: int) -> DataFrame:
     )
 
 
+def _ivf_cos_pre(a: str, b: str, an: str, bn: str) -> str:
+    # cosine with both norms precomputed (hoisted out of the candidate
+    # join: one fold per ROW instead of one per candidate PAIR — the
+    # norm fold costs the same as the dot fold, so this halves the
+    # verify stage; same expression over the same array, bit-identical)
+    return f"round({_spark_dot(a, b)} / ({an} * {bn}), 6)"
+
+
+# Per-centroid (cos, -cell_id) scores against the packed centroid
+# array: array_max / descending sort = highest cosine, ties to the
+# LOWEST cell_id — the SQL twin of _CENT_SCORES. Assignment
+# is ONE projection per corpus row: no N×N_CELLS row expansion, no
+# per-vec_id window shuffle+sort (the previous form's scale killer).
+_IVF_SCORES = (
+    "transform(__cents, c -> struct("
+    f"round({_spark_dot('{vec}', 'c.ce')} / (__en * c.cn), 6) AS cos, "
+    "-c.cell_id AS ncell))"
+)
+
+_IVF_SQL = f"""
+    WITH cents1 AS (
+        SELECT array_sort(collect_list(named_struct(
+                   'cell_id', vec_id, 'ce', embedding,
+                   'cn', {_spark_norm('embedding')}))) AS __cents
+        FROM embeddings WHERE vec_id >= 100 AND vec_id < {100 + N_CELLS}
+    ), corpus AS (
+        SELECT /*+ REPARTITION({{parts}}) */ vec_id, embedding,
+               {_spark_norm('embedding')} AS __en
+        FROM embeddings
+    ), cells AS (
+        SELECT vec_id, embedding, __en,
+               -(array_max({_IVF_SCORES.format(vec='embedding')}).ncell)
+                   AS cell_id
+        FROM corpus CROSS JOIN cents1
+    ), probes AS (
+        SELECT vec_id AS query_id, embedding AS qe, __en AS __qn,
+               explode(transform(
+                   slice(reverse(array_sort(
+                       {_IVF_SCORES.format(vec='embedding')})), 1, {N_PROBE}),
+                   t -> -t.ncell)) AS cell_id
+        FROM (SELECT vec_id, embedding, {_spark_norm('embedding')} AS __en
+              FROM embeddings WHERE vec_id < {N_QUERIES})
+             CROSS JOIN cents1
+    ), cand AS (
+        SELECT /*+ BROADCAST(p) */ p.query_id, c.vec_id,
+               {_ivf_cos_pre('p.qe', 'c.embedding', 'p.__qn', 'c.__en')} AS cosine
+        FROM cells c JOIN probes p ON c.cell_id = p.cell_id
+        WHERE c.vec_id <> p.query_id
+    )
+    SELECT query_id, vec_id, cosine, rn AS rank FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                   ORDER BY cosine DESC, vec_id) AS rn
+        FROM cand
+    ) WHERE rn <= {TOP_K}
+"""
+
+
 @register("ann_ivf_topk", oracle=_ivf_oracle())
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: partition the corpus into cells around fixed centroids,
@@ -334,49 +391,14 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     swaps in k-means centroids without touching the query path. Scale
     shape: assignment packs all centroids into one broadcast row and
     computes the argmax cell per corpus vector in a single codegen'd
-    projection — zero shuffle and zero row expansion (the previous
-    broadcast-join + row_number form shuffled N×N_CELLS rows through a
-    window sort); search touches nprobe/ncells of the corpus instead
-    of all of it — the recall/cost dial ANN is about. Ties broken by
-    cell_id then vec_id, so results are exact against the oracle.
-    """
-    from pyspark.sql import Window as W
-
-    raw = table(spark, sf_dir, "embeddings")
-    e = fanout(raw)  # full corpus: parallelize the per-row argmax
-    cents1 = _cents_packed(raw)  # 8 rows — no fanout
-    cells = _assign_cells(e, cents1)
-    probes = _probe_cells(
-        raw.filter(F.col("vec_id") < N_QUERIES), cents1, N_PROBE
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "cell_id"
-    )
-    cand = (
-        cells.withColumn("__en", F.expr(_spark_norm("embedding")))
-        .join(
-            F.broadcast(
-                probes.withColumn("__qn", F.expr(_spark_norm("qe")))
-            ),
-            "cell_id",
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        # per-row norms precomputed on each side (bit-identical; one
-        # array lambda per pair instead of three)
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(_spark_dot("qe", "embedding"))
-                / (F.col("__qn") * F.col("__en")),
-                6,
-            ),
-        )
-    )
-    by_query = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(by_query))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    projection — zero shuffle and zero row expansion; search touches
+    nprobe/ncells of the corpus instead of all of it — the recall/cost
+    dial ANN is about. Ties break by cell_id then
+    vec_id, so results are exact against the oracle. The plan is one
+    spark.sql call; its REPARTITION follows fanout's cores/2 rule."""
+    ensure_views(spark, sf_dir)
+    parts = max(2, spark.sparkContext.defaultParallelism // 2)
+    return spark.sql(_IVF_SQL.format(parts=parts))
 
 
 # ---------------------------------------------------------------------------
@@ -435,14 +457,6 @@ def corpus_kmeans_k(spark: SparkSession, sf_dir: str) -> int:
     """kmeans_k over the static corpus table (parquet metadata count,
     no data scan)."""
     return kmeans_k(table(spark, sf_dir, "embeddings").count())
-
-
-def _sqdist_expr(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, "
-        f"(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
 
 
 def _kmeans_assign(e: DataFrame, cents: DataFrame) -> DataFrame:

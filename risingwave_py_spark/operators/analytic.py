@@ -23,8 +23,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from risingwave_py_spark.catalog import table
-from risingwave_py_spark.operators.relational import cents, money
-from risingwave_py_spark.registry import register
+from risingwave_py_spark.operators.relational import _cents, money
+from risingwave_py_spark.registry import _sql_query, register
 
 
 @register(
@@ -56,8 +56,16 @@ def window_rank_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_sql_query(
     "window_running_sum",
+    f"""
+    SELECT o_custkey, o_orderkey, o_orderdate,
+           CAST(CAST(SUM({_cents('o_totalprice')}) OVER (
+                    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                AS DECIMAL(38,0)) / 100 AS DOUBLE) AS running_spend
+    FROM orders
+    """,
     oracle="""
     SELECT o_custkey, o_orderkey, o_orderdate,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
@@ -66,25 +74,18 @@ def window_rank_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
 )
-def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative sum with an explicit ROWS frame (decimal-exact)."""
-    o = table(spark, sf_dir, "orders")
-    w = (
-        W.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        (F.sum(cents("o_totalprice")).over(w).cast("decimal(38,0)") / 100)
-        .cast("double").alias("running_spend"),
-    )
 
 
-@register(
+_sql_query(
     "window_topk_per_group",
+    """
+    SELECT * FROM (
+        SELECT c_nationkey, c_custkey, c_name, c_acctbal,
+               row_number() OVER (PARTITION BY c_nationkey
+                                  ORDER BY c_acctbal DESC, c_custkey) AS rn
+        FROM customer
+    ) t WHERE rn <= 3
+    """,
     oracle="""
     SELECT * FROM (
         SELECT c_nationkey, c_custkey, c_name, c_acctbal,
@@ -94,21 +95,6 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) t WHERE rn <= 3
     """,
 )
-def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 customers by balance per nation (streaming Top-N analogue,
-    RisingWave's `ROW_NUMBER() ... WHERE rn <= k` idiom)."""
-    c = table(spark, sf_dir, "customer")
-    w = W.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
-    return (
-        c.select(
-            "c_nationkey",
-            "c_custkey",
-            "c_name",
-            "c_acctbal",
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 3)
-    )
 
 
 @register(
@@ -188,8 +174,21 @@ def window_ntile_percentrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# As-of (point-in-time) join as the union-scan pattern: each purchase
+# takes the most recent earlier click's value for the same user from a
+# `last(..., true)` window — one shuffle by user_id, one sort, no join.
+_sql_query(
     "asof_join_last_click",
+    """
+    SELECT event_id, user_id, ts, value, last_click_value FROM (
+        SELECT event_id, user_id, ts, value, event_type,
+               last(CASE WHEN event_type = 'click' THEN value END, true)
+                   OVER (PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                   AS last_click_value
+        FROM events
+    ) WHERE event_type = 'purchase'
+    """,
     oracle="""
     SELECT event_id, user_id, ts, value,
            last_value(CASE WHEN event_type = 'click' THEN value END IGNORE NULLS)
@@ -199,27 +198,6 @@ def window_ntile_percentrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY event_type = 'purchase'
     """,
 )
-def asof_join_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of (point-in-time) join: each purchase picks up the most
-    recent earlier click's value for the same user.
-
-    Implemented as the union-scan pattern: one hash shuffle by user_id
-    + one sort by time, then `last(..., ignorenulls)` over an
-    unbounded-preceding frame. No join, no per-row probe — this is the
-    at-scale formulation (a merge_asof equivalent without pairwise
-    matching)."""
-    ev = table(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    click_val = F.when(F.col("event_type") == "click", F.col("value"))
-    return (
-        ev.withColumn("last_click_value", F.last(click_val, ignorenulls=True).over(w))
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts", "value", "last_click_value")
-    )
 
 
 @register(
@@ -272,8 +250,26 @@ def interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_sql_query(
     "sessionize_events",
+    """
+    WITH flagged AS (
+        SELECT user_id, ts, event_id,
+               CASE WHEN lag(ts) OVER w IS NULL
+                         OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+                    THEN 1 ELSE 0 END AS is_new
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), numbered AS (
+        SELECT user_id, ts,
+               SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+        FROM flagged
+    )
+    SELECT user_id, session_id, COUNT(*) AS n_events,
+           MIN(ts) AS session_start, MAX(ts) AS session_end
+    FROM numbered GROUP BY user_id, session_id
+    """,
     oracle="""
     WITH flagged AS (
         SELECT user_id, ts, event_id,
@@ -293,30 +289,28 @@ def interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM numbered GROUP BY user_id, session_id
     """,
 )
-def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30 min): lag → new-session flag →
-    running sum = session id → per-session aggregate. One shuffle."""
-    ev = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    wrun = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    gap = F.col("ts") - F.lag("ts").over(w)
-    is_new = F.when(
-        F.lag("ts").over(w).isNull() | (gap > F.expr("INTERVAL 30 MINUTES")), 1
-    ).otherwise(0)
-    return (
-        ev.withColumn("is_new", is_new)
-        .withColumn("session_id", F.sum("is_new").over(wrun))
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-    )
 
 
-@register(
+# Skew-proof aggregation over a pathologically hot key: `event_type`
+# has ~5 distinct values. For ALGEBRAIC aggregates (count/sum/max) a
+# direct single group-by is already the two-phase salted scheme, with
+# the map task as the implicit salt: every map task partially
+# aggregates to <=5 rows before the exchange, so a hot key cannot
+# overload its reducer. An explicit hash-mod-64 salt layer (the pre-r12
+# form) only added an extra exchange + aggregate: measured 0.41 -> 0.29 s
+# median (-30%) at sf0.1 after dropping it, bit-identical DECIMAL sums.
+# The manual (key, salt) two-level recipe is still the fix when the
+# per-key state does NOT collapse map-side: holistic aggregates
+# (collect_list/percentile), count(DISTINCT x) reduced per key, or
+# groupBy().applyInPandas.
+_sql_query(
     "agg_salted_skew",
+    """
+    SELECT event_type, COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
+           CAST(MAX(value) AS DOUBLE) AS max_value
+    FROM events GROUP BY event_type
+    """,
     oracle="""
     SELECT event_type,
            COUNT(*) AS n_events,
@@ -326,34 +320,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
-def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-proof aggregation over a pathologically hot key.
-
-    `event_type` has ~5 distinct values. For ALGEBRAIC aggregates
-    (count/sum/max — all decomposable) Spark's HashAggregate already
-    runs the two-phase salted scheme with the map task as the implicit
-    salt: every map task partially aggregates to ≤5 rows before the
-    exchange, so the 5 reducers receive one tiny partial row per map
-    task, never the raw table — hot keys cannot overload a reducer.
-    An explicit hash(row)-mod-64 salt layer (this operator's pre-r12
-    form) duplicates that work and adds a full extra exchange +
-    aggregate for nothing: measured 0.41 → 0.29 s median (−30%)
-    at sf0.1 after dropping it, bit-identical results.
-
-    The manual (key, salt) two-level recipe remains the right fix
-    when the per-key state does NOT collapse map-side — holistic
-    aggregates (collect_list/percentile), count(DISTINCT x) reduced
-    per key, or groupBy().applyInPandas — because there partial
-    aggregation ships every row to the key's single reducer. The
-    DECIMAL sum keeps the result bit-identical regardless of how
-    partials group.
-    """
-    ev = table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        F.max("value").cast("double").alias("max_value"),
-    )
 
 
 @register(

@@ -18,7 +18,7 @@ This module registers `<q>_bucketed` twins of the five shapes:
      engine's DataFrame-insert path. The build is a one-time ingest
      cost (exactly how a production warehouse lands a fact table); it
      is NEVER part of the per-query work and reuses across invocations.
-  2. the query SQL is the benched original (sqlfast.SQL_TEXT) with the
+  2. the query SQL is the benched original (registry.SQL_TEXT) with the
      two fact names redirected at the bucketed copies — semantics,
      aliases, money arithmetic and the DuckDB oracle are byte-identical
      to the plain-parquet twin, so the driver's correctness gate checks
@@ -46,11 +46,10 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-# ensure the originals (and their oracles) are registered first
+# the originals' SQL_TEXT and oracles must be registered first
 from risingwave_py_spark.operators import relational, tpch_extra  # noqa: F401
 from risingwave_py_spark.catalog import ensure_views, table
-from risingwave_py_spark.operators.sqlfast import SQL_TEXT
-from risingwave_py_spark.registry import ORACLES, register
+from risingwave_py_spark.registry import ORACLES, SQL_TEXT, register
 
 BUCKETS = 16
 _FACTS = (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))

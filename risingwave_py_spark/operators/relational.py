@@ -17,6 +17,11 @@ Scale notes (100 TB):
     ordering (ties broken by key) so results are stable under any
     partitioning.
 
+The benched shapes (q1/q3/q5/q10, agg_rollup, agg_distinct_multi) are
+each one Spark SQL statement (`registry._sql_query`): the same plans,
+with `/*+ BROADCAST */` hints for the dimension broadcasts and the SQL
+twins of the exact-money helpers below.
+
 Determinism vs the DuckDB oracle: money columns go through
 DECIMAL(12,2) arithmetic (exact in both engines) and are only cast to
 DOUBLE at the end — bit-identical results regardless of partitioning
@@ -30,7 +35,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from risingwave_py_spark.catalog import table
-from risingwave_py_spark.registry import register
+from risingwave_py_spark.registry import _sql_query, register
 
 
 def money(c) -> F.Column:
@@ -57,7 +62,8 @@ def money(c) -> F.Column:
 # (true of every money column here); arbitrary-precision inputs must
 # use the DECIMAL path instead.
 _LIMB_BITS = 21
-_LIMB = 1 << _LIMB_BITS
+_LIMB = 1 << _LIMB_BITS  # 2097152
+_MASK = _LIMB - 1  # 2097151
 
 
 def cents(c) -> F.Column:
@@ -104,6 +110,35 @@ def dsum(c) -> F.Column:
     """Decimal-exact sum of a money column, surfaced as DOUBLE
     (long-cents accumulator; bit-identical to SUM(DECIMAL(12,2)))."""
     return (F.sum(cents(c)).cast("decimal(38,0)") / 100).cast("double")
+
+
+# SQL-text twins of the helpers above, for the queries registered with
+# _sql_query: the same exact-money arithmetic spelled in Spark SQL,
+# bit-identical results.
+def _cents(c: str) -> str:
+    return f"CAST(round(({c}) * 100) AS BIGINT)"
+
+
+def _limb_total(v: str) -> str:
+    return (
+        f"(CAST(SUM(shiftrightunsigned({v}, {_LIMB_BITS})) AS DECIMAL(38,0)) * {_LIMB} "
+        f"+ CAST(SUM(({v}) & {_MASK}) AS DECIMAL(38,0)))"
+    )
+
+
+def _limb_sum(v: str, scale: int) -> str:
+    # double(exact integer total) / 10^s — ONE IEEE division, as in
+    # limb_sum above
+    return f"(CAST({_limb_total(v)} AS DOUBLE) / {float(10 ** scale)})"
+
+
+def _dsum(c: str) -> str:
+    return f"CAST(CAST(SUM({_cents(c)}) AS DECIMAL(38,0)) / 100 AS DOUBLE)"
+
+
+_REV_E4 = f"({_cents('l_extendedprice')}) * (100 - {_cents('l_discount')})"
+_REV_SUM = _limb_sum(_REV_E4, 4)
+_CHARGE_E6 = f"({_REV_E4}) * (100 + {_cents('l_tax')})"
 
 
 # ---------------------------------------------------------------------------
@@ -179,8 +214,22 @@ def project_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+_sql_query(
     "q1_pricing_summary",
+    f"""
+    SELECT l_returnflag, l_linestatus,
+           {_dsum('l_quantity')} AS sum_qty,
+           {_dsum('l_extendedprice')} AS sum_base_price,
+           {_REV_SUM} AS sum_disc_price,
+           {_limb_sum(_CHARGE_E6, 6)} AS sum_charge,
+           {_dsum('l_quantity')} / COUNT(*) AS avg_qty,
+           {_dsum('l_extendedprice')} / COUNT(*) AS avg_price,
+           {_dsum('l_discount')} / COUNT(*) AS avg_disc,
+           COUNT(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '2001-09-02'
+    GROUP BY l_returnflag, l_linestatus
+    """,
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -200,28 +249,6 @@ def project_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: the flagship scan→filter→agg pipeline.
-
-    Map-side partial aggregation collapses ~6 M rows/partition to 6
-    groups before the shuffle — the plan scales linearly with input.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    charge_e6 = rev_e4() * (100 + cents("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2001-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity").alias("sum_qty"),
-            dsum("l_extendedprice").alias("sum_base_price"),
-            rev_sum().alias("sum_disc_price"),
-            limb_sum(charge_e6, 6).alias("sum_charge"),
-            (dsum("l_quantity") / F.count("*")).alias("avg_qty"),
-            (dsum("l_extendedprice") / F.count("*")).alias("avg_price"),
-            (dsum("l_discount") / F.count("*")).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
 
 
 @register(
@@ -291,8 +318,13 @@ def agg_filtered_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_sql_query(
     "agg_rollup",
+    f"""
+    SELECT l_returnflag, l_linestatus,
+           {_dsum('l_quantity')} AS sum_qty, COUNT(*) AS n
+    FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+    """,
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -300,11 +332,6 @@ def agg_filtered_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n")
-    )
 
 
 @register(
@@ -366,8 +393,15 @@ def agg_stddev_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_sql_query(
     "agg_distinct_multi",
+    """
+    SELECT l_returnflag,
+           COUNT(DISTINCT l_suppkey) AS n_supp,
+           COUNT(DISTINCT l_partkey) AS n_part,
+           COUNT(*) AS n
+    FROM lineitem GROUP BY l_returnflag
+    """,
     oracle="""
     SELECT l_returnflag,
            COUNT(DISTINCT l_suppkey) AS n_supp,
@@ -376,13 +410,6 @@ def agg_stddev_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY l_returnflag
     """,
 )
-def agg_distinct_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_suppkey").alias("n_supp"),
-        F.countDistinct("l_partkey").alias("n_part"),
-        F.count("*").alias("n"),
-    )
 
 
 @register(
@@ -557,8 +584,21 @@ def join_non_equi_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_sql_query(
     "q3_shipping_priority",
+    f"""
+    SELECT /*+ BROADCAST(c) */
+           l_orderkey, {_REV_SUM} AS revenue, o_orderdate
+    FROM lineitem li
+    JOIN orders o   ON li.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'FURNITURE'
+      AND o.o_orderdate < TIMESTAMP '1998-01-01'
+      AND li.l_shipdate > TIMESTAMP '1998-01-01'
+    GROUP BY l_orderkey, o_orderdate
+    ORDER BY revenue DESC, l_orderkey
+    LIMIT 10
+    """,
     oracle="""
     SELECT l_orderkey,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -575,27 +615,24 @@ def join_non_equi_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
 )
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join, filters pushed below the joins,
-    dimension (filtered customer) broadcast; top-10 with total order."""
-    c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "FURNITURE")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1998-01-01"))
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1998-01-01"))
-    # orders is fact-sized: lineitem⋈orders is a shuffle join on the
-    # orderkey; only the filtered customer dimension is broadcast.
-    return (
-        li.join(o.join(F.broadcast(c), o.o_custkey == c.c_custkey),
-                li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(rev_sum().alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
 
 
-@register(
+_sql_query(
     "q5_local_supplier_volume",
+    f"""
+    SELECT /*+ BROADCAST(c, s, n, r) */
+           n_name, {_REV_SUM} AS revenue
+    FROM lineitem li
+    JOIN orders o   ON li.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    JOIN supplier s ON li.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
+    JOIN nation n   ON s.s_nationkey = n.n_nationkey
+    JOIN region r   ON n.n_regionkey = r.r_regionkey
+    WHERE r.r_name = 'ASIA'
+      AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o.o_orderdate <  TIMESTAMP '1998-01-01'
+    GROUP BY n_name
+    """,
     oracle="""
     SELECT n_name,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -612,36 +649,22 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_name
     """,
 )
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way star join; all dimensions broadcast, the
-    single shuffle is the final groupBy on n_name (25 groups)."""
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01"))
-    )
-    li = table(spark, sf_dir, "lineitem")
-    s = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
-    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    # lineitem⋈orders shuffles on orderkey (both fact-sized); every
-    # other side is a bounded dimension → broadcast, zero extra shuffle.
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(rev_sum().alias("revenue"))
-    )
 
 
-@register(
+_sql_query(
     "q10_returned_items",
+    f"""
+    SELECT /*+ BROADCAST(c, n), SHUFFLE_HASH(o) */
+           c_custkey, c_name, n_name, {_REV_SUM} AS revenue
+    FROM lineitem li
+    JOIN orders o   ON li.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    JOIN nation n   ON c.c_nationkey = n.n_nationkey
+    WHERE li.l_returnflag = 'R'
+    GROUP BY c_custkey, c_name, n_name
+    ORDER BY revenue DESC, c_custkey
+    LIMIT 20
+    """,
     oracle="""
     SELECT c_custkey, c_name, n_name,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -656,21 +679,15 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: returned-item revenue per customer, top 20."""
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = table(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(rev_sum().alias("revenue"))
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
+# q10's orders side is UNFILTERED (the only filter is on lineitem), so
+# broadcasting it ships the whole fact table — SHUFFLE_HASH(o) measured
+# -18% at sf0.1 and -20% at the 8x probe (interleaved A/B medians,
+# SCALE.md round-7 table). q3/q5 keep broadcast: their
+# orders sides are date/segment-PRUNED small while lineitem (the side a
+# hash join would force through the exchange) is the big one — measured
+# +13%/+66% WORSE with the hint at sf0.1; at real scale the pruned-side
+# size estimate outgrows the threshold and Spark flips to shuffle by
+# itself.
 
 
 # ---------------------------------------------------------------------------

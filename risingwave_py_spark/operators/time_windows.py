@@ -19,12 +19,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from risingwave_py_spark.catalog import table
-from risingwave_py_spark.operators.relational import dsum, money
-from risingwave_py_spark.registry import register
+from risingwave_py_spark.operators.relational import dsum
+from risingwave_py_spark.registry import _sql_query, register
 
 
-@register(
+_sql_query(
     "tumble_events_15m",
+    """
+    SELECT window.start AS window_start, window.end AS window_end,
+           event_type, COUNT(*) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
+    FROM events
+    GROUP BY window(ts, '15 minutes'), event_type
+    """,
     oracle="""
     SELECT time_bucket(INTERVAL '15 minutes', ts) AS window_start,
            time_bucket(INTERVAL '15 minutes', ts) + INTERVAL 15 MINUTE AS window_end,
@@ -35,27 +42,17 @@ from risingwave_py_spark.registry import register
     GROUP BY 1, 2, 3
     """,
 )
-def tumble_events_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 15-minute window aggregate — the reference's
-    `tumble(tick, timestamp, interval '10 seconds')` pattern
-    (demo.py:98-100) on the events fixture."""
-    ev = table(spark, sf_dir, "events")
-    win = F.window("ts", "15 minutes")
-    return (
-        ev.groupBy(win, "event_type")
-        .agg(F.count("*").alias("n"), F.sum(money("value")).cast("double").alias("total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
 
 
-@register(
+_sql_query(
     "hop_events_30m_15m",
+    """
+    SELECT window.start AS window_start, window.end AS window_end,
+           event_type, COUNT(*) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
+    FROM events
+    GROUP BY window(ts, '30 minutes', '15 minutes'), event_type
+    """,
     oracle="""
     SELECT window_start,
            window_start + INTERVAL 30 MINUTE AS window_end,
@@ -70,24 +67,6 @@ def tumble_events_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     """,
 )
-def hop_events_30m_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping (sliding) window: 30-minute width, 15-minute slide —
-    each event lands in 2 windows. The oracle expands the windows
-    explicitly; Spark's `window(ts, size, slide)` does the same
-    replication internally."""
-    ev = table(spark, sf_dir, "events")
-    win = F.window("ts", "30 minutes", "15 minutes")
-    return (
-        ev.groupBy(win, "event_type")
-        .agg(F.count("*").alias("n"), F.sum(money("value")).cast("double").alias("total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
 
 
 @register(
@@ -130,8 +109,15 @@ def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_sql_query(
     "events_json_extract",
+    """
+    SELECT event_type,
+           COUNT(*) AS n,
+           SUM(CAST(get_json_object(props, '$.k') AS INT)) AS sum_k,
+           MAX(CAST(get_json_object(props, '$.k') AS INT)) AS max_k
+    FROM events GROUP BY event_type
+    """,
     oracle="""
     SELECT event_type,
            COUNT(*) AS n,
@@ -140,16 +126,6 @@ def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
 )
-def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured access: JSON property extraction then aggregate
-    (`get_json_object` stays in codegen — no Python in the loop)."""
-    ev = table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(k).alias("sum_k"),
-        F.max(k).alias("max_k"),
-    )
 
 
 @register(

@@ -38,22 +38,18 @@ from pyspark.sql import functions as F
 
 from risingwave_py_spark.catalog import table
 from risingwave_py_spark.operators.relational import (
-    cents,
+    _REV_E4,
+    _REV_SUM,
+    _cents,
+    _limb_sum,
+    _limb_total,
     dsum,
     limb_sum,
-    limb_total,
     money,
     rev_e4,
     rev_sum,
 )
-from risingwave_py_spark.registry import register
-
-
-def _revenue() -> F.Column:
-    """Decimal-exact ``extendedprice * (1 - discount)`` term."""
-    one = F.lit(1).cast("decimal(12,2)")
-    return money("l_extendedprice") * (one - money("l_discount"))
-
+from risingwave_py_spark.registry import _sql_query, register
 
 _REV_SQL = (
     "CAST(l_extendedprice AS DECIMAL(12,2))"
@@ -96,8 +92,16 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return late.groupBy("o_orderpriority").agg(F.count("*").alias("order_count"))
 
 
-@register(
+_sql_query(
     "q6_forecast_revenue",
+    f"""
+    SELECT {_limb_sum(f"{_cents('l_extendedprice')} * {_cents('l_discount')}", 4)} AS revenue
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+      AND l_shipdate <  TIMESTAMP '1998-01-01'
+      AND l_discount BETWEEN 0.03 AND 0.07
+      AND l_quantity < 24.0
+    """,
     oracle=f"""
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
                     * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue
@@ -108,27 +112,28 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_quantity < 24.0
     """,
 )
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: pure scan-filter-aggregate, the pushdown litmus test.
-
-    All three predicates reach the parquet reader (PushedFilters), so
-    at scale this reads only the row groups whose min/max stats
-    overlap 1997 — a date-partitioned layout prunes whole files.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01"))
-            & F.col("l_discount").between(0.03, 0.07)
-            & (F.col("l_quantity") < 24.0)
-        )
-        .agg(limb_sum(cents("l_extendedprice") * cents("l_discount"), 4).alias("revenue"))
-    )
 
 
-@register(
+_sql_query(
     "q7_volume_shipping",
+    f"""
+    WITH s AS (SELECT s_suppkey, n_name AS supp_nation
+               FROM supplier JOIN nation ON s_nationkey = n_nationkey),
+         c AS (SELECT c_custkey, n_name AS cust_nation
+               FROM customer JOIN nation ON c_nationkey = n_nationkey)
+    SELECT /*+ BROADCAST(s, c) */
+           supp_nation, cust_nation,
+           CAST(year(l_shipdate) AS INT) AS l_year,
+           {_REV_SUM} AS revenue
+    FROM lineitem li
+    JOIN s ON li.l_suppkey = s.s_suppkey
+    JOIN orders o ON li.l_orderkey = o.o_orderkey
+    JOIN c ON o.o_custkey = c.c_custkey
+    WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
+      AND ((supp_nation = 'NATION_1' AND cust_nation = 'NATION_2')
+        OR (supp_nation = 'NATION_2' AND cust_nation = 'NATION_1'))
+    GROUP BY supp_nation, cust_nation, l_year
+    """,
     oracle=f"""
     SELECT supp_nation, cust_nation, l_year,
            CAST(SUM(volume) AS DOUBLE) AS revenue
@@ -147,43 +152,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY supp_nation, cust_nation, l_year
     """,
 )
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7: two independent dimension chains onto one fact row.
-
-    supplier→nation and orders→customer→nation are both broadcast;
-    lineitem is shuffled exactly once (for the orders join). The
-    nation-pair disjunction is applied after both broadcasts — it's a
-    cheap residual on an already-tiny row set.
-    """
-    li = table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate").between(F.lit("1996-01-01"), F.lit("1997-12-31"))
-    )
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    n = table(spark, sf_dir, "nation")
-    s = (
-        table(spark, sf_dir, "supplier")
-        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    c = (
-        table(spark, sf_dir, "customer")
-        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    joined = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .filter(
-            ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-        )
-    )
-    return (
-        joined.withColumn("l_year", F.year("l_shipdate").cast("int"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(rev_sum().alias("revenue"))
-    )
 
 
 @register(
@@ -250,8 +218,28 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Q9 adapted: supply cost is 0.10 * p_retailprice (testdata has no
+# partsupp). Both terms of the amount are non-negative, so each sums
+# through an exact e6-scaled limb total and the DIFFERENCE is taken in
+# DECIMAL before the single double cast — bit-equal to summing the
+# signed decimal amount.
+_sql_query(
     "q9_profit_by_nation",
+    f"""
+    WITH p AS (SELECT p_partkey, p_retailprice FROM part WHERE p_name LIKE '%gear%'),
+         s AS (SELECT s_suppkey, n_name AS nation
+               FROM supplier JOIN nation ON s_nationkey = n_nationkey)
+    SELECT /*+ BROADCAST(p, s), SHUFFLE_HASH(o) */
+           nation, CAST(year(o_orderdate) AS INT) AS o_year,
+           (CAST(({_limb_total(f"({_REV_E4}) * 100")}
+                  - {_limb_total(f"{_cents('p_retailprice')} * 10 * {_cents('l_quantity')}")})
+                 AS DOUBLE) / 1000000.0) AS sum_profit
+    FROM lineitem li
+    JOIN p ON li.l_partkey = p.p_partkey
+    JOIN s ON li.l_suppkey = s.s_suppkey
+    JOIN orders o ON li.l_orderkey = o.o_orderkey
+    GROUP BY nation, o_year
+    """,
     oracle=f"""
     SELECT nation, o_year, CAST(SUM(amount) AS DOUBLE) AS sum_profit
     FROM (
@@ -268,43 +256,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY nation, o_year
     """,
 )
-def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit per supplier-nation per year.
-
-    Adapted: supply cost is ``0.10 * p_retailprice`` (testdata has no
-    partsupp/ps_supplycost); the part filter is ``p_name LIKE
-    '%gear%'`` as in spec. Part & supplier broadcast; the LIKE is
-    applied to the 2k-row part table before broadcasting, not to the
-    fact side.
-    """
-    p = (
-        table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%gear%"))
-        .select("p_partkey", "p_retailprice")
-    )
-    n = table(spark, sf_dir, "nation")
-    s = (
-        table(spark, sf_dir, "supplier")
-        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("nation"))
-    )
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = table(spark, sf_dir, "lineitem")
-    # amount = rev - retail*0.10*qty; both terms are non-negative, so
-    # sum each through an exact limb total (e6-scaled) and take the
-    # DIFFERENCE in DECIMAL before the single double cast — bit-equal
-    # to summing the signed decimal amount.
-    rev_e6 = rev_e4() * 100
-    cost_e6 = cents("p_retailprice") * 10 * cents("l_quantity")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .withColumn("o_year", F.year("o_orderdate").cast("int"))
-        .groupBy("nation", "o_year")
-        .agg(((limb_total(rev_e6) - limb_total(cost_e6)) / 1000000)
-             .cast("double").alias("sum_profit"))
-    )
 
 
 @register(
@@ -429,8 +380,22 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+_sql_query(
     "q18_large_volume_customer",
+    f"""
+    WITH oq AS (SELECT l_orderkey, SUM({_cents('l_quantity')}) AS qty_cents
+                FROM lineitem
+                GROUP BY l_orderkey
+                HAVING SUM({_cents('l_quantity')}) > 27000)
+    SELECT /*+ BROADCAST(c), SHUFFLE_HASH(o) */
+           c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+           CAST(CAST(qty_cents AS DECIMAL(38,0)) / 100 AS DOUBLE) AS sum_qty
+    FROM oq
+    JOIN orders o   ON oq.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 100
+    """,
     oracle="""
     SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
            CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
@@ -446,36 +411,36 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 100
     """,
 )
-def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18: HAVING-filtered groupBy fed back as an IN semi-join.
-
-    The heavy groupBy(l_orderkey) happens once; its (rare) survivors
-    semi-join the fact, so the second aggregation runs on a sliver.
-    Top-100 has a deterministic tiebreak on o_orderkey.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(money("l_quantity")).alias("q"))
-        .filter(F.col("q") > 270)
-        .select("l_orderkey")
-        .withColumnRenamed("l_orderkey", "big_orderkey")
-    )
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        li.join(F.broadcast(big), li.l_orderkey == big.big_orderkey, "left_semi")
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(dsum("l_quantity").alias("sum_qty"))
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(100)
-    )
+# q18 scale note: the per-orderkey quantity sums are computed ONCE and
+# reused for BOTH the HAVING gate and the output column — the previous
+# form (semi-join against a HAVING subplan, then re-aggregate) scanned
+# and shuffled lineitem twice. SHUFFLE_HASH(o): orders is a FACT table
+# — at sizes just under the broadcast threshold Spark's static planner
+# would broadcast 1.2M+ rows (measured +35% at the 8x scaling probe,
+# SCALE.md round 6); the hash join shuffles only orders, since oq
+# already carries hash partitioning on l_orderkey from its GROUP BY.
+# Same reasoning on q9's orders join (measured -10% at 8x).
 
 
-@register(
+# Q19: an equi-join on partkey with the OR-of-ANDs as a residual
+# filter keeps the broadcast-hash join (folding the OR into the join
+# condition would force a nested loop); the derivable prefilters
+# (p_size <= 35, l_quantity <= 30) reach both scans.
+_sql_query(
     "q19_disc_revenue_or",
+    f"""
+    SELECT /*+ BROADCAST(p) */ {_REV_SUM} AS revenue
+    FROM lineitem li
+    JOIN part p ON li.l_partkey = p.p_partkey
+    WHERE l_quantity BETWEEN 1 AND 30
+      AND p_size BETWEEN 1 AND 35
+      AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+            AND l_quantity BETWEEN 1 AND 11)
+        OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+            AND l_quantity BETWEEN 10 AND 20)
+        OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
+            AND l_quantity BETWEEN 20 AND 30))
+    """,
     oracle=f"""
     SELECT CAST(SUM({_REV_SQL}) AS DOUBLE) AS revenue
     FROM lineitem, part
@@ -488,32 +453,6 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
             AND l_quantity BETWEEN 20 AND 30))
     """,
 )
-def q19_disc_revenue_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19: OR-of-ANDs mixing columns from both join sides.
-
-    Expressed as a plain equi-join on partkey with the disjunction as
-    a residual filter — Catalyst keeps the broadcast-hash join and
-    evaluates the OR post-probe. (Folding the OR into the join
-    condition would force a nested-loop.) The derivable prefilters
-    (p_size <= 35, l_quantity <= 30) are pushed to both scans.
-    """
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity").between(1, 30))
-    p = (
-        table(spark, sf_dir, "part")
-        .filter(F.col("p_size").between(1, 35))
-        .select("p_partkey", "p_brand", "p_size")
-    )
-    q = F.col("l_quantity")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15) & q.between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 25) & q.between(10, 20))
-        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 35) & q.between(20, 30))
-    )
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(rev_sum().alias("revenue"))
-    )
 
 
 @register(

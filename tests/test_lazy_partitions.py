@@ -170,7 +170,9 @@ def test_staging_directory_never_counts(spark, conn):
     # a crash after writing an epoch's staging directory, before its
     # rename: a complete file under the dot-name
     loc = eng._relation(cl)["loc"]
-    staged = max(eps) + 100
+    # a restart resumes above the newest epoch of EVERY changelog in the
+    # session (_restore_catalog), not only this one: stage above that
+    staged = SparkEngine(spark=spark, default_schema=s).current_epoch + 100
     stage = os.path.join(loc, f".rw_timestamp={staged}")
     os.mkdir(stage)
     src = glob.glob(os.path.join(loc, f"rw_timestamp={eps[0]}", "*.parquet"))[0]

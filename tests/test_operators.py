@@ -31,13 +31,11 @@ def test_every_registered_callable_takes_spark_and_sf_dir():
     """A misplaced @register decorator (e.g. landing on a helper when
     code is inserted between decorator and def) registers a callable
     with the wrong arity; the driver then crashes with TypeError.
-    Guard the whole registry by signature, without the sqlfast
-    overrides masking a bad earlier registration."""
+    Guard the whole registry by signature, re-registering every
+    module's queries into a fresh registry."""
     import inspect
     import importlib
 
-    # Fresh registry with ONLY the non-sqlfast modules: overrides in
-    # sqlfast must not be what makes a name callable.
     saved_q, saved_o = dict(registry.QUERIES), dict(registry.ORACLES)
     try:
         registry.QUERIES.clear()

@@ -299,12 +299,12 @@ def test_simhash_rung_returns_global_top20(spark, sf_dir):
     global top-20 of the FULL unpruned distinct pair relation (the
     pre-r12 checkpoint-all form, rebuilt independently here)."""
     from risingwave_py_spark.catalog import ensure_views
-    from risingwave_py_spark.operators import sqlfast
+    from risingwave_py_spark.functions import dedup
 
     ensure_views(spark, sf_dir)
     got = registry.QUERIES["dedup_simhash"](spark, sf_dir).toPandas()
     assert len(got) <= 20
-    spark.sql(sqlfast._SH_FP_SQL).createOrReplaceTempView("__t_sh_fp")
+    spark.sql(dedup._SH_FP_SQL).createOrReplaceTempView("__t_sh_fp")
     try:
         full = (
             spark.sql(_sh_full_rung_sql(4, "__t_sh_fp"))
@@ -329,13 +329,13 @@ def test_simhash_rung_no_full_pair_shuffle(spark, sf_dir):
     hash-aggregated every candidate pair (O(near-dup pairs) state at
     corpus scale) before the top-20 cut."""
     from risingwave_py_spark.catalog import ensure_views
-    from risingwave_py_spark.operators import sqlfast
+    from risingwave_py_spark.functions import dedup
 
     ensure_views(spark, sf_dir)
-    spark.sql(sqlfast._SH_FP_SQL).createOrReplaceTempView("__t_sh_fp2")
+    spark.sql(dedup._SH_FP_SQL).createOrReplaceTempView("__t_sh_fp2")
     try:
         df = spark.sql(
-            sqlfast._SH_RUNGS[4].replace("__sqlfast_sh_fp", "__t_sh_fp2")
+            dedup._SH_RUNGS[4].replace("__sqlfast_sh_fp", "__t_sh_fp2")
         )
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -395,17 +395,23 @@ def test_profile_is_single_scan(spark, sf_dir):
 
 
 def test_no_forced_broadcast_of_fact_derived_relations():
-    """Broadcast hints in the SQL fast-path module may only name true
-    dimension tables (bounded size at any SF) — never a CTE derived
-    from a fact table (e.g. q18's `big` orderkey set grows linearly
-    with SF; a hint would force an O(100M-key) broadcast past AQE's
-    size check at 100 TB). AQE decides for those at runtime."""
+    """Broadcast hints in the modules that hold SQL-text queries may
+    only name true dimension tables (bounded size at any SF) — never a
+    CTE derived from a fact table (e.g. q18's `big` orderkey set grows
+    linearly with SF; a hint would force an O(100M-key) broadcast past
+    AQE's size check at 100 TB). AQE decides for those at runtime."""
     import inspect
     import re
 
-    from risingwave_py_spark.operators import sqlfast
+    from risingwave_py_spark.functions import dedup, vectors
+    from risingwave_py_spark.operators import (
+        analytic, relational, time_windows, tpch_extra,
+    )
 
-    src = inspect.getsource(sqlfast)
+    src = "".join(
+        inspect.getsource(m)
+        for m in (relational, tpch_extra, analytic, time_windows, dedup, vectors)
+    )
     facts = re.compile(r"\b(lineitem|orders|events|documents|embeddings)\b")
     # Constant-bounded relations (IVF centroids = O(cells) rows, probe
     # assignments = O(queries × nprobe)) are broadcastable at any SF
@@ -413,7 +419,7 @@ def test_no_forced_broadcast_of_fact_derived_relations():
     bounded = {"cents", "p"}
     for stmt in re.findall(r'"""(.*?)"""', src, re.S):
         # name -> CTE body (balanced-paren capture is overkill here:
-        # bodies in this module never nest parens before FROM <fact>)
+        # bodies in these modules never nest parens before FROM <fact>)
         ctes = dict(re.findall(r"(\w+)\s+AS\s*\(([^)]*)", stmt, re.I))
         for hint in re.findall(r"/\*\+\s*BROADCAST\(([^)]*)\)\s*\*/", stmt):
             for rel in (h.strip() for h in hint.split(",")):
